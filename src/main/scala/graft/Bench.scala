@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+  * {"metric":"total","value":N,"unit":"sec","queries":294,"failed":K,"sf":...}.
+  * A query that throws is reported (name + exception, to stderr and to
+  * BENCH_FULL.json) and never timed: `total` sums passing queries only.
   *
   * A warmup pass (count each base table + one tiny query) runs first so
   * per-query numbers measure the operators, not JVM/codegen/FS-init
@@ -28,18 +30,12 @@ object Bench {
   private def loadAvg(): Double =
     try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
       .split(" ")(0).toDouble
-    catch { case scala.util.control.NonFatal(_) => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: touch every base table and exercise codegen once
@@ -58,63 +54,64 @@ object Bench {
     // optional trailing args: bench only the named queries (per-op
     // perf iteration); no args = the full registered surface
     val ordered = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
+      val all = SparkEntry.queries.keys.toSeq.sorted
       if (args.isEmpty) all
       else {
         // fail loudly on a typo'd name: a silently-empty filter would
         // print total 0 and read as a perf win
-        val unknown = args.filterNot(all.map(_._1).toSet)
+        val unknown = args.filterNot(all.toSet)
         require(unknown.isEmpty,
           s"unknown queries: ${unknown.mkString(", ")}")
-        all.filter(q => args.contains(q._1))
+        all.filter(args.contains)
       }
     }
     val loadStart = loadAvg()
-    val repTimes: Seq[Seq[(String, Double)]] = (1 to reps).map { _ =>
-      ordered.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // intra-query caches (LSH signatures, shingle sets) must not
-        // leak memory pressure into the next query's measurement
-        spark.catalog.clearCache()
-        name -> dt
+    // one rep of one query: its seconds, or the exception it threw
+    // (StackOverflowError too: a deep plan must fail its query, not the
+    // whole bench)
+    def timeOnce(name: String): Either[Throwable, Double] = {
+      val t0 = System.nanoTime()
+      val r = try {
+        SparkEntry.queries(name)(spark, sfDir).count()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e @ (NonFatal(_) | _: StackOverflowError) =>
+        System.err.println(s"[bench] $name failed: $e")
+        Left(e)
       }
+      // intra-query caches (LSH signatures, shingle sets) must not
+      // leak memory pressure into the next query's measurement
+      spark.catalog.clearCache()
+      r
     }
-    val byName = ordered.map { case (name, _) =>
-      name -> repTimes.map(_.toMap.apply(name))
+    val repTimes: Seq[Map[String, Either[Throwable, Double]]] = (1 to reps).map { _ =>
+      ordered.map(name => name -> timeOnce(name)).toMap
     }
+    // a query that failed in ANY rep is a failure: its other reps'
+    // times are not a measurement of the query
+    val (passed, failed) = ordered.partition(n => repTimes.forall(_(n).isRight))
+    val byName = passed.map(n => n -> repTimes.map(_(n).toOption.get))
+    val failures = failed.map(n => n -> repTimes.flatMap(_(n).left.toOption).head)
     val results = byName.map { case (name, ts) => name -> ts.min }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val allReps = byName.map { case (k, ts) => "\"" + k + "\":" + ts.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val fails = failures.map { case (k, e) => Verify.jsonStr(k) + ":" + Verify.jsonStr(e.toString) }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
     val loadEnd = loadAvg()
     // max run-to-run spread ratio across queries (slowest rep / fastest
     // rep): > ~3 on an unchanged query is the contention signature
     val spread = byName.map { case (_, ts) =>
       if (ts.min > 0) ts.max / ts.min else 1.0
     }.foldLeft(1.0)(math.max)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$allReps,"load":{"start":$loadStart,"end":$loadEnd,"max_spread":$spread},"sf":"$sfDir"}"""
-    // Stdout line: contract fields only (metric/value/unit/queries/sf),
-    // per-query MINs at millisecond precision, no reps/load. The full
-    // ~22 KB line (reps arrays, load, spread) exceeded the driver's
-    // stdout-capture window every round since r1 ("parsed": null in
-    // every BENCH_rXX.json), so the comparator never saw per-query
-    // ground truth. Same measurement, same methodology, same fields the
-    // contract names — only the diagnostic extras move to the persisted
-    // BENCH_FULL.json, which keeps the complete full-precision line.
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qsShort = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val stdoutLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir"}"""
-    // The stdout capture path has truncated the HEAD of this line in
-    // past rounds (round-3 verdict #3: alphabetical order meant the
-    // dropped entries were exactly the ops that changed). Persist the
-    // full line to a file so the complete per-query numbers always
-    // survive, independent of how stdout is captured.
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,"reps":$allReps,"load":{"start":$loadStart,"end":$loadEnd,"max_spread":$spread},"sf":"$sfDir"}"""
+    // Stdout line: totals only, at most 200 chars — the 294 query names
+    // alone are 4.6 KB, more than a stdout capture window holds. The
+    // per-query numbers, reps, load and failures go to the file below.
+    val stdoutLine = "{\"metric\":\"total\",\"value\":" +
+      "%.3f".formatLocal(java.util.Locale.ROOT, total) +
+      s""","unit":"sec","queries":${ordered.size},"failed":${failures.size},"sf":"$sfDir"}"""
     // A name-filtered run is a per-op iteration probe, not the
     // canonical surface — persisting it would silently replace the
     // committed full-run numbers with a partial set.
@@ -126,7 +123,7 @@ object Bench {
         // NonFatal only: a fatal VM error must not be swallowed, and a
         // failed write needs a signal — otherwise the persisted numbers
         // go stale silently, defeating the fallback's purpose.
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           System.err.println(s"graft: failed to persist bench line to $o: $e")
       }
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: print the formatted physical plan of registered queries
   * (all, or the names passed as args after the sfDir). Used to check
   * the 100 TB posture: filters pushed to parquet (PushedFilters),
@@ -11,12 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else OpRegistry.ops.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[4]", 4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val qs = OpRegistry.queries
     names.foreach { n =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** User-facing entry point: one call gives a session configured the way
   * the engine expects (UTC, AQE, right-sized shuffle partitions, native
@@ -10,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   *   val spark = Graft.session()
   *   Graft.registerTables(spark, "/root/testdata/sf0.01")
   *   spark.sql("SELECT simhash(split(text,' ')) FROM documents")
+  *
+  * [[session]] is the one session builder of every graft main and of
+  * the tests.
   */
 object Graft {
 
@@ -34,13 +38,16 @@ object Graft {
   }
 
   /** Register every corpus table in `dir` as a temp view (events gets
-    * its ns→µs timestamp normalization). */
+    * its ns→µs timestamp normalization). A table this sf dir lacks is
+    * skipped, and the skip is logged with its exception. */
   def registerTables(spark: SparkSession, dir: String): Unit =
     TableNames.foreach { t =>
       try {
         val df = if (t == "events") Tables.events(spark, dir)
                  else Tables.table(spark, dir, t)
         df.createOrReplaceTempView(t)
-      } catch { case _: Throwable => () } // missing table in this sf dir
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[graft] registerTables: skipped $t: $e")
+      }
     }
 }

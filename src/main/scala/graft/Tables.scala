@@ -14,40 +14,6 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Round-robin spread for a HEAVY map-side kernel (per-token md5,
-    * shingle hashing, per-word DP) placed before the first exchange.
-    *
-    * The test corpus ships each table as ONE single-row-group parquet
-    * file, so its scan is one task and a compute-bound kernel fused
-    * into the scan stage runs on one core of the whole cluster. When
-    * the table's byte footprint cannot fill the cluster parallelism at
-    * the normal split size (bytes / maxPartitionBytes < parallelism),
-    * repartition the kernel's input to parallelism first: the
-    * shuffled bytes are < parallelism · maxPartitionBytes BY THE GATE,
-    * so the added exchange is bounded and cheap next to the kernel it
-    * parallelizes. At production scale the scan itself yields ≥
-    * parallelism splits, the gate is false, and this is the IDENTITY —
-    * no shuffle is added at 100 TB (guide §2.2: derive partitioning
-    * from input size; never tune a constant for local mode). */
-  def spreadKernel(s: SparkSession, d: String, name: String)(
-      df: DataFrame): DataFrame = {
-    // Hadoop FS content summary, not java.io.File: on object storage
-    // (s3://, hdfs://) a local-File probe stats nothing, reads 0 bytes,
-    // and would take the repartition branch — a full extra shuffle of
-    // a 100 TB corpus. getContentSummary is scheme-agnostic and
-    // recursive (nested layouts sum correctly). On any failure fall
-    // back to "huge", i.e. the at-scale identity: never add a shuffle
-    // because the probe failed.
-    val bytes = try {
-      val p = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val par = s.sparkContext.defaultParallelism
-    if (bytes / math.max(1L, maxSplit) < par) df.repartition(par) else df
-  }
-
   /** The eager-materialization idiom for ops whose RESULT is tiny by
     * construction but whose plan pins caches (the simAnnIvfIndex
     * pattern): collect the rows, release every cache, and hand back a

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop micro-bench: time named registered queries in one warm
   * session, printing per-rep seconds. Bench.scala is the canonical
   * all-query round bench; this is the iterate-on-one-operator tool
-  * (`runMain graft.TimeQ <sfDir> <reps> <query> [query ...]`). */
+  * (`runMain graft.TimeQ <sfDir> <reps> <query> [query ...]`).
+  * Conf experiments go in as JVM `-Dspark.<key>=<value>` properties,
+  * which SparkConf reads (except the keys [[Graft.session]] sets). */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -13,24 +13,8 @@ object TimeQ {
     val names = args.drop(2).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-loop conf experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    // tolerate blank segments (trailing ';') and warn on k-only ones
-    // instead of crashing the dev loop with a MatchError (r19 advice)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v)
-        case _ => if (kv.trim.nonEmpty)
-          System.err.println(s"[timeq] ignoring malformed conf segment: $kv")
-      }
-    })
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus, "graft-timeq")
     spark.sparkContext.setLogLevel("WARN")
     // warmup: one base-table scan + the cheapest query, so rep 1
     // doesn't pay session/codegen init

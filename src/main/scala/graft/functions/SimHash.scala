@@ -106,7 +106,7 @@ object GraftFunctions {
 /** SparkSessionExtensions entry point: lets a deployment inject graft's
   * native functions at session build time —
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   builder.withExtensions(new GraftExtensions)
   *   // or spark.sql.extensions=graft.functions.GraftExtensions
   *
   * so `simhash` / `cosine_sim` are available in plain SQL on every

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import graft.Tables._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1521,17 +1522,10 @@ object CurationOps {
     import s.implicits._
     // spread before the per-token md5 embed kernel (the family's
     // hottest map-side compute): batch callers pass 1-partition
-    // single-file scans that would run it serially. Gated on partition
-    // count (identity at production scale — the bandsAndSets move) and
-    // skipped for STREAMING frames, whose plans cannot be inspected
-    // via .rdd; per-micro-batch frames inside foreachBatch are batch
-    // frames and do take the gate.
-    val parts = s.sparkContext.defaultParallelism
-    val spread =
-      if (!docs.isStreaming && docs.rdd.getNumPartitions < parts)
-        docs.repartition(parts)
-      else docs
-    spread
+    // single-file scans that would run it serially (identity at
+    // production scale and for streaming frames; per-micro-batch
+    // frames inside foreachBatch are batch frames and do take it)
+    Sizing.spread(docs)
       .filter($"text".isNotNull) // family-wide NULL-text guard
       .select($"doc_id", split($"text", " ").as("ws"))
       .select($"doc_id", $"ws",
@@ -3134,7 +3128,7 @@ object CurationOps {
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = s.conf.get(partsKey)
     s.conf.set(partsKey,
-      EventOps.streamParts(s, d, table = "documents").toString)
+      Sizing.tableParts(s, d, "documents").toString)
     val q = graft.Tables.streamTable(s, d, "documents").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         nbScoreOf(nbFeatsOf(batch).select(col("doc_id"), col("t")),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -112,7 +113,7 @@ object EventOps {
       .groupBy($"user_id", session_window($"ts", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
     val t = runToTable(s, agg, "graft_sw_" + math.abs(d.hashCode), "complete",
-      streamParts(s, d))
+      Sizing.tableParts(s, d, "events"))
     t.select($"user_id", $"w.start".as("sess_start"), $"n_events")
       .orderBy($"user_id", $"sess_start")
   }
@@ -133,7 +134,7 @@ object EventOps {
       .select($"event_id", $"user_id", $"event_type", $"value")
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, streamParts(s, d).toString)
+    s.conf.set(key, Sizing.tableParts(s, d, "events").toString)
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -166,31 +167,6 @@ object EventOps {
       .transform(graft.Tables.normalizeTs)
   }
 
-  /** Stateful streaming operators create one state store per shuffle
-    * partition PER stateful operator, and every micro-batch pays
-    * task + snapshot overhead for each — so partition count must track
-    * input volume, not default to the batch setting. Capped at cluster
-    * parallelism: a 100 TB stream still fans out fully, while the test
-    * corpus collapses to a few stores instead of 32 mostly-empty ones.
-    *
-    * `bytesPerPart` is operator-dependent: windowed aggregation /
-    * dedup state is per-KEY (small) → store overhead dominates, use
-    * large partitions (32 MB). A stream-stream join keeps and probes
-    * state per ROW on both sides → CPU dominates, so partitions must
-    * be much smaller (measured on 100k rows: 1 part 7.0s, 8 parts
-    * 3.3s, 32 parts 9.3s — sized here to land near the measured
-    * optimum at any scale). */
-  private[operators] def streamParts(s: SparkSession, d: String,
-      bytesPerPart: Long = 32L << 20, table: String = "events"): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      val f = new java.io.File(s"$d/$table.parquet")
-      val bytes =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(_.length).sum).getOrElse(0L)
-      math.max(1, math.min(
-        s.sparkContext.defaultParallelism, (bytes / bytesPerPart).toInt))
-    }
-
   /** The shuffle-partition conf is captured when the query STARTS, so
     * set it just for the start call and restore afterwards — batch
     * queries in the same session keep their own sizing. */
@@ -218,7 +194,8 @@ object EventOps {
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 4))).cast("double").as("sum_value"))
-    val t = runToTable(s, joined, "graft_enrich_" + math.abs(d.hashCode), "complete", streamParts(s, d))
+    val t = runToTable(s, joined, "graft_enrich_" + math.abs(d.hashCode), "complete",
+      Sizing.tableParts(s, d, "events"))
     t.orderBy($"c_mktsegment")
   }
   val evStreamEnrichSql: String =
@@ -243,8 +220,12 @@ object EventOps {
       $"ua" === $"ub" && $"ea" < $"eb" &&
         $"tsb" >= $"tsa" && $"tsb" <= $"tsa" + expr("INTERVAL 10 MINUTES"))
       .select($"ua".as("user_id"), $"ea", $"eb")
+    // join state is per ROW on both sides, so CPU dominates and the
+    // partitions are far smaller than keyed state's (measured on 100k
+    // rows: 1 part 7.0s, 8 parts 3.3s, 32 parts 9.3s — 256 KB lands
+    // near that optimum at any scale)
     val t = runToTable(s, joined, "graft_ssj_" + math.abs(d.hashCode), "append",
-      streamParts(s, d, bytesPerPart = 256L << 10))
+      Sizing.tableParts(s, d, "events", bytesPerPart = 256L << 10))
     t.orderBy($"user_id", $"ea", $"eb")
   }
   val evStreamStreamJoinSql: String =
@@ -266,7 +247,8 @@ object EventOps {
       .withWatermark("hour", "2 hours")
       .dropDuplicates("user_id", "hour")
       .select($"user_id", $"hour")
-    val t = runToTable(s, dedup, "graft_dedup_" + math.abs(d.hashCode), "append", streamParts(s, d))
+    val t = runToTable(s, dedup, "graft_dedup_" + math.abs(d.hashCode), "append",
+      Sizing.tableParts(s, d, "events"))
     t.orderBy($"user_id", $"hour")
   }
   val evStreamDedupSql: String =
@@ -307,7 +289,7 @@ object EventOps {
     val sessionized = evs.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "n_sessions", "n_events")
-    runToTable(s, sessionized, name, "update", streamParts(s, d))
+    runToTable(s, sessionized, name, "update", Sizing.tableParts(s, d, "events"))
       .orderBy($"user_id")
   }
 
@@ -324,7 +306,7 @@ object EventOps {
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 4))).cast("double").as("sum_value"))
-    runToTable(s, stream, name, "complete", streamParts(s, d))
+    runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n", $"sum_value")
       .orderBy($"w_start", $"event_type")
   }
@@ -500,7 +482,7 @@ object EventOps {
     // trigger on)
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = s.conf.get(partsKey)
-    s.conf.set(partsKey, streamParts(s, d).toString)
+    s.conf.set(partsKey, Sizing.tableParts(s, d, "events").toString)
     // the open set PING-PONGS between two directories: batch i reads
     // open_(i%2) and overwrites open_((i+1)%2), so no batch ever
     // overwrites the files it is reading — which is the only thing the
@@ -528,7 +510,7 @@ object EventOps {
           val withTo = kept.withColumn("valid_to", lead($"ts", 1).over(w))
             .localCheckpoint(true) // two sinks, one computation
           // closed is append-only and immutable: write it at the plan's
-          // own partitioning (streamParts-sized) — at 100 TB this is a
+          // own partitioning (Sizing.tableParts-sized) — at 100 TB this is a
           // partitioned fact append, and a burst batch closing many
           // users must not serialize through one task (r18 verdict)
           withTo.filter($"valid_to".isNotNull)
@@ -618,7 +600,7 @@ object EventOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "30 minutes", "15 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    runToTable(s, stream, name, "complete", streamParts(s, d))
+    runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n")
       .orderBy($"w_start", $"event_type")
   }
@@ -817,7 +799,7 @@ object EventOps {
           ($"value" === $"thr_value" && $"event_id" <= $"thr_eid")))
       .select($"event_type", $"event_id", $"user_id")
     val t = runToTable(s, flagged, "graft_anom_" + math.abs(d.hashCode),
-      "append", streamParts(s, d))
+      "append", Sizing.tableParts(s, d, "events"))
     t.orderBy($"event_type", $"event_id")
   }
   val evStreamAnomalySql: String =
@@ -971,7 +953,7 @@ object EventOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "15 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    val t = runToTable(s, stream, name, "complete", streamParts(s, d))
+    val t = runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n")
     val w = Window.partitionBy($"w_start").orderBy($"n".desc, $"event_type")
     t.withColumn("rnk", row_number().over(w).cast("long"))

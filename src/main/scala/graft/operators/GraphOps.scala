@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import graft.store.Dict
 import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,8 +37,7 @@ object GraphOps {
     // would execute the dict joins once for the count and again when
     // the RDD materializes
     val nEdges = t.count()
-    val parts = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, (nEdges / 1000000L).toInt))
+    val parts = Sizing.parts(s, "graph edges", nEdges, 1000000L)
     val vRdd = dict.select($"id", $"term").as[(Long, String)].rdd.coalesce(parts)
     val eRdd = edges.select($"sid", $"oid", $"p").as[(Long, Long, String)].rdd
       .map { case (a, b, p) => Edge(a, b, p) }.coalesce(parts)

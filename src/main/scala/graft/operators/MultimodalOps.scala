@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -353,7 +354,7 @@ object MultimodalOps {
         min($"n_bytes").as("n_bytes"))
     val t = EventOps.runToTable(s, admitted,
       "graft_mmingest_" + math.abs(d.hashCode), "complete",
-      EventOps.streamParts(s, d, table = "documents"))
+      Sizing.tableParts(s, d, "documents"))
     t.select($"content_sha", $"keep_id", $"n_copies", $"n_bytes")
       .orderBy($"keep_id")
   }

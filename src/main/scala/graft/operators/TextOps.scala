@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import graft.Tables._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1069,7 +1070,7 @@ object TextOps {
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = s.conf.get(partsKey)
     s.conf.set(partsKey,
-      EventOps.streamParts(s, d, table = "documents").toString)
+      Sizing.tableParts(s, d, "documents").toString)
     val served = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = graft.Tables.streamTable(s, d, "documents").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1825,8 +1826,8 @@ object TextOps {
     import s.implicits._
     // spread before the per-trigram md5 kernel: the single-file scan
     // is 1 partition and would run it serially (identity at scale —
-    // see Tables.spreadKernel)
-    winnowFpsOf(s, graft.Tables.spreadKernel(s, d, "documents")(
+    // see Sizing.spread)
+    winnowFpsOf(s, Sizing.spread(
       documents(s, d).select($"doc_id", split($"text", " ").as("ws"))))
   }
 

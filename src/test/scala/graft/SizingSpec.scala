@@ -1,0 +1,148 @@
+package graft
+
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import scala.jdk.CollectionConverters._
+
+/** The local filesystem under another scheme, so a test can prove a
+  * probe goes through Hadoop rather than the local disk API without
+  * any network. */
+class SizingTestFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("graftsizing:///")
+}
+
+class SizingSpec extends SparkSpec {
+  private val docs = s"$sf0001/documents.parquet"
+  private lazy val docBytes = Files.size(Paths.get(docs))
+  private def par = spark.sparkContext.defaultParallelism
+
+  /** `body`'s result and every stderr line it printed. */
+  private def withStderr[T](body: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    val r = try body finally System.setErr(prev)
+    (r, buf.toString.linesIterator.toSeq)
+  }
+
+  private def repartitioned(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty
+
+  /** Jobs started while `body` runs. The listener bus is asynchronous,
+    * so a fence job is run afterwards and awaited: events arrive in
+    * order, so once the fence is seen every earlier job start is too. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("sizing-body", "sizing-body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("sizing-fence", "sizing-fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("sizing-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("sizing-fence"), "fence job never reached the listener")
+      started.toArray.count(_ == "sizing-body")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a nested-directory table sizes to the sum of its files") {
+    val root = Files.createTempDirectory("graft_sizing")
+    val deep = Files.createDirectories(root.resolve("a/b"))
+    Files.copy(Paths.get(docs), root.resolve("a/part-0.parquet"))
+    Files.copy(Paths.get(docs), deep.resolve("part-1.parquet"))
+    try {
+      assert(Sizing.pathBytes(spark, root.toString) == Right(2 * docBytes))
+      val df = spark.read.option("recursiveFileLookup", "true").parquet(root.toString)
+      assert(Sizing.frameBytes(df) == Right(2 * docBytes))
+    } finally {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toList.reverse.foreach(Files.delete) finally walk.close()
+    }
+  }
+
+  test("a failed probe takes the at-scale answer and logs it") {
+    val (n, log) = withStderr(Sizing.tableParts(spark, "/nonexistent/graft", "documents"))
+    assert(n == par, "a failed probe must never collapse to 1 partition")
+    assert(log.exists(l => l.startsWith("[sizing] parts") &&
+      l.contains("unknown") && l.contains(s"-> $par")), log.mkString("\n"))
+    // a frame with no file leaf: no added shuffle
+    val range = spark.range(10).toDF()
+    val (out, log2) = withStderr(Sizing.spread(range))
+    assert(!repartitioned(out))
+    assert(log2.exists(l => l.startsWith("[sizing] spread") &&
+      l.contains("no file leaf") && l.endsWith("as is")), log2.mkString("\n"))
+  }
+
+  test("a non-file:// scheme sizes exactly like the plain path") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftsizing.impl", classOf[SizingTestFs].getName)
+    val other = s"graftsizing://$sf0001"
+    assert(Sizing.pathBytes(spark, s"$other/documents.parquet") == Right(docBytes))
+    // half the table per partition: 2 partitions on both paths (the
+    // local-disk probe read 0 bytes off this scheme and gave 1)
+    val perPart = docBytes / 2
+    assert(Sizing.tableParts(spark, other, "documents", perPart) == 2)
+    assert(Sizing.tableParts(spark, sf0001, "documents", perPart) == 2)
+    val viaScheme = spark.read.parquet(s"$other/documents.parquet")
+    assert(Sizing.frameBytes(viaScheme) == Right(docBytes))
+    assert(repartitioned(Sizing.spread(viaScheme)) ==
+      repartitioned(Sizing.spread(spark.read.parquet(docs))))
+  }
+
+  test("spread runs no job on an AQE plan that holds an exchange") {
+    val df = spark.read.parquet(docs).groupBy("lang").count()
+    val plan = df.queryExecution.executedPlan
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec])
+    assert(plan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+      .collectFirst { case e: ShuffleExchangeExec => e }.nonEmpty)
+    assert(jobsDuring(Sizing.spread(df)) == 0)
+    // the partition-count gate Sizing replaced runs the upstream stage
+    assert(jobsDuring(df.rdd.getNumPartitions) > 0)
+  }
+
+  test("corpus-sized inputs decide as before: spread repartitions, state and graphs get 1 part") {
+    val out = Sizing.spread(Tables.documents(spark, sf0001))
+    assert(out.queryExecution.analyzed.collectFirst {
+      case r: Repartition => r.numPartitions }.contains(par))
+    assert(Sizing.tableParts(spark, sf0001, "events") == 1)
+    assert(Sizing.tableParts(spark, sf0001, "events", bytesPerPart = 256L << 10) == 1)
+    assert(Sizing.tableParts(spark, sf0001, "documents") == 1)
+    assert(Sizing.parts(spark, "graph edges", 5000L, 1000000L) == 1)
+    assert(Sizing.parts(spark, "graph edges", Long.MaxValue, 1000000L) == par)
+  }
+
+  test("no size probe or env knob outside Sizing in operators, store, query and Tables") {
+    val main = Paths.get("src/main/scala/graft")
+    val files = Seq("operators", "store", "query").flatMap { sub =>
+      val walk = Files.walk(main.resolve(sub))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    } :+ main.resolve("Tables.scala")
+    assert(files.size > 10, s"source tree not found from ${Paths.get("").toAbsolutePath}")
+    val banned = Seq(
+      "java.io.File" -> """\bjava\.io\.File\b""".r,
+      ".rdd.getNumPartitions" -> """\.rdd\.getNumPartitions""".r,
+      "getContentSummary" -> """getContentSummary""".r,
+      "sys.env" -> """\bsys\.env\b""".r)
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      (name, re) <- banned if re.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: $name"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}
