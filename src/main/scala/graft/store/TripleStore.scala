@@ -1,7 +1,10 @@
 package graft.store
 
+import scala.collection.immutable.VectorMap
+
 import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +19,11 @@ import org.apache.spark.sql.functions._
   *    encoding replaces bit-level compression, partition pruning on
   *    p_id replaces slice selection;
   *  - in-place insert/remove with tombstone id recycling
-  *    (graph.rs:414-629) → union/except snapshots; all dictionary GC
-  *    bookkeeping disappears because dictionaries are derived;
+  *    (graph.rs:414-629) → a fixed base Dataset plus a driver-side
+  *    delta (`inserted` / `removed` sets), composed into ONE broadcast
+  *    anti-join + union however many mutations ran — the read store +
+  *    small write store split of C-Store (VLDB 2005); all dictionary
+  *    GC bookkeeping disappears because dictionaries are derived;
   *  - the 8 access paths (graph.rs:842-1009) → one Catalyst filter.
   *
   * At 100 TB: triples live partitioned by predicate (the classic
@@ -27,32 +33,59 @@ import org.apache.spark.sql.functions._
   */
 final class TripleStore private (
     val spark: SparkSession,
-    triples0: Dataset[Triple],
-    /** Mutations since the last lineage cut — see [[derive]]. */
+    base0: Dataset[Triple],
+    inserted0: TripleStore.Delta = TripleStore.NoDelta,
+    removed0: TripleStore.Delta = TripleStore.NoDelta,
+    /** Data-derived stores since the last lineage cut — see [[derive]]. */
     mutationDepth: Int = 0) {
 
-  /** Replaced only by [[persist]] when re-persisting over this store's
-    * own source directory (the checkpointed plan survives the
-    * overwrite); otherwise the construction-time dataset. */
-  @volatile private var _triples: Dataset[Triple] = triples0
-
-  def triples: Dataset[Triple] = _triples
-
   import spark.implicits._
+  import TripleStore.{Delta, Layers, NoDelta}
+
+  /** Replaced only by [[persist]] when re-persisting over this store's
+    * own source directory: the checkpointed composition becomes the new
+    * base (it survives the overwrite) and the delta is cleared. */
+  @volatile private var layers: Layers = compose(base0, inserted0, removed0)
+
+  def triples: Dataset[Triple] = layers.triples
+
+  /** Builds the store's one Dataset: the base minus every triple the
+    * delta touches (broadcast null-safe left-anti join — the delta is
+    * driver-sized, and `<=>` matches the null lang / datatype of IRIs),
+    * plus the inserted triples. Built once per store, so its plan depth
+    * is constant however many mutations ran. Pinned in ScaleSpec. */
+  private def compose(base: Dataset[Triple], ins: Delta, rem: Delta): Layers =
+    Layers(base, ins, rem, if (ins.isEmpty && rem.isEmpty) base else {
+      val b = base.toDF()
+      val touched = (ins.keys ++ rem.keys).toSeq.toDS().toDF()
+      val kept = b.join(broadcast(touched),
+        b("s") <=> touched("s") && b("p") <=> touched("p") && b("o") <=> touched("o"),
+        "left_anti")
+      (if (ins.isEmpty) kept else kept.unionByName(ins.keys.toSeq.toDS().toDF())).as[Triple]
+    })
 
   def count(): Long = triples.count()
 
-  /** Derived store after a mutation, carrying the persist location
-    * forward: the reference graph mutates in place so its remembered
-    * location survives mutation (graph.rs:641-656) — our immutable
-    * derivations must copy it for no-arg persist() parity.
+  /** A store with this one's base and a new delta. Insert/remove never
+    * deepen the plan, so they do not count toward the lineage cut. */
+  private def withDelta(base: Dataset[Triple], ins: Delta, rem: Delta): TripleStore = {
+    val st = new TripleStore(spark, base, ins, rem, mutationDepth)
+    st.persistedTo = persistedTo
+    st
+  }
+
+  /** Store derived from this one's DATA (remove-pattern, delete where,
+    * insert where): `ds` is built over [[triples]] and becomes the new
+    * base, with an empty delta. The persist location carries forward:
+    * the reference graph mutates in place so its remembered location
+    * survives mutation (graph.rs:641-656) — our immutable derivations
+    * must copy it for no-arg persist() parity.
     *
-    * The reference's documented usage is `insert_triple` in a LOOP
-    * (graph.rs:414-509 call sites); each mutation here stacks an
-    * anti-join/union plan layer, so long chains grow analysis cost
-    * quadratically. With `spark.graft.lineageCutEvery = N` (>0), every
-    * Nth derivation cuts lineage with a lazy localCheckpoint — default
-    * OFF for the same durability/materialization trade documented on
+    * Each such derivation stacks its own plan layer, so long chains of
+    * them grow analysis cost. With `spark.graft.lineageCutEvery = N`
+    * (>0), every Nth derivation cuts lineage with a lazy
+    * localCheckpoint — default OFF for the same
+    * durability/materialization trade documented on
     * [[QuadStore.update]]: production-scale loops should persist() to
     * durable parquet periodically instead. */
   private def derive(ds: Dataset[Triple]): TripleStore = {
@@ -60,8 +93,8 @@ final class TripleStore private (
     val cut = every > 0 && mutationDepth + 1 >= every
     val st = new TripleStore(spark,
       if (cut) ds.localCheckpoint(false) else ds,
-      if (cut) 0 else mutationDepth + 1)
-    persistedTo.foreach(st.rememberLocation)
+      mutationDepth = if (cut) 0 else mutationDepth + 1)
+    st.persistedTo = persistedTo
     st
   }
 
@@ -69,19 +102,16 @@ final class TripleStore private (
     * Set semantics: re-inserting an existing triple is a no-op. */
   def insertTriple(t: Triple): TripleStore = insertTriples(Seq(t))
 
-  /** Set-union with a driver-side list WITHOUT a global distinct: drop
-    * the incoming rows from the store with a broadcast anti-join (the
-    * list is driver-sized), then append the deduplicated list. A
-    * `union.distinct()` would shuffle EVERY stored triple to insert a
-    * handful — this shape touches the store with one broadcast probe,
-    * which is what survives 100 TB. Plan pinned in ScaleSpec. */
+  /** Set-union with a driver-side list WITHOUT a global distinct: the
+    * triples join the delta's `inserted` set (and leave `removed`), and
+    * the composed Dataset drops them from the base with the broadcast
+    * anti-join before appending them once. A `union.distinct()` would
+    * shuffle EVERY stored triple to insert a handful — this shape
+    * touches the store with one broadcast probe, which is what survives
+    * 100 TB. */
   def insertTriples(ts: Seq[Triple]): TripleStore = {
-    val ins = ts.distinct.toDS().toDF()
-    val t = triples.toDF()
-    val kept = t.join(broadcast(ins),
-      t("s") <=> ins("s") && t("p") <=> ins("p") && t("o") <=> ins("o"),
-      "left_anti")
-    derive(kept.unionByName(ins).as[Triple])
+    val l = layers
+    withDelta(l.base, l.inserted ++ ts.map(_ -> ()), l.removed -- ts)
   }
 
   /** Remove one triple (reference: remove_triple, graph.rs:510-629).
@@ -89,20 +119,13 @@ final class TripleStore private (
     * reference (graph.rs:513-519). */
   def removeTriple(t: Triple): TripleStore = removeTriples(Seq(t))
 
-  /** Broadcast left-anti join, not `.except()`: except plans a full
-    * shuffle + distinct of EVERY stored triple to delete a handful of
-    * rows; the removal list comes from a driver-side Seq, so
-    * broadcasting it keeps the whole delete shuffle-free (round-2
-    * verdict #6). `<=>` makes the struct compare null-safe (lang /
-    * datatype are null on IRIs). Assumes set semantics, which
-    * [[insertTriples]]' distinct maintains. */
+  /** The mirror of [[insertTriples]]: the triples join `removed` and
+    * leave `inserted`. The broadcast anti-join, not `.except()`: except
+    * plans a full shuffle + distinct of EVERY stored triple to delete a
+    * handful of rows (round-2 verdict #6). */
   def removeTriples(ts: Seq[Triple]): TripleStore = {
-    val del = ts.toDS().toDF()
-    val t = triples.toDF()
-    val kept = t.join(broadcast(del),
-      t("s") <=> del("s") && t("p") <=> del("p") && t("o") <=> del("o"),
-      "left_anti").as[Triple]
-    derive(kept)
+    val l = layers
+    withDelta(l.base, l.inserted -- ts, l.removed ++ ts.map(_ -> ()))
   }
 
   /** Remove every triple matching a pattern (None = wildcard) — the
@@ -301,19 +324,25 @@ final class TripleStore private (
   }
 
   /** Last location this store was persisted to / restored from
-    * (reference: persist_location, graph.rs:638-640). */
-  @volatile private var persistedTo: Option[String] = None
+    * (reference: persist_location, graph.rs:638-640), as given and
+    * Hadoop-qualified: `dir`, `dir/` and `file:dir` are one location. */
+  @volatile private var persistedTo: Option[(String, Path)] = None
 
-  def persistLocation: Option[String] = persistedTo
+  def persistLocation: Option[String] = persistedTo.map(_._1)
 
   private[store] def rememberLocation(path: String): this.type = {
-    persistedTo = Some(path); this
+    persistedTo = Some(path -> qualified(path)); this
+  }
+
+  private def qualified(path: String): Path = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
   }
 
   /** Re-persist to the remembered location (reference: persist with no
     * argument, graph.rs:641-656 — errors when the graph has never been
     * persisted, our analogue of `Error::NoPersistLocation`). */
-  def persist(): Unit = persist(persistedTo.getOrElse(
+  def persist(): Unit = persist(persistLocation.getOrElse(
     throw new IllegalStateException(
       "graft: no persist location — call persist(path) first")))
 
@@ -326,26 +355,31 @@ final class TripleStore private (
     // delete its own input mid-scan (Spark cannot overwrite a source
     // in place). Materialize the plan first — an in-place rewrite is a
     // full materialization no matter what — and keep the checkpointed
-    // dataset so this store stays readable after the overwrite. A
-    // persist to a NEW path streams without the checkpoint.
-    if (persistedTo.contains(path))
-      _triples = triples.localCheckpoint(true)
+    // dataset as the new base (with an empty delta) so this store stays
+    // readable after the overwrite. A persist to a NEW path streams
+    // without the checkpoint.
+    val target = qualified(path)
+    if (persistedTo.exists(_._2 == target)) {
+      val cp = triples.localCheckpoint(true)
+      layers = Layers(cp, NoDelta, NoDelta, cp)
+    }
     val terms = termDict.cache()
     val preds = predicateDict.cache()
-    terms.write.mode("overwrite").parquet(s"$path/terms")
-    preds.write.mode("overwrite").parquet(s"$path/predicates")
-    encodedTriples(terms, preds)
-      .write.mode("overwrite").partitionBy("p_id").parquet(s"$path/triples")
-    terms.unpersist(); preds.unpersist()
+    try {
+      terms.write.mode("overwrite").parquet(s"$path/terms")
+      preds.write.mode("overwrite").parquet(s"$path/predicates")
+      encodedTriples(terms, preds)
+        .write.mode("overwrite").partitionBy("p_id").parquet(s"$path/triples")
+    } finally { terms.unpersist(); preds.unpersist() }
     // layout marker, the analogue of the reference's .ripplebackup file
     // (graph.rs:171) — fromBackup validates it before touching parquet.
     // Hadoop FS API, not java.nio: backups live on HDFS/S3 at scale
-    val marker = new org.apache.hadoop.fs.Path(path, TripleStore.BackupMarker)
+    val marker = new Path(path, TripleStore.BackupMarker)
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(marker, true)
     try out.write("graft-backup-v1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    persistedTo = Some(path)
+    persistedTo = Some(path -> target)
   }
 
   /** Full-scan iterator (reference: Graph::iter, graph.rs:696-760). */
@@ -366,6 +400,15 @@ final class TripleStore private (
 }
 
 object TripleStore {
+  /** A driver-side delta: a duplicate-free, insertion-ordered triple set. */
+  private[store] type Delta = VectorMap[Triple, Unit]
+  private[store] val NoDelta: Delta = VectorMap.empty
+
+  /** A store's base, its delta (`inserted` and `removed` disjoint) and
+    * their composition, swapped as one value. */
+  private[store] final case class Layers(
+      base: Dataset[Triple], inserted: Delta, removed: Delta, triples: Dataset[Triple])
+
   /** Update-block token → term: bare tokens are IRIs (update blocks
     * are DATA, not patterns — same coercion as the reference's loader);
     * `"x"` literal, `_:x` blank. Shared with [[QuadStore]]. */
@@ -424,11 +467,11 @@ object TripleStore {
     * actual size at runtime. */
   def fromBackup(spark: SparkSession, path: String): TripleStore = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.isDirectory(root), s"missing backup: $path")
     Seq("terms", "predicates", "triples").foreach { part =>
-      require(fs.isDirectory(new org.apache.hadoop.fs.Path(root, part)),
+      require(fs.isDirectory(new Path(root, part)),
         s"invalid backup (missing $part/): $path")
     }
     // Pre-marker backups (written before the marker existed) stay
@@ -436,7 +479,7 @@ object TripleStore {
     // marker downgrades from error to warning. The marker's job is to
     // fail fast on arbitrary non-backup directories, and a directory
     // with exactly this three-dir layout is not arbitrary.
-    if (!fs.isFile(new org.apache.hadoop.fs.Path(root, BackupMarker)))
+    if (!fs.isFile(new Path(root, BackupMarker)))
       System.err.println(s"graft: restoring marker-less backup layout at " +
         s"$path (no $BackupMarker; re-persist to add it)")
     val terms = spark.read.parquet(s"$path/terms")

@@ -576,12 +576,15 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("chained dataset updates cut lineage when lineageCutEvery is set") {
-    // with spark.graft.lineageCutEvery = 8, every 8th update cuts
-    // lineage (lazy localCheckpoint), so plan size is O(verbs since
-    // last cut), not O(all verbs ever) — 24 inserts would stack 24
+    // with spark.graft.lineageCutEvery = 8, every 8th QuadStore update
+    // (and every 8th data-derived TripleStore derivation) cuts lineage
+    // (lazy localCheckpoint), so plan size is O(verbs since last cut),
+    // not O(all verbs ever) — 24 quad inserts would stack 24
     // anti-join+union layers otherwise. Default is OFF (the cut
     // materializes the whole store into unreplicated executor storage
     // — wrong for a 100 TB store; see QuadStore.update's scaladoc).
+    // TripleStore insert/remove need no cut: they edit a driver-side
+    // delta over a fixed base (pinned in the next test).
     import spark.implicits._
     import graft.rdf.{RdfTerm, Triple}
     spark.conf.set("spark.graft.lineageCutEvery", "8")
@@ -596,8 +599,9 @@ class ScaleSpec extends SparkSpec {
         .collect { case _ => 1 }.sum
       assert(nNodes < 60,
         s"chained-update plan grew to $nNodes nodes — lost the lineage cut?")
-      // same bound for the TripleStore mutation chain — the reference's
-      // documented usage is insert_triple in a loop (graph.rs:414-509)
+      // the TripleStore mutation chain stays under the same bound — the
+      // reference's documented usage is insert_triple in a loop
+      // (graph.rs:414-509)
       val ts0 = store.TripleStore.fromTriples(spark, Seq(Triple(
         RdfTerm.named("t0"), RdfTerm.named("p"), RdfTerm.named("o"))))
       val tsChained = (1 to 24).foldLeft(ts0)((st, i) => st.insertTriple(
@@ -608,6 +612,36 @@ class ScaleSpec extends SparkSpec {
       assert(tn < 60,
         s"mutation-chain plan grew to $tn nodes — lost the lineage cut?")
     } finally spark.conf.set("spark.graft.lineageCutEvery", "0")
+  }
+
+  test("insert/remove keep one anti-join over the base, without the lineage knob") {
+    // the reference's documented usage is insert_triple / remove_triple
+    // in a loop on one graph (graph.rs:414-629). Each call edits the
+    // driver-side delta; the store's plan is one broadcast anti-join of
+    // the base against the delta plus one union, however many calls ran
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def t(i: Int) = Triple(RdfTerm.named(s"t$i"), RdfTerm.named("p"), RdfTerm.named("o"))
+    val prev = spark.conf.getOption("spark.graft.lineageCutEvery")
+    spark.conf.unset("spark.graft.lineageCutEvery")
+    try {
+      val base = TripleStore.fromTriples(spark, (0 until 8).map(t))
+      val basePlan = base.triples.queryExecution.optimizedPlan
+      def mutated(n: Int) = (1 to n).foldLeft(base)((st, i) =>
+        st.insertTriple(t(100 + i)).removeTriple(t(i % 8)))
+      val plans = Seq(4, 24).map { n =>
+        val st = mutated(n)
+        assert(st.count() == 8 + n - math.min(n, 8))
+        st.triples.queryExecution.optimizedPlan
+      }
+      val sizes = plans.map(_.collect { case _ => 1 }.sum)
+      assert(sizes.distinct.size == 1, s"plan grew with the mutation count: $sizes")
+      plans.foreach { p =>
+        val antis = p.collect { case j: Join if j.joinType == LeftAnti => j }
+        assert(antis.size == 1, p.treeString)
+        assert(antis.head.left.sameResult(basePlan), p.treeString)
+      }
+    } finally prev.foreach(spark.conf.set("spark.graft.lineageCutEvery", _))
   }
 
   test("doc_rag_index_append appends only to touched list partitions, base files byte-stable") {

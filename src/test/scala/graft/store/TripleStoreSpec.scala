@@ -246,4 +246,106 @@ class TripleStoreSpec extends SparkSpec {
     st.persist(dir)
     assert(TripleStore.fromBackup(spark, dir).triples.collect().toSet == lits.toSet)
   }
+
+  test("in-place re-persist under another spelling of its directory keeps the backup whole") {
+    // `dir/`, `file:dir` and `file://dir` name the directory the store
+    // reads from; comparing raw strings took them for a new path, skipped
+    // the checkpoint and rewrote terms/ while triples/ kept the old ids
+    val extra = t("zoe", "is", "cool")
+    Seq[String => String](_ + "/", "file:" + _, "file://" + _).foreach { spell =>
+      val dir = java.nio.file.Files.createTempDirectory("ts_spell").toString
+      TripleStore.fromTriples(spark, graph).persist(dir)
+      val mutated = TripleStore.fromBackup(spark, dir).insertTriple(extra)
+      mutated.persist(spell(dir))
+      assert(TripleStore.fromBackup(spark, dir).triples.collect().toSet == graph.toSet + extra,
+        spell(dir))
+      assert(mutated.triples.collect().toSet == graph.toSet + extra, spell(dir))
+    }
+  }
+
+  test("a failed persist releases its dictionary caches") {
+    val st = TripleStore.fromTriples(spark, Seq(t("only", "in", "this-test")))
+    // a regular file where the backup directory should go: the first write fails
+    val file = java.nio.file.Files.createTempFile("ts_fail", ".txt").toString
+    spark.catalog.clearCache() // suites run one at a time in the forked JVM
+    intercept[Exception](st.persist(s"$file/backup"))
+    assert(spark.sharedState.cacheManager.isEmpty, "a dictionary cache outlived the failed persist")
+    assert(st.persistLocation.isEmpty)
+  }
+
+  test("the driver-side delta keeps set semantics against a Set model") {
+    // IRIs (lang/datatype None) next to lang and typed literals with the
+    // same lexical value, so the null-safe compare is exercised
+    val pool = for {
+      s <- Seq("s0", "s1", "s2"); p <- Seq("p0", "p1")
+      o <- Seq(RdfTerm.named("v"), RdfTerm.langLit("v", "en"), RdfTerm.typedLit("v", "xsd:string"),
+        RdfTerm.raw("v"))
+    } yield Triple(RdfTerm.named(s), RdfTerm.named(p), o)
+    val rnd = new scala.util.Random(7)
+    def pick(): Triple = pool(rnd.nextInt(pool.size))
+    def check(st: TripleStore, model: Set[Triple], what: String): Unit = {
+      val rows = st.triples.collect()
+      assert(rows.length == model.size, s"$what: duplicate or missing rows")
+      assert(rows.toSet == model, what)
+    }
+    val initial = pool.take(10).toSet
+    val dir = java.nio.file.Files.createTempDirectory("ts_delta").toString
+    TripleStore.fromTriples(spark, initial.toSeq).persist(dir)
+    var st = TripleStore.fromBackup(spark, dir)
+    var model = initial
+    // fixed opening: insert an existing triple, remove an absent one,
+    // remove then re-insert, duplicates within one call
+    val present = initial.head
+    val absent = pool.find(!initial(_)).get
+    val opening = Seq[(String, TripleStore => TripleStore, Set[Triple] => Set[Triple])](
+      ("insert existing", _.insertTriple(present), identity),
+      ("remove absent", _.removeTriple(absent), identity),
+      ("remove", _.removeTriple(present), _ - present),
+      ("re-insert removed", _.insertTriple(present), _ + present),
+      ("duplicates in one call", _.insertTriples(Seq(absent, absent, present)), _ + absent))
+    val random = (1 to 30).map { i =>
+      val ts = Seq.fill(1 + rnd.nextInt(3))(pick())
+      rnd.nextInt(3) match {
+        case 0 => (s"step $i insertTriple", (s: TripleStore) => s.insertTriple(ts.head),
+          (m: Set[Triple]) => m + ts.head)
+        case 1 => (s"step $i removeTriple", (s: TripleStore) => s.removeTriple(ts.head),
+          (m: Set[Triple]) => m - ts.head)
+        case _ => (s"step $i insertTriples", (s: TripleStore) => s.insertTriples(ts ++ ts),
+          (m: Set[Triple]) => m ++ ts)
+      }
+    }
+    (opening ++ random).foreach { case (what, op, mop) =>
+      st = op(st); model = mop(model); check(st, model, what)
+    }
+    // in-place persist: the backup holds the model, the store stays
+    // readable and keeps mutating on its checkpointed base
+    st.persist()
+    check(TripleStore.fromBackup(spark, dir), model, "restored after in-place persist")
+    check(st, model, "store after in-place persist")
+    check(st.removeTriple(present).insertTriple(absent), model - present + absent,
+      "mutation after in-place persist")
+    // update data blocks go through the same delta
+    val named = t("s9", "p0", "o9")
+    st = st.update("insert data { s9 p0 o9 }")
+    model += named; check(st, model, "insert data")
+    st = st.update("delete data { s9 p0 o9 . s0 p0 v }")
+    model -= named; model -= Triple(RdfTerm.named("s0"), RdfTerm.named("p0"), RdfTerm.named("v"))
+    check(st, model, "delete data")
+    // data-derived derivations see the pending delta
+    st = st.insertTriple(Triple(RdfTerm.named("s1"), RdfTerm.named("p0"), RdfTerm.raw("new")))
+      .removeTriple(Triple(RdfTerm.named("s2"), RdfTerm.named("p0"), RdfTerm.raw("v")))
+    model = model + Triple(RdfTerm.named("s1"), RdfTerm.named("p0"), RdfTerm.raw("new")) -
+      Triple(RdfTerm.named("s2"), RdfTerm.named("p0"), RdfTerm.raw("v"))
+    check(st.removePattern(Some(RdfTerm.named("s1")), None, None),
+      model.filterNot(_.s == RdfTerm.named("s1")), "removePattern over a delta")
+    check(st.update("delete where { $x <p1> $y }"),
+      model.filterNot(_.p == RdfTerm.named("p1")), "delete where over a delta")
+    // cache() still serves queries from the cached composition
+    val cached = st.insertTriple(named).cache()
+    val q = Sparql.parse("select $x where { $x p0 o9 }")
+    assert(cached.query(q).queryExecution.withCachedData.collectFirst {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m }.nonEmpty)
+    assert(cached.get(q) == Seq(RdfTerm.named("s9")))
+    cached.triples.unpersist()
+  }
 }
