@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** User-facing entry point: one call gives a session configured the way
@@ -37,16 +37,17 @@ object Graft {
     s
   }
 
-  /** Register every corpus table in `dir` as a temp view (events gets
-    * its ns→µs timestamp normalization). A table this sf dir lacks is
-    * skipped, and the skip is logged with its exception. */
+  /** Corpus table `t` of `dir` (events gets its ns→µs timestamp
+    * normalization). */
+  def table(spark: SparkSession, dir: String, t: String): DataFrame =
+    if (t == "events") Tables.events(spark, dir) else Tables.table(spark, dir, t)
+
+  /** Register every corpus table in `dir` as a temp view. A table this
+    * sf dir lacks is skipped, and the skip is logged with its exception. */
   def registerTables(spark: SparkSession, dir: String): Unit =
     TableNames.foreach { t =>
-      try {
-        val df = if (t == "events") Tables.events(spark, dir)
-                 else Tables.table(spark, dir, t)
-        df.createOrReplaceTempView(t)
-      } catch { case NonFatal(e) =>
+      try table(spark, dir, t).createOrReplaceTempView(t)
+      catch { case NonFatal(e) =>
         System.err.println(s"[graft] registerTables: skipped $t: $e")
       }
     }

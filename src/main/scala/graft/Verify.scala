@@ -21,24 +21,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing names restrict the dump (dev loop: one query +
     // tools/check.py on it); the driver passes none and gets everything.
-    // Unknown names fail fast — a typo would otherwise dump nothing and
-    // exit 0, making the dev check pass vacuously.
-    val only = args.drop(2).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Graft.session(s"local[$cpus]", cpus, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val names = Bench.select(args.drop(2).toSeq)
+    val spark = Bench.session("graft-verify", defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    names.foreach { name =>
+      Bench.attempt(spark, "verify", name) {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
       }
-      spark.catalog.clearCache()
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")

@@ -1,11 +1,15 @@
 package graft.store
 
 import scala.collection.immutable.VectorMap
+import scala.collection.mutable
 
 import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FileScanRDD, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The rebuild of the reference's `Graph` (reference:
@@ -42,8 +46,8 @@ final class TripleStore private (
   import spark.implicits._
   import TripleStore.{Delta, Layers, NoDelta}
 
-  /** Replaced only by [[persist]] when re-persisting over this store's
-    * own source directory: the checkpointed composition becomes the new
+  /** Replaced only by [[persist]] when re-persisting over directories
+    * this store reads from: the checkpointed composition becomes the new
     * base (it survives the overwrite) and the delta is cleared. */
   @volatile private var layers: Layers = compose(base0, inserted0, removed0)
 
@@ -324,19 +328,38 @@ final class TripleStore private (
   }
 
   /** Last location this store was persisted to / restored from
-    * (reference: persist_location, graph.rs:638-640), as given and
-    * Hadoop-qualified: `dir`, `dir/` and `file:dir` are one location. */
-  @volatile private var persistedTo: Option[(String, Path)] = None
+    * (reference: persist_location, graph.rs:638-640). */
+  @volatile private var persistedTo: Option[String] = None
 
-  def persistLocation: Option[String] = persistedTo.map(_._1)
+  def persistLocation: Option[String] = persistedTo
 
   private[store] def rememberLocation(path: String): this.type = {
-    persistedTo = Some(path -> qualified(path)); this
+    persistedTo = Some(path); this
   }
 
-  private def qualified(path: String): Path = {
-    val p = new Path(path)
+  private def qualified(p: Path): Path =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+
+  /** Whether [[triples]] scans files under one of `dirs`: a file-relation
+    * leaf of its plan (walked as [[graft.Sizing]] does) with a root at or
+    * under a dir, or an RDD leaf whose lineage scans such a file. The
+    * RDD case is a lineage cut ([[derive]]) not yet computed: until then
+    * its RDD still reads the files it was derived from. A computed cut's
+    * lineage ends at its checkpoint. Paths compare Hadoop-qualified:
+    * `dir`, `dir/` and `file:dir` are one directory. */
+  private def reads(dirs: Seq[Path]): Boolean = {
+    def under(p: Path): Boolean =
+      Iterator.iterate(qualified(p))(_.getParent).takeWhile(_ != null).exists(dirs.contains)
+    val seen = mutable.Set[Int]()
+    def scans(rdd: RDD[_]): Boolean = seen.add(rdd.id) && (rdd match {
+      case f: FileScanRDD => f.filePartitions.exists(_.files.exists(pf => under(pf.toPath)))
+      case _ => rdd.dependencies.exists(d => scans(d.rdd))
+    })
+    triples.queryExecution.analyzed.collectLeaves().exists {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths.exists(under)
+      case l: LogicalRDD => scans(l.rdd)
+      case _ => false
+    }
   }
 
   /** Re-persist to the remembered location (reference: persist with no
@@ -351,15 +374,14 @@ final class TripleStore private (
     * trees/<predId>.json as triples/p_id=<id>/). Remembers `path` for
     * no-arg [[persist()]] / [[persistLocation]]. */
   def persist(path: String): Unit = {
-    // Re-persisting over the directory this store READS from would
-    // delete its own input mid-scan (Spark cannot overwrite a source
-    // in place). Materialize the plan first — an in-place rewrite is a
-    // full materialization no matter what — and keep the checkpointed
-    // dataset as the new base (with an empty delta) so this store stays
-    // readable after the overwrite. A persist to a NEW path streams
-    // without the checkpoint.
-    val target = qualified(path)
-    if (persistedTo.exists(_._2 == target)) {
+    // Overwriting a directory this store READS from (whatever location
+    // it remembers) would delete its own input mid-scan (Spark cannot
+    // overwrite a source in place). Materialize the plan first — an
+    // in-place rewrite is a full materialization no matter what — and
+    // keep the checkpointed dataset as the new base (with an empty
+    // delta) so this store stays readable after the overwrite. A persist
+    // to a path it does not read streams without the checkpoint.
+    if (reads(Seq("terms", "predicates", "triples").map(d => qualified(new Path(path, d))))) {
       val cp = triples.localCheckpoint(true)
       layers = Layers(cp, NoDelta, NoDelta, cp)
     }
@@ -379,7 +401,7 @@ final class TripleStore private (
     val out = fs.create(marker, true)
     try out.write("graft-backup-v1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    persistedTo = Some(path -> target)
+    persistedTo = Some(path)
   }
 
   /** Full-scan iterator (reference: Graph::iter, graph.rs:696-760). */

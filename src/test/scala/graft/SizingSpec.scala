@@ -22,21 +22,11 @@ class SizingSpec extends SparkSpec {
   private lazy val docBytes = Files.size(Paths.get(docs))
   private def par = spark.sparkContext.defaultParallelism
 
-  /** `body`'s result and every stderr line it printed. */
-  private def withStderr[T](body: => T): (T, Seq[String]) = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val prev = System.err
-    System.setErr(new java.io.PrintStream(buf, true))
-    val r = try body finally System.setErr(prev)
-    (r, buf.toString.linesIterator.toSeq)
-  }
-
   private def repartitioned(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty
 
-  /** Jobs started while `body` runs. The listener bus is asynchronous,
-    * so a fence job is run afterwards and awaited: events arrive in
-    * order, so once the fence is seen every earlier job start is too. */
+  /** Jobs started while `body` runs, counted once the listener bus has
+    * delivered every event of the run. */
   private def jobsDuring(body: => Any): Int = {
     val sc = spark.sparkContext
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -49,12 +39,7 @@ class SizingSpec extends SparkSpec {
     try {
       sc.setJobGroup("sizing-body", "sizing-body")
       try body finally sc.clearJobGroup()
-      sc.setJobGroup("sizing-fence", "sizing-fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains("sizing-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains("sizing-fence"), "fence job never reached the listener")
+      Bench.drainListeners(sc)
       started.toArray.count(_ == "sizing-body")
     } finally sc.removeSparkListener(listener)
   }

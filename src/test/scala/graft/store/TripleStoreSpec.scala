@@ -263,6 +263,60 @@ class TripleStoreSpec extends SparkSpec {
     }
   }
 
+  test("persisting back to the directory a store reads from keeps that backup whole") {
+    // the store reads `a` but remembers `b` after persisting there; the
+    // in-place decision must follow what it reads, not what it remembers
+    val triples = (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))
+    val extra = t("zoe", "is", "cool")
+    val a = java.nio.file.Files.createTempDirectory("ts_back_a").toString
+    val b = java.nio.file.Files.createTempDirectory("ts_back_b").toString
+    TripleStore.fromTriples(spark, triples).persist(a)
+    val st = TripleStore.fromBackup(spark, a).insertTriple(extra)
+    st.persist(b)
+    st.persist(a)
+    val expected = triples.toSet + extra
+    assert(TripleStore.fromBackup(spark, a).triples.collect().toSet == expected)
+    assert(TripleStore.fromBackup(spark, b).triples.collect().toSet == expected)
+    assert(st.triples.collect().toSet == expected)
+    assert(st.persistLocation.contains(a))
+  }
+
+  test("with lineageCutEvery set, persisting over a pending cut's source keeps that backup whole") {
+    // a lazy lineage cut is a plan leaf whose RDD, until first computed,
+    // still scans the backup it was derived from. With adaptive execution
+    // and broadcast joins off, building the cut runs no stage at all, so
+    // every dictionary and triple read waits for the first action.
+    val triples = (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))
+    val gone = triples.filter(_.p == RdfTerm.named("p3")).toSet
+    val expected = triples.toSet -- gone
+    val keys = Seq("spark.graft.lineageCutEvery" -> "1", "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // in place: persist() to the location the store remembers
+      val a = java.nio.file.Files.createTempDirectory("ts_cut_a").toString
+      TripleStore.fromTriples(spark, triples).persist(a)
+      val inPlace = TripleStore.fromBackup(spark, a).removePattern(None, Some(RdfTerm.named("p3")), None)
+      inPlace.persist()
+      assert(TripleStore.fromBackup(spark, a).triples.collect().toSet == expected)
+      assert(inPlace.triples.collect().toSet == expected)
+      // back to the source after the location moved elsewhere unread
+      val c = java.nio.file.Files.createTempDirectory("ts_cut_c").toString
+      val d = java.nio.file.Files.createTempDirectory("ts_cut_d").toString
+      TripleStore.fromTriples(spark, triples).persist(c)
+      val restored = TripleStore.fromBackup(spark, c)
+      restored.persist(d)
+      val back = restored.removePattern(None, Some(RdfTerm.named("p3")), None)
+      back.persist(c)
+      assert(TripleStore.fromBackup(spark, c).triples.collect().toSet == expected)
+      assert(back.triples.collect().toSet == expected)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("a failed persist releases its dictionary caches") {
     val st = TripleStore.fromTriples(spark, Seq(t("only", "in", "this-test")))
     // a regular file where the backup directory should go: the first write fails
