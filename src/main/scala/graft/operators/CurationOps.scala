@@ -423,7 +423,7 @@ object CurationOps {
     *   1. quality gate ([[docQualityFilter]]'s expressions)
     *   2. exact dedup keep-one (min doc_id per content md5)
     *   3. near-dup cluster keep-one: MinHash+LSH pairs among the
-    *      survivors ([[DedupOps.minhashPairs]]) → GraphX connected
+    *      survivors ([[DedupOps.minhashPairs]]) → connected
     *      components ([[DedupOps.pairClusterCanonical]]) → keep the
     *      canonical (min) doc per cluster
     *   4. decontaminate vs the held-out set (doc_id % 50 = 0; its
@@ -434,7 +434,7 @@ object CurationOps {
     *   6. token-budget shard packing ([[docShardPack]]'s window)
     *
     * Every stage keeps its standalone scale shape (map-side gates,
-    * banded LSH, paired-subgraph-only Pregel, broadcast benchmark
+    * banded LSH, paired-subgraph-only CC, broadcast benchmark
     * index, per-source windows); the oracle replays the identical
     * composition as chained CTEs with a recursive closure for the
     * cluster step.
@@ -445,8 +445,7 @@ object CurationOps {
     * the GATED, exact-deduped survivors (stages 1-2), not the full
     * corpus, so the standalone pair set is a superset with different
     * shingle statistics. The inline cost IS the honest e2e cost; the
-    * `.cache()` below only amortizes the pair DF across the CC
-    * iteration within this one query. */
+    * CC checkpoints the pair list once, so it is computed once. */
   def docPipelineE2e(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -459,8 +458,8 @@ object CurationOps {
     val keep1 = gated.groupBy(md5($"text").as("k")).agg(min($"doc_id").as("doc_id"))
     val exact = gated.join(keep1.select($"doc_id"), "doc_id")
     // 3. near-dup cluster keep-one over the survivors
-    val pairs = DedupOps.minhashPairs(s, exact.select($"doc_id", $"text")).cache()
-    val canon = DedupOps.pairClusterCanonical(s, pairs)
+    val canon = DedupOps.pairClusterCanonical(
+      DedupOps.minhashPairs(s, exact.select($"doc_id", $"text")))
     val nearKept = exact.join(canon, Seq("doc_id"), "left_outer")
       .filter(coalesce($"canonical", $"doc_id") === $"doc_id")
       .drop("canonical")

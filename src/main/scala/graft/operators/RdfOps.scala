@@ -499,8 +499,9 @@ object RdfOps {
        |ORDER BY c, r""".stripMargin
 
   /** TRANSITIVE property path (SPARQL 1.1 `p+`): one-or-more closure
-    * by semi-naive iteration (Bgp.closureDf). The nation chain
-    * NATION_k →next→ NATION_k+1 closes to every ordered pair, which
+    * by delta-restricted doubling on Fixpoint.iterate (Bgp.pathDf with
+    * {1,∞} hops). The nation chain NATION_k →next→ NATION_k+1 closes
+    * to every ordered pair, which
     * the oracle states directly as a key inequality — an independent
     * formulation of the same closure. */
   def bgpPathTrans(s: SparkSession, d: String): DataFrame = {
@@ -628,7 +629,7 @@ object RdfOps {
   /** BOUNDED path quantifier `p{n,m}` (the SPARQL 1.1 draft quantifier,
     * a widely supported extension beyond the final REC): pairs exactly
     * 2 or 3 `next`-hops apart on the nation chain. Evaluates as a
-    * FIXED m−1 composition rounds (Bgp.boundedPathDf) — no fixpoint —
+    * FIXED m−1 composition rounds (Bgp.pathDf with {2,3}) — no fixpoint —
     * which the oracle states independently as a key-distance range. */
   def bgpPathQuant(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1539,7 +1540,7 @@ object Bgp {
   private val positions = Seq("s", "p", "o")
 
   /** Bound-endpoint closures widen their hop relation until it exceeds
-    * this multiple of the predicate's edge count (see seededReach). */
+    * this multiple of the predicate's edge count (see pathDf). */
   val HopBudgetFactor: Long = 4L
 
   def compile(
@@ -1569,160 +1570,100 @@ object Bgp {
       else if (q.fromGraphs.nonEmpty) triples.filter(lit(false))
       else triples
 
-    /** One-or-more transitive closure of `base` edges (property path
-      * `base+`), dispatched on the BOUND POSITIONS of the pattern —
-      * the closure analogue of the reference's access-path dispatch
+    /** Property path `base{nMin,nMax}`, nMax None = unbounded: `p+` is
+      * {1,∞}, `p*` is {0,∞}, `p?` is {0,1} and `p{n,m}` passes through.
+      * Dispatched on the BOUND POSITIONS of the pattern — the path
+      * analogue of the reference's access-path dispatch
       * (graph.rs:842-853), which routes every pattern by what is bound
-      * before touching data:
+      * before touching data. A bound endpoint (`<seed> p+ $y` /
+      * `$x p+ <seed>`) walks from the seed only (over reversed edges for
+      * a bound object), so work per round is bounded by the seed's
+      * reachable set, never the all-pairs closure — at 100 TB, one
+      * node's lineage query must not pay for every pair in the graph.
+      * Var-var composes the full edge relation.
       *
-      *  - a bound endpoint (`<seed> p+ $y` / `$x p+ <seed>`) runs a
-      *    SEED-RESTRICTED frontier BFS: per round the NEW frontier
-      *    joins the edge list (reversed for a bound object) and the
-      *    loop stops on an empty frontier. Work per round is bounded
-      *    by the seed's reachable set, never the all-pairs closure —
-      *    at 100 TB, one node's lineage query must not pay for every
-      *    pair in the graph.
-      *  - var-var runs DELTA-RESTRICTED POINTER DOUBLING: round k+1
-      *    joins the full reach set with only the pairs FIRST FOUND in
-      *    round k (`reach ⋈ delta`), then excludes known pairs. This
-      *    keeps the plain-doubling round bound — after round k, reach
-      *    holds every pair at distance ≤ 2^k, so ceil(log2(diameter))
-      *    global barriers, vs the diameter under semi-naive — while
-      *    avoiding `reach ⋈ reach`'s re-derivation of every known
-      *    pair every round (quadratic pre-except join output on
-      *    bushy graphs). Sketch: a pair at shortest distance
-      *    D ∈ (2^k, 2^{k+1}] splits at the node m that is D−2^k from
-      *    the start along a shortest path; then dist(a,m) = D−2^k
-      *    ≤ 2^k (⇒ in reach) and dist(m,b) = exactly 2^k (⇒ first
-      *    found in round k, i.e. in delta), so `reach ⋈ delta` finds
-      *    it in round k+1.
+      * A finite nMax is a FIXED nMax−1 composition rounds (exactly-k hop
+      * relations, unioned over k ≥ nMin): no termination probe, so every
+      * round is a lazy checkpoint (plan cut, linear in m) and the
+      * terminal action materializes the chain in one job. An unbounded
+      * path runs on [[graft.Fixpoint.iterate]], one count per round, and
+      * terminates on cycles (an empty round once every pair is known):
       *
-      * localCheckpoint after each round cuts the lineage — without
-      * it, round k's plan re-derives rounds 1..k-1 and the loop goes
-      * quadratic in plan size (pinned by ScaleSpec's bounded-plan
-      * test). Terminates on cyclic graphs (no new pairs / empty
-      * frontier once every reachable pair is known).
+      *  - var-var: DELTA-RESTRICTED POINTER DOUBLING. Round k+1 joins
+      *    the reach set with only the pairs FIRST FOUND in round k
+      *    (`all ⋈ delta`), minus known pairs. After round k every pair at
+      *    distance ≤ 2^k is known, so ceil(log2(diameter)) rounds, vs the
+      *    diameter under semi-naive, without `reach ⋈ reach`'s
+      *    re-derivation of every known pair each round. Sketch: a pair
+      *    at shortest distance D ∈ (2^k, 2^{k+1}] splits at the node m
+      *    that is D−2^k from the start along a shortest path; then
+      *    dist(a,m) ≤ 2^k (⇒ in reach) and dist(m,b) = exactly 2^k
+      *    (⇒ first found in round k), so round k+1 finds it.
+      *  - bound: frontier BFS over a HOP-WIDENED edge relation. Plain
+      *    BFS pays one round per graph level (a depth-1000 lineage chain
+      *    costs 1000), while doubling needs the all-pairs relation this
+      *    dispatch avoids. So first square the hop relation (`all ∘ all`,
+      *    width doubles per round, at most 64) while it stays within
+      *    HopBudgetFactor× the edge count, then BFS with the widened hops.
+      *    Deep/narrow graphs widen cheaply (a chain's ≤w-hop relation is
+      *    ~w·|V| rows) and the BFS round count divides by the width;
+      *    bushy graphs blow the budget on the first squaring — exactly
+      *    where the diameter is already small. Every widened pair is a
+      *    real path, so correctness never depends on the budget.
       *
-      * `reflexive` adds the SPARQL zero-length component (`base*`):
-      * every term appearing anywhere in the graph reaches itself. */
-    def closureDf(base: String, su: QueryUnit, ou: QueryUnit,
-        reflexive: Boolean = false, transitive: Boolean = true): DataFrame = {
+      * nMin = 0 adds the zero-length part: every graph term — from both
+      * positions of ALL triples, not just base edges (SPARQL 1.1 §9.3,
+      * PropertyPathEval ZeroOrMorePath) — reaches itself; for a bound
+      * endpoint only the seed does, iff it is a graph term. */
+    def pathDf(base: String, nMin: Int, nMax: Option[Int],
+        su: QueryUnit, ou: QueryUnit): DataFrame = {
+      require(nMax.forall(m => m >= nMin && m <= 16 && (m >= 1 || nMin == 0)),
+        s"path quantifier must satisfy 0 <= n <= m <= 16, got {$nMin,${nMax.get}}")
       val edges = data
         .filter(matchValue(data, "p") === lit(base))
         .select(matchValue(data, "s").as("_a"), matchValue(data, "o").as("_b"))
-        .distinct().localCheckpoint()
-
-      /** Nodes reachable from `seed` in ≥1 step over `e` (cols _a→_b),
-        * as a single `_n` column, by frontier BFS over a HOP-WIDENED
-        * edge relation. Plain BFS pays one global barrier per graph
-        * level — a depth-1000 lineage chain would cost 1000 rounds —
-        * while full log-round doubling needs the all-pairs relation
-        * this dispatch exists to avoid. The middle path: square the
-        * hop relation (hop ∘ hop ∪ hop, so width doubles per step)
-        * while the result stays within HopBudgetFactor× the edge
-        * count, then BFS with the widened hops. Deep/narrow graphs
-        * widen cheaply (a chain's ≤w-hop relation is ~w·|V| rows) and
-        * the round count divides by the width; bushy graphs blow the
-        * budget on the first squaring and stop — exactly the regime
-        * where the diameter, and thus the BFS round count, is already
-        * small. Every widened pair is a real path, so correctness
-        * never depends on the budget. The reach set is kept as a LIST
-        * of per-round checkpointed frontiers, unioned lazily — each
-        * round materializes only its new frontier, never the
-        * accumulated set. */
-      def seededReach(e: DataFrame, seed: String): DataFrame = {
-        var hop = e
-        if (transitive) {
-          var hopRows = hop.count()
-          val budget = hopRows * Bgp.HopBudgetFactor
-          var width = 1L
-          var widening = hopRows > 0
-          while (widening && width < 64) {
-            // LAZY checkpoint + count: the count is the materializing
-            // action, so each squaring pays ONE job, not an eager-
-            // checkpoint job plus a count job (guide §1.2); the SQL
-            // plan is cut at wrap time either way
-            val wider = hop.toDF("_a", "_m")
-              .join(hop.toDF("_m", "_b"), "_m")
-              .select(col("_a"), col("_b"))
-              .union(hop).distinct().localCheckpoint(false)
-            val n = wider.count()
-            // accept the already-materialized relation either way; the
-            // budget only stops FURTHER squaring. n == hopRows means
-            // hop is the full closure of its connected reach — done.
-            widening = n <= budget && n != hopRows
-            hop = wider
-            hopRows = n
-            width *= 2
-          }
-        }
-        // frontier checkpoints are LAZY with the emptiness probe as the
-        // materializing count — one job per BFS round instead of two
-        var frontier = hop.filter(col("_a") === lit(seed))
-          .select(col("_b").as("_n")).distinct().localCheckpoint(false)
-        val frontiers = scala.collection.mutable.Buffer(frontier)
-        var grew = transitive && frontier.count() > 0
-        while (grew) {
-          val next = frontier.select(col("_n").as("_a"))
-            .join(hop, "_a").select(col("_b").as("_n"))
-            .except(frontiers.reduce(_ union _)).localCheckpoint(false)
-          grew = next.count() > 0
-          if (grew) { frontiers += next; frontier = next }
-        }
-        frontiers.reduce(_ union _)
+        .distinct().localCheckpoint(false)
+      def swap(df: DataFrame) = df.select(col("_b").as("_a"), col("_a").as("_b"))
+      def compose(l: DataFrame, r: DataFrame) = l.toDF("_a", "_m")
+        .join(r.toDF("_m", "_b"), "_m").select(col("_a"), col("_b"))
+      val (seed, forward) = (su, ou) match {
+        case (QVal(v, _), _) => (Some(v), true)
+        case (_, QVal(v, _)) => (Some(v), false)
+        case _               => (None, true)
       }
-
-      def varVarClosure(): DataFrame = {
-        var reach = edges
-        var delta = edges
-        var grew = transitive
-        while (grew) {
-          // lazy checkpoint + count — the seededReach discipline
-          val next = reach.toDF("_a", "_m")
-            .join(delta.toDF("_m", "_b"), "_m")
-            .select(col("_a"), col("_b"))
-            .except(reach).localCheckpoint(false)
-          grew = next.count() > 0
-          // next is EXCEPT-distinct and disjoint from reach, so the
-          // union stays duplicate-free without another shuffle
-          if (grew) { reach = reach.union(next).localCheckpoint(); delta = next }
+      // pairs joined by max(nMin, 1)..nMax hops over e, from the seed only
+      def hops(e: DataFrame): DataFrame = {
+        def from(r: DataFrame) = seed.fold(r)(v => r.filter(col("_a") === lit(v)))
+        nMax match {
+          case Some(m) =>
+            val ks = Iterator.iterate(from(e))(f => compose(f, e).distinct().localCheckpoint(false))
+              .take(m).drop(math.max(nMin, 1) - 1).toSeq
+            if (ks.size == 1) ks.head else ks.reduce(_ union _).distinct()
+          case None if seed.isEmpty =>
+            Fixpoint.iterate(e, Int.MaxValue, Long.MaxValue)(
+              (all, delta) => compose(all, delta).except(all))
+          case None =>
+            val hop = Fixpoint.iterate(e, 6, e.count() * Bgp.HopBudgetFactor)(
+              (all, _) => compose(all, all).except(all))
+            Fixpoint.iterate(from(hop), Int.MaxValue, Long.MaxValue)(
+              (all, delta) => compose(delta, hop).except(all))
         }
-        reach
       }
-
-      // zero-length paths connect every graph term to itself — terms
-      // from BOTH positions of ALL triples, not just base-edges
-      // (SPARQL 1.1 §9.3, PropertyPathEval ZeroOrMorePath)
-      def nodes = data.select(matchValue(data, "s").as("_n"))
-        .union(data.select(matchValue(data, "o").as("_n")))
-        .distinct()
-
-      var df = (su, ou) match {
-        case (QVal(v, _), _) => // bound subject: forward BFS from v
-          var r = seededReach(edges, v).select(lit(v).as("_a"), col("_n").as("_b"))
-          if (reflexive)
-            // v reaches itself iff v is a graph term (matches the
-            // var-var form's reflexive set filtered to _a = v)
-            r = r.union(nodes.filter(col("_n") === lit(v))
-              .select(col("_n").as("_a"), col("_n").as("_b"))).distinct()
-          r
-        case (_, QVal(v, _)) => // bound object: BFS over reversed edges
-          val rev = edges.select(col("_b").as("_a"), col("_a").as("_b"))
-          var r = seededReach(rev, v).select(col("_n").as("_a"), lit(v).as("_b"))
-          if (reflexive)
-            r = r.union(nodes.filter(col("_n") === lit(v))
-              .select(col("_n").as("_a"), col("_n").as("_b"))).distinct()
-          r
-        case _ =>
-          val reach = varVarClosure()
-          if (reflexive)
-            reach.union(nodes.select(col("_n").as("_a"), col("_n").as("_b"))).distinct()
-          else reach
+      def selfPairs = {
+        val terms = data.select(matchValue(data, "s").as("_n"))
+          .union(data.select(matchValue(data, "o").as("_n")))
+        seed.fold(terms)(v => terms.filter(col("_n") === lit(v)))
+          .select(col("_n").as("_a"), col("_n").as("_b"))
       }
-      finishPairs(df, su, ou)
+      // every hops result is duplicate-free; only the zero-length union needs a distinct
+      val walked = Option.when(!nMax.contains(0))(
+        if (forward) hops(edges) else swap(hops(swap(edges))))
+      finishPairs(
+        if (nMin > 0) walked.get else (walked.toSeq :+ selfPairs).reduce(_ union _).distinct(),
+        su, ou)
     }
 
-    /** Shared tail for path evaluators producing a (_a, _b) pair set:
+    /** [[pathDf]]'s tail over its (_a, _b) pair set:
       * typed-endpoint enforcement plus the final variable projection.
       * Typed endpoints mirror plainPatternDf's contract: a kind tag on
       * a kind-unaware store fails fast, and on a kind-aware store the
@@ -1764,80 +1705,6 @@ object Bgp {
       }
     }
 
-    /** Bounded-repetition path `base{n,m}`: the union of the exactly-k
-      * hop compositions for k in n..m. m is a query literal, so this is
-      * a FIXED m-1 rounds of composition — no fixpoint detection, and
-      * each round localCheckpoints like the closures so the plan stays
-      * linear in m. Bound-position dispatch mirrors closureDf: a bound
-      * endpoint composes seed-restricted frontiers (per-round work
-      * bounded by the seed's reach, never all-pairs — the property
-      * ScaleSpec pins for `p+`); var-var composes the full edge
-      * relation. n = 0 adds the zero-length component (every graph
-      * term → itself, SPARQL ZeroOrMorePath semantics restricted to
-      * length 0). */
-    def boundedPathDf(base: String, nMin: Int, nMax: Int,
-        su: QueryUnit, ou: QueryUnit): DataFrame = {
-      require(nMax >= nMin && nMax <= 16 && (nMax >= 1 || nMin == 0),
-        s"path quantifier must satisfy 0 <= n <= m <= 16, got {$nMin,$nMax}")
-      val edges = data
-        .filter(matchValue(data, "p") === lit(base))
-        .select(matchValue(data, "s").as("_a"), matchValue(data, "o").as("_b"))
-        .distinct().localCheckpoint()
-      def nodes = data.select(matchValue(data, "s").as("_n"))
-        .union(data.select(matchValue(data, "o").as("_n")))
-        .distinct()
-      val kLo = math.max(nMin, 1)
-
-      // exactly-k-hop frontiers from a seed over e (cols _a → _b),
-      // k = 1..nMax, kept per-k so the n..m slice unions directly
-      // all checkpoints here are LAZY: m is a fixed query literal (no
-      // data-dependent termination probe), so the terminal action
-      // materializes the whole k-hop chain in ONE job while each
-      // round's SQL plan stays cut — m jobs become none (guide §1.2)
-      def seededKHops(e: DataFrame, seed: String): Seq[DataFrame] = {
-        var f = e.filter(col("_a") === lit(seed))
-          .select(col("_b").as("_n")).distinct().localCheckpoint(false)
-        val fs = scala.collection.mutable.Buffer(f)
-        for (_ <- 2 to nMax) {
-          f = f.select(col("_n").as("_a")).join(e, "_a")
-            .select(col("_b").as("_n")).distinct().localCheckpoint(false)
-          fs += f
-        }
-        fs.toSeq
-      }
-
-      var df =
-        if (nMax == 0)
-          // `p{0}`: the zero-length path alone — every graph term to
-          // itself, no hop computation at all
-          nodes.select(col("_n").as("_a"), col("_n").as("_b"))
-        else (su, ou) match {
-          case (QVal(v, _), _) =>
-            seededKHops(edges, v).slice(kLo - 1, nMax)
-              .reduce(_ union _).distinct()
-              .select(lit(v).as("_a"), col("_n").as("_b"))
-          case (_, QVal(v, _)) =>
-            val rev = edges.select(col("_b").as("_a"), col("_a").as("_b"))
-            seededKHops(rev, v).slice(kLo - 1, nMax)
-              .reduce(_ union _).distinct()
-              .select(col("_n").as("_a"), lit(v).as("_b"))
-          case _ =>
-            var hop = edges
-            val hops = scala.collection.mutable.Buffer(hop)
-            for (_ <- 2 to nMax) {
-              // lazy like seededKHops — fixed m, no per-round probe
-              hop = hop.toDF("_a", "_m").join(edges.toDF("_m", "_b"), "_m")
-                .select(col("_a"), col("_b")).distinct().localCheckpoint(false)
-              hops += hop
-            }
-            hops.slice(kLo - 1, nMax).reduce(_ union _).distinct()
-        }
-      if (nMin == 0 && nMax > 0)
-        df = df.union(nodes.select(col("_n").as("_a"), col("_n").as("_b")))
-          .distinct()
-      finishPairs(df, su, ou)
-    }
-
     /** Path-operator dispatch on the predicate token. Only UNTYPED
       * non-IRI tokens carry path syntax — IRIs may legitimately contain
       * any of these characters, and the `<iri>` form escapes them:
@@ -1845,9 +1712,8 @@ object Bgp {
       *          plain predicate; union of branch evaluations otherwise
       *          (so `knows|^knows` gives the symmetric step)
       *   `^p`   inverse — evaluate p with subject/object swapped
-      *   `p+`   one-or-more transitive closure
-      *   `p*`   zero-or-more closure (adds every graph term → itself)
-      *   `p?`   zero-or-one (one-hop edges plus every term → itself)
+      *   `p+`, `p*`, `p?`, `p{n,m}`  repetition — [[pathDf]] with
+      *          {1,∞}, {0,∞}, {0,1} and {n,m} hops
       * Operators compose per sequence step: the parser's `/` rewrite
       * leaves each step token intact, so `^in_nation/in_region` works. */
     def patternDf(pat: (QueryUnit, QueryUnit, QueryUnit)): DataFrame = pat._2 match {
@@ -1874,16 +1740,14 @@ object Bgp {
         require(!Sparql.pathSyntax(base),
           s"path quantifier needs a plain predicate base, got: $base")
         val n = nStr.toInt
-        boundedPathDf(base, n, Option(mStr).map(_.toInt).getOrElse(n),
-          pat._1, pat._3)
-      case QVal(p, None) if p.length > 1 && p.endsWith("+") && !p.contains("://") =>
-        closureDf(p.dropRight(1), pat._1, pat._3)
-      case QVal(p, None) if p.length > 1 && p.endsWith("*") && !p.contains("://") =>
-        closureDf(p.dropRight(1), pat._1, pat._3, reflexive = true)
-      case QVal(p, None) if p.length > 1 && p.endsWith("?") && !p.contains("://") =>
-        // zero-or-one: the one-hop edges plus every term → itself — no
-        // closure iteration at all
-        closureDf(p.dropRight(1), pat._1, pat._3, reflexive = true, transitive = false)
+        pathDf(base, n, Some(Option(mStr).map(_.toInt).getOrElse(n)), pat._1, pat._3)
+      case QVal(p, None) if p.length > 1 && "+*?".contains(p.last) && !p.contains("://") =>
+        val (nMin, nMax) = p.last match {
+          case '+' => (1, None)
+          case '*' => (0, None)
+          case _   => (0, Some(1))
+        }
+        pathDf(p.dropRight(1), nMin, nMax, pat._1, pat._3)
       case _ => plainPatternDf(pat)
     }
 

@@ -3,7 +3,6 @@ package graft
 import java.net.URI
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.RawLocalFileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -24,25 +23,6 @@ class SizingSpec extends SparkSpec {
 
   private def repartitioned(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty
-
-  /** Jobs started while `body` runs, counted once the listener bus has
-    * delivered every event of the run. */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("sizing-body", "sizing-body")
-      try body finally sc.clearJobGroup()
-      Bench.drainListeners(sc)
-      started.toArray.count(_ == "sizing-body")
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a nested-directory table sizes to the sum of its files") {
     val root = Files.createTempDirectory("graft_sizing")
@@ -94,9 +74,9 @@ class SizingSpec extends SparkSpec {
     assert(plan.isInstanceOf[AdaptiveSparkPlanExec])
     assert(plan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
       .collectFirst { case e: ShuffleExchangeExec => e }.nonEmpty)
-    assert(jobsDuring(Sizing.spread(df)) == 0)
+    assert(jobsDuring(Sizing.spread(df))._2.isEmpty)
     // the partition-count gate Sizing replaced runs the upstream stage
-    assert(jobsDuring(df.rdd.getNumPartitions) > 0)
+    assert(jobsDuring(df.rdd.getNumPartitions)._2.nonEmpty)
   }
 
   test("corpus-sized inputs decide as before: spread repartitions, state and graphs get 1 part") {
