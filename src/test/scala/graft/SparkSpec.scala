@@ -11,6 +11,18 @@ trait SparkSpec extends AnyFunSuite {
 
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** The reference's 53 RDF/XML conference dumps (FIXTURES.md §1). The
+    * repository does not hold them; tests about the dumps themselves
+    * need them at this path. */
+  val referenceModels = "/root/reference/models"
+
+  def hasReferenceCorpus: Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(referenceModels))
+
+  /** Cancels the calling test unless the reference dumps are present. */
+  def assumeReferenceCorpus(): Unit =
+    assume(hasReferenceCorpus, s"reference corpus absent: $referenceModels (FIXTURES.md §1)")
+
   /** `body`'s result and every stderr line it printed. */
   def withStderr[T](body: => T): (T, Seq[String]) = {
     val buf = new java.io.ByteArrayOutputStream()

@@ -57,9 +57,10 @@ class RdfXmlParserSpec extends SparkSpec {
   test("reference corpus files parse (same fixtures as the reference's unit tests)") {
     // reference pins models/cold-2010 (parser.rs:129-133) and
     // models/www-2011 (graph.rs:1121-1124)
-    val cold = RdfXmlParser.parseFile("/root/reference/models/cold-2010-complete.rdf")
+    assumeReferenceCorpus()
+    val cold = RdfXmlParser.parseFile(s"$referenceModels/cold-2010-complete.rdf")
     assert(cold.nonEmpty)
-    val www = RdfXmlParser.parseFile("/root/reference/models/www-2011-complete.rdf")
+    val www = RdfXmlParser.parseFile(s"$referenceModels/www-2011-complete.rdf")
     assert(www.size > 1000)
   }
 
@@ -71,8 +72,13 @@ class RdfXmlParserSpec extends SparkSpec {
     }.sorted
 
   test("write → parse round-trips (modulo blank renaming)") {
-    for (f <- Seq("cold-2010-complete.rdf", "eswc-2006-complete.rdf", "scripting-2008-complete.rdf")) {
-      val ts = RdfXmlParser.parseFile(s"/root/reference/models/$f")
+    val reference =
+      if (!hasReferenceCorpus) Nil
+      else Seq("cold-2010-complete.rdf", "eswc-2006-complete.rdf", "scripting-2008-complete.rdf")
+        .map(f => s"$referenceModels/$f")
+    for (f <- ConferenceCorpus.files.map(_.toString) ++ reference) {
+      val ts = RdfXmlParser.parseFile(f)
+      assert(ts.nonEmpty, f)
       val xml = new String(RdfXmlWriter.triplesToRdfXml(ts.iterator), "UTF-8")
       val back = RdfXmlParser.parseString(xml)
       assert(canon(back) == canon(ts), s"round-trip mismatch for $f")
@@ -80,7 +86,8 @@ class RdfXmlParserSpec extends SparkSpec {
   }
 
   test("whole reference corpus ingests distributed (53 files, 18 MB)") {
-    val st = graft.store.TripleStore.fromRdf(spark, "/root/reference/models")
+    assumeReferenceCorpus()
+    val st = graft.store.TripleStore.fromRdf(spark, referenceModels)
     val n = st.count()
     assert(n > 100000, s"expected >100k triples from the corpus, got $n")
   }

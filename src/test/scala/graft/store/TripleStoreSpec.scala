@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.SparkSpec
-import graft.rdf.{RdfTerm, Triple}
+import graft.rdf.{ConferenceCorpus, RdfTerm, Triple}
 import graft.query.Sparql
 
 class TripleStoreSpec extends SparkSpec {
@@ -108,23 +108,31 @@ class TripleStoreSpec extends SparkSpec {
   }
 
   test("fromRdf distributes per file and prefixes blank nodes") {
-    val st = TripleStore.fromRdf(spark, "/root/reference/models/cold-2010-complete.rdf")
+    def blanks(st: TripleStore): Seq[String] = st.triples.collect().toSeq
+      .flatMap(tr => Seq(tr.s, tr.o)).filter(_.kind == RdfTerm.Blank).map(_.value)
+    val st = TripleStore.fromRdf(spark, ConferenceCorpus.files.head.toString)
     assert(st.count() > 0)
     // blanks from different files can't collide: all have f<idx>_ prefix
-    val blanks = st.triples.collect().flatMap(tr => Seq(tr.s, tr.o))
-      .filter(_.kind == RdfTerm.Blank)
-    assert(blanks.forall(_.value.startsWith("f0_")))
+    val one = blanks(st)
+    assert(one.nonEmpty)
+    assert(one.forall(_.startsWith("f0_")))
+    // the same rdf:nodeID stated in every file stays one term per file
+    val id = ConferenceCorpus.SharedNodeId
+    val shared = blanks(TripleStore.fromRdf(spark, ConferenceCorpus.dir.toString))
+      .filter(_.endsWith(s"_$id")).toSet
+    assert(shared == (0 until ConferenceCorpus.FileCount).map(i => s"f${i}_$id").toSet)
   }
 
   test("fromRdf reads through the Hadoop FileSystem API (file:// URI, dir and single file)") {
     // A cluster deployment hands fromRdf an HDFS/S3A URI; the listing and
     // the reads must go through Hadoop, not java.io.File. file:// is the
     // scheme-qualified stand-in available in a local JVM.
-    val one = TripleStore.fromRdf(spark, "file:///root/reference/models/cold-2010-complete.rdf")
-    assert(one.count() ==
-      TripleStore.fromRdf(spark, "/root/reference/models/cold-2010-complete.rdf").count())
-    val dir = TripleStore.fromRdf(spark, "file:///root/reference/models")
-    assert(dir.count() == TripleStore.fromRdf(spark, "/root/reference/models").count())
+    val file = ConferenceCorpus.files.head.toString
+    val one = TripleStore.fromRdf(spark, s"file://$file")
+    assert(one.count() == TripleStore.fromRdf(spark, file).count())
+    val corpus = ConferenceCorpus.dir.toString
+    val dir = TripleStore.fromRdf(spark, s"file://$corpus")
+    assert(dir.count() == TripleStore.fromRdf(spark, corpus).count())
     // Turtle shares the same listing helper
     val tmp = java.nio.file.Files.createTempDirectory("ttl_uri").toString
     java.nio.file.Files.writeString(java.nio.file.Path.of(tmp, "a.ttl"),
@@ -136,15 +144,15 @@ class TripleStoreSpec extends SparkSpec {
   }
 
   test("corpus persists smaller than its RDF/XML source (parquet replaces K2Tree compression)") {
-    val st = TripleStore.fromRdf(spark, "/root/reference/models")
+    val st = TripleStore.fromRdf(spark, ConferenceCorpus.dir.toString)
     val dir = java.nio.file.Files.createTempDirectory("corpus_persist").toString
     st.persist(dir)
     def duBytes(p: java.io.File): Long =
       if (p.isFile) p.length
       else Option(p.listFiles).map(_.map(duBytes).sum).getOrElse(0L)
     val parquetBytes = duBytes(new java.io.File(dir))
-    val xmlBytes = duBytes(new java.io.File("/root/reference/models"))
-    info(f"corpus: xml=${xmlBytes / 1e6}%.1f MB → persisted=${parquetBytes / 1e6}%.1f MB " +
+    val xmlBytes = duBytes(ConferenceCorpus.dir.toFile)
+    info(f"corpus: xml=${xmlBytes / 1e3}%.0f KB → persisted=${parquetBytes / 1e3}%.0f KB " +
       f"(${100.0 * parquetBytes / xmlBytes}%.0f%%)")
     assert(parquetBytes < xmlBytes)
     // restore equals original
