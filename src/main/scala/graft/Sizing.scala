@@ -29,7 +29,7 @@ object Sizing {
     } catch { case NonFatal(e) => Left(e.toString) }
 
   /** (label, bytes) of each file leaf of `df`'s analyzed plan. A
-    * foreachBatch micro-batch is a LogicalRDD carrying its file scan's
+    * streaming micro-batch is a LogicalRDD carrying its file scan's
     * size as stats (Spark's default, i.e. huge, when it carries none);
     * local relations and ranges scan no input and are skipped. */
   private def fileLeaves(df: DataFrame): Seq[(String, BigInt)] =
@@ -56,7 +56,7 @@ object Sizing {
     * parallelism: the shuffle is < parallelism · maxPartitionBytes BY
     * THE GATE. At scale the scan yields ≥ parallelism splits and this
     * is the identity. Streaming frames are returned as they are; their
-    * foreachBatch micro-batches are batch frames and take the gate. */
+    * micro-batches are batch frames and take the gate. */
   def spread(df: DataFrame): DataFrame =
     if (df.isStreaming) df
     else {

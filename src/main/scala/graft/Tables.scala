@@ -29,6 +29,20 @@ object Tables {
     out.sparkSession.createDataFrame(rows.asJava, out.schema)
   }
 
+  /** THE scratch location of every table graft writes itself (indexes,
+    * centroid caches, landed streams, round-trip files):
+    * `<root>/<kind>_<md5(key)>`, keyed so a rerun over the same `key`
+    * (usually the corpus dir) overwrites instead of adding a tree per
+    * call. The root is `spark.graft.indexRoot`, so a cluster points it
+    * at shared storage (any Hadoop scheme); the `java.io.tmpdir`
+    * default is only right for local[k]. */
+  def scratch(s: SparkSession, kind: String, key: String): String = {
+    val root = s.conf.getOption("spark.graft.indexRoot")
+      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
+    s"$root/${kind}_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

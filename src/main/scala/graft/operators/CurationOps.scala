@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Sizing
+import graft.{Sizing, Streams}
 import graft.Tables._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -386,32 +386,17 @@ object CurationOps {
     * stream (the continuous-ingest shape — each new parquet drop in
     * the corpus directory is a micro-batch), flow through exactly the
     * same codegen'd gate expressions as [[docQualityFilter]], and land
-    * via foreachBatch as parquet. The comparable output re-reads the
-    * landed files, so the oracle (the batch gate's SQL) proves the
-    * streaming path admits precisely the batch row set — curation
-    * logic stays one implementation whether the corpus is at rest or
-    * in flight. Stateless map/filter streaming: no watermark or state
+    * per micro-batch as parquet ([[graft.Streams.land]]). The
+    * comparable output re-reads the landed files, so the oracle (the
+    * batch gate's SQL) proves the streaming path admits precisely the
+    * batch row set — curation logic stays one implementation whether
+    * the corpus is at rest or in flight. Stateless map/filter streaming: no watermark or state
     * store needed. */
   def docStreamQuality(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qsink").toString
-    val gated = qualityGate(graft.Tables.streamTable(s, d, "documents"))
-    val q = gated.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(tmp)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // The returned DataFrame reads the landed files lazily (the gate
-    // passes ~1/3 of the corpus — NOT driver-collectable at scale), so
-    // the sink can't be deleted here; register it for JVM-exit cleanup
-    // instead so repeated runs don't leak one landed-files tree per
-    // call (the round-4 IVF ADVICE lesson). Production keeps the sink
-    // — it IS the output.
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    s.read.parquet(tmp).orderBy($"doc_id")
+    Streams.land(s, "doc_stream_quality", d, qualityGate(streamTable(s, d, "documents")),
+        Sizing.tableParts(s, d, "documents"))(identity)
+      .orderBy($"doc_id")
   }
   val docStreamQualitySql: String = docQualityFilterSql
 
@@ -802,20 +787,12 @@ object CurationOps {
     * [[graft.store.TripleStore]]'s predicate-partitioned persistence
     * and [[MlOps.simAnnIvfIndex]]'s list-partitioned index; together
     * they make "partition the physical layout by the access key" the
-    * repo-wide storage rule. Root from `spark.graft.indexRoot` so a
-    * cluster points at shared storage; ScaleSpec pins the
-    * PartitionFilters-only read. */
+    * repo-wide storage rule. The corpus-keyed directory under the
+    * scratch root ([[graft.Tables.scratch]]) is overwritten on rerun;
+    * ScaleSpec pins the PartitionFilters-only read. */
   def docPartitionedSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    // Corpus-keyed deterministic path (same discipline as
-    // IvfKmeans.centroidPath): reruns OVERWRITE instead of
-    // accumulating one UUID tree per invocation across bench/verify
-    // runs; one directory per corpus, bounded.
-    val dir = s"$root/docs_part_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val dir = scratch(s, "docs_part", d)
     val gated = documents(s, d)
       .join(qualityGate(documents(s, d)).select($"doc_id"), Seq("doc_id"), "left_semi")
     gated.write.mode("overwrite").partitionBy("source").parquet(dir)
@@ -865,12 +842,8 @@ object CurationOps {
     * (each source's rewrite is independent). */
   def docCompactSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val fragDir = s"$root/docs_frag_$key"
-    val compactDir = s"$root/docs_compact_$key"
+    val fragDir = scratch(s, "docs_frag", d)
+    val compactDir = scratch(s, "docs_compact", d)
     val gated = documents(s, d)
       .join(qualityGate(documents(s, d)).select($"doc_id"), Seq("doc_id"), "left_semi")
       .select($"doc_id", $"source", $"text")
@@ -1523,7 +1496,7 @@ object CurationOps {
     // hottest map-side compute): batch callers pass 1-partition
     // single-file scans that would run it serially (identity at
     // production scale and for streaming frames; per-micro-batch
-    // frames inside foreachBatch are batch frames and do take it)
+    // frames are batch frames and do take it)
     Sizing.spread(docs)
       .filter($"text".isNotNull) // family-wide NULL-text guard
       .select($"doc_id", split($"text", " ").as("ws"))
@@ -1862,13 +1835,8 @@ object CurationOps {
     * reruns overwrite instead of accumulating trees and the APPEND
     * lifecycle ([[docRagIndexAppend]]) can find the index
     * [[docRagIndex]] wrote. */
-  private[graft] def ragIndexDir(s: SparkSession, d: String): String = {
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    s"$root/rag_idx_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+  private[graft] def ragIndexDir(s: SparkSession, d: String): String =
+    scratch(s, "rag_idx", d)
 
   /** THE probed read of the on-disk RAG index: an `isin` over the
     * partition column, which Spark turns into `PartitionFilters` —
@@ -1989,27 +1957,20 @@ object CurationOps {
   def docRagStreamAppend(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (dir, cents) = ragAppendBase(s, d)
-    val incoming = graft.Tables.streamTable(s, d, "documents")
+    val incoming = streamTable(s, d, "documents")
       .filter($"source".isInCollection(DedupOps.IncrementalBatchSources))
-    val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = incoming.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        served.incrementAndGet()
-        unitNorm(s, ragChunkVecsOf(s, batch))
-          .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
-          .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
-          .select($"doc_id", $"chunk_id", $"v", $"list_id")
-          .repartition($"list_id") // one appended file per touched list
-          .write.mode("append").partitionBy("list_id").parquet(dir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
     // An index missing its streamed appends would fail the
-    // full-rebuild-parity oracle confusingly far downstream; fail at
-    // the source instead if the stream fired zero micro-batches.
-    require(served.get() > 0L,
-      s"doc_rag_stream_append: no micro-batch fired — streaming source " +
-        s"at $d/documents.parquet matched no files")
+    // full-rebuild-parity oracle confusingly far downstream; drain
+    // fails at the source instead if no micro-batch fired.
+    Streams.drain(s, "doc_rag_stream_append", incoming,
+        Sizing.tableParts(s, d, "documents")) { (batch, _) =>
+      unitNorm(s, ragChunkVecsOf(s, batch))
+        .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
+        .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+        .select($"doc_id", $"chunk_id", $"v", $"list_id")
+        .repartition($"list_id") // one appended file per touched list
+        .write.mode("append").partitionBy("list_id").parquet(dir)
+    }
     s.read.parquet(dir)
       .select($"doc_id", $"chunk_id", $"list_id".cast("long").as("list_id"))
       .orderBy($"doc_id", $"chunk_id")
@@ -2238,10 +2199,10 @@ object CurationOps {
     * [[ragProbeRetrieve]] exactly as the batch op does: probe lists
     * resolved driver-side (queries × [[RagProbeLists]] rows), index
     * read partition-pruned to the probed `list_id=` directories, exact
-    * cosine, top-[[RagTopK]] — and appends the answers to a parquet
-    * serve log.
+    * cosine, top-[[RagTopK]] — and lands the answers as a parquet
+    * serve log, one directory per batch id ([[graft.Streams.land]]).
     *
-    * foreachBatch rather than a stream-static join on `list_id`:
+    * A per-batch probe rather than a stream-static join on `list_id`:
     * micro-batch plans don't get AQE, so the join would shuffle the
     * CORPUS-sized index once per batch to meet ~20 probe rows — while
     * the per-batch probed read touches [[RagProbeLists]]/16ths of the
@@ -2255,7 +2216,6 @@ object CurationOps {
   def docRagStream(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (dir, cdf) = ragBuildIndex(s, d)
-    val resDir = dir + "_serve"
     // Layout-adaptive streaming source (graft.Tables.streamTable,
     // round-16 advice): single-file and directory-of-part-files
     // layouts both stream; the old leaf-name glob matched zero part
@@ -2265,24 +2225,9 @@ object CurationOps {
     val qv = unitNorm(s, ragChunkVecsOf(s, qstream))
       .filter(ragQueryPred) // the ONE query-set definition (ragQueryVecs)
       .select($"doc_id".as("vec_id"), $"v")
-    val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = qv.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        served.incrementAndGet()
-        val res = ragProbeRetrieve(s, batch, dir, cdf)
-        // batch 0 overwrites: a rerun replaces the previous serve log
-        // instead of accumulating duplicate answers
-        res.write.mode(if (bid == 0L) "overwrite" else "append")
-          .parquet(resDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // Fail fast rather than reading a stale serve log from a prior run
-    // (or a confusing path-not-found) if the source matched no files.
-    require(served.get() > 0L,
-      s"doc_rag_stream: no micro-batch fired — streaming source at " +
-        s"$d/documents.parquet matched no files")
-    s.read.parquet(resDir).orderBy($"qid", $"rank")
+    Streams.land(s, "doc_rag_stream", d, qv, Sizing.tableParts(s, d, "documents"))(
+        ragProbeRetrieve(s, _, dir, cdf))
+      .orderBy($"qid", $"rank")
   }
   /** Batch parity: the streamed serve path must produce exactly the
     * batch retrieval's rows. */
@@ -3120,29 +3065,12 @@ object CurationOps {
   def docStreamQualityNb(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (wtab, w0, p0) = nbFit(s, d)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nbsink").toString
-    // size the per-batch rollup shuffle to the input, not the batch
-    // default — same posture as evStreamScd2 (set before start: batches
-    // run from the first trigger on)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(partsKey)
-    s.conf.set(partsKey,
-      Sizing.tableParts(s, d, "documents").toString)
-    val q = graft.Tables.streamTable(s, d, "documents").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nbScoreOf(nbFeatsOf(batch).select(col("doc_id"), col("t")),
-            wtab, w0, p0)
-          .write.mode("append").parquet(tmp)
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); s.conf.set(partsKey, prevParts) }
-    // landed files ARE the output at scale — register for JVM-exit
-    // cleanup rather than deleting (same contract as docStreamQuality)
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    s.read.parquet(tmp).orderBy($"doc_id")
+    // the per-batch rollup shuffle is sized to the input, not the
+    // batch default
+    Streams.land(s, "doc_stream_quality_nb", d, streamTable(s, d, "documents"),
+        Sizing.tableParts(s, d, "documents")) { batch =>
+      nbScoreOf(nbFeatsOf(batch).select(col("doc_id"), col("t")), wtab, w0, p0)
+    }.orderBy($"doc_id")
   }
   lazy val docStreamQualityNbSql: String = docQualityNbSql
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fixpoint, Sizing}
+import graft.{Fixpoint, Sizing, Streams}
 import graft.Tables._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -771,7 +771,7 @@ object DedupOps {
     val accepted = incoming.join(corpus, Seq("key"), "left_anti")
       .groupBy($"key")
       .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_batch"))
-    val t = EventOps.runToTable(s, accepted,
+    val t = Streams.toTable(s, accepted,
       "graft_sdedup_" + math.abs(d.hashCode), "complete",
       Sizing.tableParts(s, d, "documents"))
     t.orderBy($"key")
@@ -950,7 +950,7 @@ object DedupOps {
     * table refreshed between drops); each micro-batch computes its
     * docs' band keys map-side and runs the same [[nearScreen]] the
     * batch op runs — screening is per-doc independent, so no state
-    * store is needed at all and results append per batch. Oracle:
+    * store is needed at all and results land per batch id. Oracle:
     * batch parity, [[dedupNearIncrementalSql]] verbatim. */
   def dedupStreamNear(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -959,27 +959,13 @@ object DedupOps {
       docs.filter($"source".isNull || !$"source".isInCollection(IncrementalBatchSources)))
     val cBandsC = trackCache(cBands0)
     val cSetsC = trackCache(cSets)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_snear").toString
-    val incoming = graft.Tables.streamTable(s, d, "documents")
+    val incoming = streamTable(s, d, "documents")
       .filter($"source".isInCollection(IncrementalBatchSources))
-    val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = incoming.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        served.incrementAndGet()
-        val (bBands, bSets) = bandsAndSets(s, batch)
-        nearScreen(s, bBands, bSets, cBandsC, cSetsC)
-          .write.mode(if (bid == 0L) "overwrite" else "append")
-          .parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // Fail fast with a pointed message rather than the opaque
-    // schema-inference error parquet-reading an empty sink dir throws
-    // when the streaming source matched no files.
-    require(served.get() > 0L,
-      s"dedup_stream_near: no micro-batch fired — streaming source at " +
-        s"$d/documents.parquet matched no files")
-    s.read.parquet(outDir).orderBy($"doc_id")
+    Streams.land(s, "dedup_stream_near", d, incoming,
+        Sizing.tableParts(s, d, "documents")) { batch =>
+      val (bBands, bSets) = bandsAndSets(s, batch)
+      nearScreen(s, bBands, bSets, cBandsC, cSetsC)
+    }.orderBy($"doc_id")
   }
   lazy val dedupStreamNearSql: String = dedupNearIncrementalSql
 

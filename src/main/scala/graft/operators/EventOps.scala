@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Sizing
+import graft.{Sizing, Streams}
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -112,39 +112,23 @@ object EventOps {
       .withWatermark("ts", "2 hours")
       .groupBy($"user_id", session_window($"ts", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"))
-    val t = runToTable(s, agg, "graft_sw_" + math.abs(d.hashCode), "complete",
+    val t = Streams.toTable(s, agg, "graft_sw_" + math.abs(d.hashCode), "complete",
       Sizing.tableParts(s, d, "events"))
     t.select($"user_id", $"w.start".as("sess_start"), $"n_events")
       .orderBy($"user_id", $"sess_start")
   }
 
-  /** Streaming → parquet via foreachBatch (the production sink shape:
-    * each micro-batch lands as parquet files, exactly-once per batch
-    * id). The comparable output re-reads what was WRITTEN and
-    * aggregates — proving the landed files carry the full stream.
+  /** Streaming → parquet (the production sink shape: each micro-batch
+    * lands as parquet files by its batch id, [[graft.Streams.land]]).
+    * The comparable output re-reads what was WRITTEN and aggregates —
+    * proving the landed files carry the full stream.
     * Oracle: the same aggregate over the source table. */
   def evStreamToParquet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    // landed files are read back lazily below — clean up at JVM exit,
-    // not here (same leak-avoidance contract as doc_stream_quality)
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    tmpPath.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(tmpPath)
     val stream = eventsStream(s, d)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, Sizing.tableParts(s, d, "events").toString)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(tmp)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set(key, prev)
-    s.read.parquet(tmp)
+    Streams.land(s, "ev_stream_to_parquet", d, stream,
+        Sizing.tableParts(s, d, "events"))(identity)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 4))).cast("double").as("sum_value"),
@@ -167,22 +151,6 @@ object EventOps {
       .transform(graft.Tables.normalizeTs)
   }
 
-  /** The shuffle-partition conf is captured when the query STARTS, so
-    * set it just for the start call and restore afterwards — batch
-    * queries in the same session keep their own sizing. */
-  private[operators] def runToTable(s: SparkSession, df: DataFrame, name: String,
-      mode: String, parts: Int): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, parts.toString)
-    try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set(key, prev)
-    s.table(name)
-  }
-
   /** Stream-static join: the event stream enriched against the static
     * customer dimension (broadcast per micro-batch — no stream state),
     * then aggregated by segment. Oracle: the equivalent batch join. */
@@ -194,7 +162,7 @@ object EventOps {
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 4))).cast("double").as("sum_value"))
-    val t = runToTable(s, joined, "graft_enrich_" + math.abs(d.hashCode), "complete",
+    val t = Streams.toTable(s, joined, "graft_enrich_" + math.abs(d.hashCode), "complete",
       Sizing.tableParts(s, d, "events"))
     t.orderBy($"c_mktsegment")
   }
@@ -224,7 +192,7 @@ object EventOps {
     // partitions are far smaller than keyed state's (measured on 100k
     // rows: 1 part 7.0s, 8 parts 3.3s, 32 parts 9.3s — 256 KB lands
     // near that optimum at any scale)
-    val t = runToTable(s, joined, "graft_ssj_" + math.abs(d.hashCode), "append",
+    val t = Streams.toTable(s, joined, "graft_ssj_" + math.abs(d.hashCode), "append",
       Sizing.tableParts(s, d, "events", bytesPerPart = 256L << 10))
     t.orderBy($"user_id", $"ea", $"eb")
   }
@@ -247,7 +215,7 @@ object EventOps {
       .withWatermark("hour", "2 hours")
       .dropDuplicates("user_id", "hour")
       .select($"user_id", $"hour")
-    val t = runToTable(s, dedup, "graft_dedup_" + math.abs(d.hashCode), "append",
+    val t = Streams.toTable(s, dedup, "graft_dedup_" + math.abs(d.hashCode), "append",
       Sizing.tableParts(s, d, "events"))
     t.orderBy($"user_id", $"hour")
   }
@@ -289,7 +257,7 @@ object EventOps {
     val sessionized = evs.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "n_sessions", "n_events")
-    runToTable(s, sessionized, name, "update", Sizing.tableParts(s, d, "events"))
+    Streams.toTable(s, sessionized, name, "update", Sizing.tableParts(s, d, "events"))
       .orderBy($"user_id")
   }
 
@@ -306,7 +274,7 @@ object EventOps {
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"),
         sum($"value".cast(DecimalType(18, 4))).cast("double").as("sum_value"))
-    runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
+    Streams.toTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n", $"sum_value")
       .orderBy($"w_start", $"event_type")
   }
@@ -455,10 +423,9 @@ object EventOps {
     * the dimension. */
   def evStreamScd2(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = scd2Dir(s, d)
+    val root = scratch(s, "scd2", d)
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(rootP, true)
+    rootP.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rootP, true)
     val in = s"$root/in"; val closedDir = s"$root/closed"; val openDir = s"$root/open"
     val ev = events(s, d).select($"user_id", $"event_id", $"event_type", $"ts")
     // replay slices: absolute-epoch 10-day buckets, one file each,
@@ -471,18 +438,14 @@ object EventOps {
       sliced.filter($"g" === g).drop("g").repartition(1)
         .write.mode("overwrite").parquet(f"$in/g$i%02d")
     }
+    // an empty log replays as one empty slice: its batch lands both
+    // (empty) state sets, and the stream still fires
+    if (gs.isEmpty) ev.repartition(1).write.mode("overwrite").parquet(s"$in/g00")
     sliced.unpersist()
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(s"$in/g*")
-    // the per-batch merge windows shuffle state-sized frames — size the
-    // shuffle to the input like every other streaming op, not to the
-    // batch default (set before start: batches run from the first
-    // trigger on)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(partsKey)
-    s.conf.set(partsKey, Sizing.tableParts(s, d, "events").toString)
     // the open set PING-PONGS between two directories: batch i reads
     // open_(i%2) and overwrites open_((i+1)%2), so no batch ever
     // overwrites the files it is reading — which is the only thing the
@@ -493,58 +456,43 @@ object EventOps {
     val emptyOpen = ev.filter(lit(false))
       .select($"user_id", $"event_id", $"event_type", $"ts".as("valid_from"))
     val openRef = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        {
-          val users = batch.select($"user_id").distinct()
-          // schema passed explicitly — no footer-inference job per batch
-          val open = Option(openRef.get()).map(p => s.read.schema(
-            "user_id LONG, event_id LONG, event_type STRING, valid_from TIMESTAMP")
-            .parquet(p)).getOrElse(emptyOpen)
-          val slice = open.join(users, Seq("user_id"), "left_semi")
-            .select($"user_id", $"event_id", $"event_type", $"valid_from".as("ts"))
-            .unionAll(batch.select($"user_id", $"event_id", $"event_type", $"ts"))
-          val kept = slice
-            .withColumn("prev_type", lag($"event_type", 1).over(w))
-            .filter($"prev_type".isNull || $"prev_type" =!= $"event_type")
-          val withTo = kept.withColumn("valid_to", lead($"ts", 1).over(w))
-            .localCheckpoint(true) // two sinks, one computation
-          // closed is append-only and immutable: write it at the plan's
-          // own partitioning (Sizing.tableParts-sized) — at 100 TB this is a
-          // partitioned fact append, and a burst batch closing many
-          // users must not serialize through one task (r18 verdict)
-          withTo.filter($"valid_to".isNotNull)
-            .select($"user_id", $"event_id", $"event_type",
-              $"ts".as("valid_from"), $"valid_to")
-            .write.mode("append").parquet(closedDir)
-          // the open STATE stays single-file: user-sized, re-read and
-          // rewritten every batch — small-file sprawl is pure cost
-          val nextOpen =
-            if (openRef.get() == s"$openDir/v0") s"$openDir/v1" else s"$openDir/v0"
-          withTo.filter($"valid_to".isNull)
-            .select($"user_id", $"event_id", $"event_type", $"ts".as("valid_from"))
-            .unionAll(open.join(users, Seq("user_id"), "left_anti"))
-            .coalesce(1).write.mode("overwrite").parquet(nextOpen)
-          openRef.set(nextOpen)
-          withTo.unpersist()
-          ()
-        }
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); s.conf.set(partsKey, prevParts) }
-    // no batch fired → both state sets are empty; land the empty open
-    // so the final read has a directory (closed/ is created by the
-    // first batch's append otherwise)
-    if (openRef.get() == null) {
-      emptyOpen.coalesce(1).write.mode("overwrite").parquet(s"$openDir/v0")
-      openRef.set(s"$openDir/v0")
+    // the per-batch merge windows shuffle state-sized frames, sized to
+    // the input like every other streaming op
+    Streams.drain(s, "ev_stream_scd2", stream, Sizing.tableParts(s, d, "events")) {
+      (batch, _) =>
+        val users = batch.select($"user_id").distinct()
+        // schema passed explicitly — no footer-inference job per batch
+        val open = Option(openRef.get()).map(p => s.read.schema(
+          "user_id LONG, event_id LONG, event_type STRING, valid_from TIMESTAMP")
+          .parquet(p)).getOrElse(emptyOpen)
+        val slice = open.join(users, Seq("user_id"), "left_semi")
+          .select($"user_id", $"event_id", $"event_type", $"valid_from".as("ts"))
+          .unionAll(batch.select($"user_id", $"event_id", $"event_type", $"ts"))
+        val kept = slice
+          .withColumn("prev_type", lag($"event_type", 1).over(w))
+          .filter($"prev_type".isNull || $"prev_type" =!= $"event_type")
+        val withTo = kept.withColumn("valid_to", lead($"ts", 1).over(w))
+          .localCheckpoint(true) // two sinks, one computation
+        // closed is append-only and immutable: write it at the plan's
+        // own partitioning (Sizing.tableParts-sized) — at 100 TB this is a
+        // partitioned fact append, and a burst batch closing many
+        // users must not serialize through one task (r18 verdict)
+        withTo.filter($"valid_to".isNotNull)
+          .select($"user_id", $"event_id", $"event_type",
+            $"ts".as("valid_from"), $"valid_to")
+          .write.mode("append").parquet(closedDir)
+        // the open STATE stays single-file: user-sized, re-read and
+        // rewritten every batch — small-file sprawl is pure cost
+        val nextOpen =
+          if (openRef.get() == s"$openDir/v0") s"$openDir/v1" else s"$openDir/v0"
+        withTo.filter($"valid_to".isNull)
+          .select($"user_id", $"event_id", $"event_type", $"ts".as("valid_from"))
+          .unionAll(open.join(users, Seq("user_id"), "left_anti"))
+          .coalesce(1).write.mode("overwrite").parquet(nextOpen)
+        openRef.set(nextOpen)
+        withTo.unpersist()
     }
-    val closed =
-      if (fs.exists(new org.apache.hadoop.fs.Path(closedDir)))
-        s.read.parquet(closedDir)
-      else emptyOpen.withColumn("valid_to", lit(null).cast("timestamp"))
-    closed.withColumn("is_current", lit(0L))
+    s.read.parquet(closedDir).withColumn("is_current", lit(0L))
       .unionByName(s.read.parquet(openRef.get())
         .withColumn("valid_to", lit(null).cast("timestamp"))
         .withColumn("is_current", lit(1L)))
@@ -554,13 +502,6 @@ object EventOps {
   }
   /** Arrival mode must not change the dimension — batch parity. */
   lazy val evStreamScd2Sql: String = evScd2Sql
-
-  private def scd2Dir(s: SparkSession, d: String): String = {
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    s"$root/scd2_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
   /** Sliding (hopping) 30-minute window, 15-minute hop, via Spark's
     * native `window(ts, size, slide)` — the generator expands each
@@ -600,7 +541,7 @@ object EventOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "30 minutes", "15 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
+    Streams.toTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n")
       .orderBy($"w_start", $"event_type")
   }
@@ -798,7 +739,7 @@ object EventOps {
         ($"value" > $"thr_value" ||
           ($"value" === $"thr_value" && $"event_id" <= $"thr_eid")))
       .select($"event_type", $"event_id", $"user_id")
-    val t = runToTable(s, flagged, "graft_anom_" + math.abs(d.hashCode),
+    val t = Streams.toTable(s, flagged, "graft_anom_" + math.abs(d.hashCode),
       "append", Sizing.tableParts(s, d, "events"))
     t.orderBy($"event_type", $"event_id")
   }
@@ -953,7 +894,7 @@ object EventOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "15 minutes").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"))
-    val t = runToTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
+    val t = Streams.toTable(s, stream, name, "complete", Sizing.tableParts(s, d, "events"))
       .select($"w.start".as("w_start"), $"event_type", $"n")
     val w = Window.partitionBy($"w_start").orderBy($"n".desc, $"event_type")
     t.withColumn("rnk", row_number().over(w).cast("long"))

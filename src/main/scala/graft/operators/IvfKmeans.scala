@@ -80,8 +80,6 @@ object IvfKmeans {
     * assignments to every IVF op. */
   private def centroidPath(s: SparkSession, d: String, tag: String,
       fpTable: String = "embeddings"): String = {
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
     val fingerprint =
       try {
         val p = new org.apache.hadoop.fs.Path(s"$d/$fpTable.parquet")
@@ -90,9 +88,7 @@ object IvfKmeans {
           .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
           .mkString("|")
       } catch { case scala.util.control.NonFatal(_) => "nofp" }
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d#$fingerprint".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"$root/centroids_${tag}_$key"
+    scratch(s, s"centroids_$tag", s"$d#$fingerprint")
   }
 
   /** Fitting kmeans is the whole cold cost of the IVF ops (round-12

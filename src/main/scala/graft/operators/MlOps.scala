@@ -111,13 +111,10 @@ object MlOps {
     val cdf = IvfKmeans.centroidFrame(s, cents)
     val e = IvfKmeans.withV(s, d).cache()
 
-    // Index root comes from config so a cluster deployment points it at
-    // shared storage (HDFS/S3 URI); the java.io.tmpdir default is only
-    // correct for local[k]. All I/O below goes through the Hadoop FS
-    // API, so any supported scheme works unchanged.
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    val dir = s"$root/ivf_${java.util.UUID.randomUUID}"
+    // Index under the scratch root (Tables.scratch: shared storage on a
+    // cluster). All I/O below goes through the Hadoop FS API, so any
+    // supported scheme works unchanged.
+    val dir = scratch(s, "ivf", java.util.UUID.randomUUID.toString)
     e.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
@@ -630,9 +627,7 @@ object MlOps {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
-    val root = s.conf.getOption("spark.graft.indexRoot")
-      .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_ivf")
-    val dir = s"$root/ivfbal_${java.util.UUID.randomUUID}"
+    val dir = scratch(s, "ivfbal", java.util.UUID.randomUUID.toString)
     IvfKmeans.withV(s, d)
       .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Sizing
+import graft.{Sizing, Streams}
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -352,7 +352,7 @@ object MultimodalOps {
       .groupBy($"content_sha")
       .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_copies"),
         min($"n_bytes").as("n_bytes"))
-    val t = EventOps.runToTable(s, admitted,
+    val t = Streams.toTable(s, admitted,
       "graft_mmingest_" + math.abs(d.hashCode), "complete",
       Sizing.tableParts(s, d, "documents"))
     t.select($"content_sha", $"keep_id", $"n_copies", $"n_bytes")

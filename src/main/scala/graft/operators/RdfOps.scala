@@ -1706,7 +1706,7 @@ object RdfOps {
   /** Persistence round-trip (reference S4+S5, graph.rs:54-222,630-695):
     * write predicate-partitioned parquet, read it back, prove identity. */
   def persistRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_persist").toString
+    val dir = scratch(s, "persist_roundtrip", d)
     tripleView(s, d).write.mode("overwrite").partitionBy("p").parquet(dir)
     val back = s.read.parquet(dir).select("s", "p", "o")
     sorted(back)

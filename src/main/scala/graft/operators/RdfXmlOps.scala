@@ -76,7 +76,7 @@ object RdfXmlOps {
     import s.implicits._
     val view = RdfOps.quadView(s, d)
     val ds = RdfOps.namedQuads(view)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nq").toString
+    val tmp = graft.Tables.scratch(s, "nq_roundtrip", d)
     graft.rdf.NQuads.write(ds, tmp)
     graft.rdf.NQuads.read(s, tmp).toDF()
       .select($"g.value".as("g"), $"s.value".as("s"),
@@ -95,7 +95,7 @@ object RdfXmlOps {
     import s.implicits._
     val view = RdfOps.quadView(s, d)
     val ds = RdfOps.namedQuads(view)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_trig").toString
+    val tmp = graft.Tables.scratch(s, "trig_roundtrip", d)
     graft.rdf.Turtle.writeTriG(ds, tmp)
     graft.rdf.Turtle.readTriG(s, tmp, exts = Seq(".txt")).toDF()
       .select($"g.value".as("g"), $"s.value".as("s"),
@@ -110,7 +110,7 @@ object RdfXmlOps {
     import s.implicits._
     val view = RdfOps.tripleView(s, d)
     val ds = RdfOps.namedTriples(view)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+    val tmp = graft.Tables.scratch(s, "ttl_roundtrip", d)
     graft.rdf.Turtle.write(ds, tmp)
     graft.rdf.Turtle.read(s, tmp).toDF()
       .select($"s.value".as("s"), $"p.value".as("p"), $"o.value".as("o"))
@@ -121,7 +121,7 @@ object RdfXmlOps {
     import s.implicits._
     val view = RdfOps.tripleView(s, d)
     val ds = RdfOps.namedTriples(view)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nt").toString
+    val tmp = graft.Tables.scratch(s, "nt_roundtrip", d)
     graft.rdf.NTriples.write(ds, tmp)
     graft.rdf.NTriples.read(s, tmp).toDF()
       .select($"s.value".as("s"), $"p.value".as("p"), $"o.value".as("o"))

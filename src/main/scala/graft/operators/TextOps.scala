@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Sizing
+import graft.{Sizing, Streams}
 import graft.Tables._
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1064,44 +1064,18 @@ object TextOps {
     val (_, sc, dict) = uniFit(s, d)
     dict.unpersist()
     val seg = uniViterbi(sc)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_unisink").toString
-    // size the per-batch rollup shuffle to the input, not the batch
-    // default (the docStreamQualityNb posture; set before start)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(partsKey)
-    s.conf.set(partsKey,
-      Sizing.tableParts(s, d, "documents").toString)
-    val served = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = graft.Tables.streamTable(s, d, "documents").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        served.incrementAndGet()
-        val wds = batch.filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-          .filter(length(col("word")) >= 1)
-        val vocabB = wds.select(col("word")).distinct()
-          .withColumn("seg", seg)
-          .select(col("word"), col("seg").getField("np").as("n_syms"),
-            col("seg").getField("path").as("wenc"))
-        uniDocRollup(wds.join(vocabB, "word"))
-          .write.mode("append").parquet(tmp)
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); s.conf.set(partsKey, prevParts) }
-    // fail fast with a pointed message rather than the opaque
-    // schema-inference error parquet-reading an empty sink dir throws
-    // when the streaming source matched no files (the dedup_stream_near
-    // / doc_rag_stream guard)
-    require(served.get() > 0L,
-      s"text_stream_unigram: no micro-batch fired — streaming source at " +
-        s"$d/documents.parquet matched no files")
-    // landed files ARE the output at scale — register for JVM-exit
-    // cleanup rather than deleting (the docStreamQuality contract)
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    s.read.parquet(tmp).orderBy($"doc_id")
+    Streams.land(s, "text_stream_unigram", d, streamTable(s, d, "documents"),
+        Sizing.tableParts(s, d, "documents")) { batch =>
+      val wds = batch.filter(col("text").isNotNull)
+        .select(col("doc_id"),
+          posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
+        .filter(length(col("word")) >= 1)
+      val vocabB = wds.select(col("word")).distinct()
+        .withColumn("seg", seg)
+        .select(col("word"), col("seg").getField("np").as("n_syms"),
+          col("seg").getField("path").as("wenc"))
+      uniDocRollup(wds.join(vocabB, "word"))
+    }.orderBy($"doc_id")
   }
 
   /** Per-document unigram length (doc_id, n_words, n_uni) from the

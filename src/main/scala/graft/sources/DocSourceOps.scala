@@ -38,7 +38,7 @@ object DocSourceOps {
       writeOpts: Map[String, String] = Map.empty,
       readOpts: Map[String, String] = Map.empty): DataFrame = {
     val docs = documents(s, d).select("doc_id", "source", "text")
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$fmt").toString
+    val tmp = scratch(s, s"${fmt}_roundtrip", d)
     docs.write.mode("overwrite").options(writeOpts).format(fmt).save(tmp)
     val back = s.read.schema(docs.schema).options(readOpts).format(fmt).load(tmp)
     fingerprint(back)

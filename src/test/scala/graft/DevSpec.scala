@@ -21,7 +21,7 @@ class DevSpec extends SparkSpec {
 
   test("a query that throws is reported with its exception, never timed or counted in total") {
     // q1_agg reads lineitem only; q5_multijoin also needs the tables this dir lacks
-    val dir = Files.createTempDirectory("graft_bench")
+    val dir = Paths.get(tempDir("graft_bench"))
     Files.copy(Paths.get(s"$sf0001/lineitem.parquet"), dir.resolve("lineitem.parquet"))
     val (t, log) = withStderr(Bench.time(spark, dir.toString, Seq("q1_agg", "q5_multijoin"), 2))
     assert(t.passed.map(_.name) == Seq("q1_agg"))
@@ -41,7 +41,7 @@ class DevSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      val out = Files.createTempDirectory("graft_verify").toString
+      val out = tempDir("graft_verify")
       val unknown = "unknown queries: no_such_query"
       Seq[(() => Unit, String)](
         (() => Bench.main(Array("q1_agg", "no_such_query"))) -> unknown,

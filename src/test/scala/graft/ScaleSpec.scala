@@ -41,7 +41,7 @@ class ScaleSpec extends SparkSpec {
     import spark.implicits._
     def t(s: String, p: String, o: String) =
       Triple(RdfTerm.named(s), RdfTerm.named(p), RdfTerm.named(o))
-    val dir = java.nio.file.Files.createTempDirectory("prune").toString
+    val dir = tempDir("prune")
     TripleStore.fromTriples(spark,
       Seq(t("a", "p1", "b"), t("a", "p2", "c"), t("b", "p1", "c"))).persist(dir)
     val preds = spark.read.parquet(s"$dir/predicates")
@@ -199,7 +199,7 @@ class ScaleSpec extends SparkSpec {
     // miniature stand-in for the sim_ann_ivf_index layout: the pin is
     // on the SCAN SHAPE — an isin() over list_id must become a
     // partition filter, never a full read + post-filter
-    val dir = java.nio.file.Files.createTempDirectory("ivf_prune").toString
+    val dir = tempDir("ivf_prune")
     (0 until 64).map(i => (i.toLong, i % 16)).toDF("vec_id", "list_id")
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
     val probed = spark.read.parquet(dir).filter($"list_id".isin(3, 7))
@@ -424,7 +424,7 @@ class ScaleSpec extends SparkSpec {
     // NgramDfCap ALL shingles are dropped and the join emits nothing,
     // where the uncapped join would emit ~k²/2 pairs.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dfcap").toString
+    val dir = tempDir("dfcap")
     val nDocs = (operators.DedupOps.NgramDfCap + 12).toInt
     (0 until nDocs).map(i => (i.toLong, "boiler plate text common to all"))
       .toDF("doc_id", "text")
@@ -440,7 +440,7 @@ class ScaleSpec extends SparkSpec {
     // bucket is over-cap and the join emits nothing (exact dedup is
     // the pass that handles an all-identical corpus).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("simcap").toString
+    val dir = tempDir("simcap")
     val nDocs = (operators.DedupOps.SimhashBandCap + 12).toInt
     (0 until nDocs).map(i => (i.toLong, "boiler plate text common to all"))
       .toDF("doc_id", "text")
@@ -457,7 +457,7 @@ class ScaleSpec extends SparkSpec {
     // otherwise emit k²/2 pairs from the span self-join. With every
     // span over-cap, the join must emit nothing.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("spancap").toString
+    val dir = tempDir("spancap")
     val nDocs = (operators.DedupOps.SpanDfCap + 12).toInt
     val boiler = (1 to operators.DedupOps.SpanLen).map(i => s"w$i").mkString(" ")
     (0 until nDocs).map(i => (i.toLong, boiler))
@@ -473,7 +473,7 @@ class ScaleSpec extends SparkSpec {
     // whole corpus puts every doc in one prefix-key group — k²/2 pairs
     // without the cap, zero with it (every group is over-cap).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prefcap").toString
+    val dir = tempDir("prefcap")
     val nDocs = (operators.DedupOps.PrefixDfCap + 12).toInt
     (0 until nDocs).map(i => (i.toLong, s"same four token opening then unique tail $i"))
       .toDF("doc_id", "text")
@@ -518,7 +518,7 @@ class ScaleSpec extends SparkSpec {
     // stub width/height, same byte bucket) lands in ONE perceptual
     // bucket — quadratic pairs without the cap, zero with it
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mmnearcap").toString
+    val dir = tempDir("mmnearcap")
     val nDocs = (operators.MultimodalOps.MmNearDfCap + 12).toInt
     (0 until nDocs).map(i => (i.toLong, "x" * 100, 100L))
       .toDF("doc_id", "text", "n_chars")
@@ -646,7 +646,7 @@ class ScaleSpec extends SparkSpec {
 
   test("doc_rag_index_append appends only to touched list partitions, base files byte-stable") {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("rag_app_pin").toString
+    val root = tempDir("rag_app_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       def listing(dir: String): Map[String, Long] = {
@@ -686,7 +686,7 @@ class ScaleSpec extends SparkSpec {
   test("doc_rag_index_compact rewrites only touched lists, one file each, rows intact") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("rag_cmp_pin").toString
+    val root = tempDir("rag_cmp_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       def listing(dir: String): Map[String, Long] = {
@@ -729,7 +729,7 @@ class ScaleSpec extends SparkSpec {
   test("doc_rag_index_delete rewrites only victim lists; untouched lists byte-stable; victims gone") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("rag_del_pin").toString
+    val root = tempDir("rag_del_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       def listing(dir: String): Map[String, Long] = {
@@ -763,7 +763,7 @@ class ScaleSpec extends SparkSpec {
   test("sim_ann_ivf_balance splits only over-cap lists; untouched list dirs byte-stable") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ivf_bal_pin").toString
+    val root = tempDir("ivf_bal_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       def listing(dir: String): Map[String, Long] = {
@@ -818,7 +818,7 @@ class ScaleSpec extends SparkSpec {
     // corpus-keyed dir, then probes through ragProbedIndexRead — pin
     // the scan shape of that EXACT read path: the probed isin() must
     // become a partition filter (directory pruning), never a full scan
-    val root = java.nio.file.Files.createTempDirectory("rag_idx_pin").toString
+    val root = tempDir("rag_idx_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       operators.CurationOps.docRagIndex(spark, sf0001).collect()
@@ -886,7 +886,7 @@ class ScaleSpec extends SparkSpec {
     // serves through ragProbedIndexRead + the lang data filter — pin
     // BOTH halves of the claimed scan shape on that exact read path:
     // probed lists prune directories, the predicate reaches parquet
-    val root = java.nio.file.Files.createTempDirectory("rag_lidx_pin").toString
+    val root = tempDir("rag_lidx_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     try {
       operators.CurationOps.docRagIndexFiltered(spark, sf0001).collect()

@@ -25,18 +25,13 @@ class SizingSpec extends SparkSpec {
     df.queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty
 
   test("a nested-directory table sizes to the sum of its files") {
-    val root = Files.createTempDirectory("graft_sizing")
+    val root = Paths.get(tempDir("graft_sizing"))
     val deep = Files.createDirectories(root.resolve("a/b"))
     Files.copy(Paths.get(docs), root.resolve("a/part-0.parquet"))
     Files.copy(Paths.get(docs), deep.resolve("part-1.parquet"))
-    try {
-      assert(Sizing.pathBytes(spark, root.toString) == Right(2 * docBytes))
-      val df = spark.read.option("recursiveFileLookup", "true").parquet(root.toString)
-      assert(Sizing.frameBytes(df) == Right(2 * docBytes))
-    } finally {
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.toList.reverse.foreach(Files.delete) finally walk.close()
-    }
+    assert(Sizing.pathBytes(spark, root.toString) == Right(2 * docBytes))
+    val df = spark.read.option("recursiveFileLookup", "true").parquet(root.toString)
+    assert(Sizing.frameBytes(df) == Right(2 * docBytes))
   }
 
   test("a failed probe takes the at-scale answer and logs it") {
@@ -90,24 +85,37 @@ class SizingSpec extends SparkSpec {
     assert(Sizing.parts(spark, "graph edges", Long.MaxValue, 1000000L) == par)
   }
 
-  test("no size probe or env knob outside Sizing in operators, store, query and Tables") {
+  /** `file:line: name` of each `banned` pattern hit in the query-path
+    * sources: operators, sources, store, query and Tables. */
+  private def queryPathHits(banned: (String, scala.util.matching.Regex)*): Seq[String] = {
     val main = Paths.get("src/main/scala/graft")
-    val files = Seq("operators", "store", "query").flatMap { sub =>
+    val files = Seq("operators", "sources", "store", "query").flatMap { sub =>
       val walk = Files.walk(main.resolve(sub))
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     } :+ main.resolve("Tables.scala")
     assert(files.size > 10, s"source tree not found from ${Paths.get("").toAbsolutePath}")
-    val banned = Seq(
-      "java.io.File" -> """\bjava\.io\.File\b""".r,
-      ".rdd.getNumPartitions" -> """\.rdd\.getNumPartitions""".r,
-      "getContentSummary" -> """getContentSummary""".r,
-      "sys.env" -> """\bsys\.env\b""".r)
-    val hits = for {
+    for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       (name, re) <- banned if re.findFirstIn(line).nonEmpty
     } yield s"$f:${i + 1}: $name"
+  }
+
+  test("no size probe or env knob outside Sizing in operators, store, query and Tables") {
+    val hits = queryPathHits(
+      "java.io.File" -> """\bjava\.io\.File\b""".r,
+      ".rdd.getNumPartitions" -> """\.rdd\.getNumPartitions""".r,
+      "getContentSummary" -> """getContentSummary""".r,
+      "sys.env" -> """\bsys\.env\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("streams start only in graft.Streams and scratch dirs come from Tables.scratch") {
+    val hits = queryPathHits(
+      "writeStream" -> """\bwriteStream\b""".r,
+      ".foreachBatch" -> """\.foreachBatch\b""".r,
+      "createTempDirectory" -> """\bcreateTempDirectory\b""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -22,6 +24,25 @@ trait SparkSpec extends AnyFunSuite {
   /** Cancels the calling test unless the reference dumps are present. */
   def assumeReferenceCorpus(): Unit =
     assume(hasReferenceCorpus, s"reference corpus absent: $referenceModels (FIXTURES.md §1)")
+
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory, deleted with everything in it when the
+    * calling test ends (`deleteOnExit` cannot remove a non-empty one). */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    testDirs.add(d)
+    d.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally Iterator.continually(testDirs.poll()).takeWhile(_ != null)
+      .filter(Files.exists(_)).foreach { d =>
+        val walk = Files.walk(d)
+        try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+        finally walk.close()
+      }
 
   /** `body`'s result and every stderr line it printed. */
   def withStderr[T](body: => T): (T, Seq[String]) = {

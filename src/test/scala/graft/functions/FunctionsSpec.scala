@@ -217,7 +217,7 @@ class FunctionsSpec extends SparkSpec {
     // through a real scan: over a Seq-literal LocalRelation the
     // optimizer's ConvertToLocalRelation folds the projection with
     // INTERPRETED eval and codegen never runs
-    val dir = java.nio.file.Files.createTempDirectory("kernels").toString
+    val dir = tempDir("kernels")
     def viaScan(write: String => Unit, sel: String): org.apache.spark.sql.Row = {
       write(dir)
       val df = spark.read.parquet(dir).selectExpr(sel)
@@ -305,7 +305,7 @@ class FunctionsSpec extends SparkSpec {
     // Seq-literal projection with INTERPRETED eval — see the sq_dist
     // test) so the generated path actually runs, and pinned INSIDE a
     // whole-stage-codegen span via the kernel call in the generated src
-    val dir = java.nio.file.Files.createTempDirectory("dedup_kernels").toString
+    val dir = tempDir("dedup_kernels")
     def viaScan(write: String => Unit, sel: String): org.apache.spark.sql.Row = {
       write(dir)
       val df = spark.read.parquet(dir).selectExpr(sel)

@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
 class EdgeCaseSpec extends SparkSpec {
 
   /** A corpus of only edge cases, with the full 5-column document
-    * schema the loaders guarantee. */
-  private lazy val dir: String = {
+    * schema the loaders guarantee; written per test into a directory
+    * that dies with the test. */
+  private def edgeCorpus(): String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("edge").toString
+    val d = tempDir("edge")
     val big = (1 to 5000).map(i => s"tok$i").mkString(" ")
     Seq(
       (0L, "", "en", "src0", 0L),                            // empty text
@@ -50,6 +51,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("text + curation ops survive the edge corpus without nulls or crashes") {
+    val dir = edgeCorpus()
     Seq[(String, org.apache.spark.sql.DataFrame)](
       "text_stats" -> TextOps.textStats(spark, dir),
       "text_quality" -> TextOps.textQuality(spark, dir),
@@ -64,6 +66,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("dedup family survives the edge corpus and finds the planted cross-source dup") {
+    val dir = edgeCorpus()
     import spark.implicits._
     Seq[(String, org.apache.spark.sql.DataFrame)](
       "dedup_exact" -> DedupOps.dedupExact(spark, dir),
@@ -88,6 +91,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("round-17 ops survive the edge corpus") {
+    val dir = edgeCorpus()
     // single-class gopher labels, empty-text query doc, unicode
     // tokens, a 5000-token outlier, NULL text/embedding rows — none
     // may crash or emit nulls
@@ -102,6 +106,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("round-15 ops survive the edge corpus") {
+    val dir = edgeCorpus()
     import spark.implicits._
     Seq[(String, org.apache.spark.sql.DataFrame)](
       "text_repetition_remove" -> TextOps.textRepetitionRemove(spark, dir),
@@ -129,6 +134,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("degenerate docs fall out of the admissible sets, never crash them") {
+    val dir = edgeCorpus()
     import spark.implicits._
     // empty + 1-token docs have no bigrams → excluded from LM coverage
     val cov = TextOps.textLmCoverage(spark, dir)

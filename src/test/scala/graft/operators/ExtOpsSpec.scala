@@ -106,7 +106,7 @@ class ExtOpsSpec extends SparkSpec {
     // A = a distinctive paragraph; B = A plus a long unrelated tail.
     // Containment(A in B) = 1.0 but Jaccard is far below 1/2 — the
     // exact case the asymmetric op exists for.
-    val dir = java.nio.file.Files.createTempDirectory("contain").toString
+    val dir = tempDir("contain")
     val para = (1 to 24).map(i => s"para$i").mkString(" ")
     val tail = (1 to 300).map(i => s"tail$i").mkString(" ")
     Seq((1L, para), (2L, s"$para $tail"))

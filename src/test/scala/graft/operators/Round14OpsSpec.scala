@@ -280,7 +280,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(out.filter($"n_windows" =!= $"n_grams" - (TextOps.WinnowW - 1)).count() == 0)
     // winnowing's guarantee: identical docs produce identical counts —
     // check via two docs built equal in a temp corpus
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = tempDir("winnow")
     val txt = (1 to 40).map(i => s"tok${i % 13}").mkString(" ")
     Seq((1L, txt), (2L, txt), (3L, "a b")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

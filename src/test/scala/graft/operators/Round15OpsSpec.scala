@@ -81,7 +81,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("repetition removal: witness doc cleans, repetition-free docs pass through") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("reprm").toString
+    val dir = tempDir("reprm")
     Seq(
       // doc 0: "a b c" repeats → second occurrence excised
       (0L, "a b c x y z a b c"),
@@ -108,7 +108,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("bpe train: greedy overlap parity, chained merges, early exhaustion") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = tempDir("bpe")
     // three "aaaa" occurrences + one "ab": round 1 must merge (a,a)
     // with weight 9 (3 overlapping pairs × 3 occurrences, greedy takes
     // even offsets), round 2 chains onto the MERGED symbol ((aa,aa) →

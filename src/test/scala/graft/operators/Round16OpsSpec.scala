@@ -9,7 +9,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("bpe encode: early exhaustion and double-space words keep the vocab sound") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_enc").toString
+    val dir = tempDir("bpe_enc")
     // merges exhaust after round 2 ((a,b) then (c,d) leave only
     // 1-symbol words, rounds 3-4 find nothing); doc 2 carries a double
     // space whose empty "word" must be excluded from the dictionary
@@ -30,7 +30,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("bpe depth is the spark.graft.bpeMerges conf (default BpeMerges)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_depth").toString
+    val dir = tempDir("bpe_depth")
     // long uniform words so every depth finds a best pair to merge
     Seq((0L, "aaaaaaaa bbbbbbbb aaaaaaaa"), (1L, "aaaaaaaa cccc"))
       .toDF("doc_id", "text")
@@ -71,7 +71,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("compact sink: per-partition files drop to ceil(rows/target), content intact") {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("compact_pin").toString
+    val root = tempDir("compact_pin")
     spark.conf.set("spark.graft.indexRoot", root)
     spark.conf.set("spark.graft.compactMaxRows", "3")
     try {

@@ -14,7 +14,7 @@ class Round17OpsSpec extends SparkSpec {
     * as opposed to the driver testdata's single-file layout. */
   private def writeDirLayoutDocs(withNullSource: Boolean): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r17docs").toString
+    val dir = tempDir("r17docs")
     val words = Seq("alpha", "beta", "gamma", "delta", "omega", "kappa")
     val docs = (0L until 40L).map { i =>
       val text = (0 until 24)
@@ -289,7 +289,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("span scrub: shared boilerplate excised; full scrub hashes the empty string") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("scrub").toString
+    val dir = tempDir("scrub")
     val boiler = (1 to 12).map(i => s"b$i").mkString(" ") // one 12-token span
     // docs 0-2 are the bare span (fully scrubbed once shared by >2
     // docs); doc 3 embeds it in unique text; doc 4 is clean

@@ -93,7 +93,7 @@ class Round18OpsSpec extends SparkSpec {
     // than any piece, the encode separators themselves ('|'), non-ASCII,
     // and a single-char corpus slice — the shapes ADVICE rounds keep
     // finding at family edges
-    val dir = java.nio.file.Files.createTempDirectory("r18uni").toString
+    val dir = tempDir("r18uni")
     val docs = Seq(
       (0L, null.asInstanceOf[String], "src0"),
       (1L, "", "src0"),
@@ -130,7 +130,7 @@ class Round18OpsSpec extends SparkSpec {
 
   test("unigram EM depth is the spark.graft.uniRounds conf (default UniRounds)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("uni_depth").toString
+    val dir = tempDir("uni_depth")
     Seq((0L, "abab abab baba"), (1L, "abab cccc abab"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

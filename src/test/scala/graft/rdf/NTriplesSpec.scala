@@ -57,7 +57,7 @@ class NTriplesSpec extends SparkSpec {
   }
 
   test("readCounted surfaces silently-dropped malformed lines") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nt_count")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_nt_count"))
     val f = tmp.resolve("part.nt")
     java.nio.file.Files.write(f, java.util.Arrays.asList(
       "<http://g.test/s> <http://g.test/p> _:ok.",
@@ -72,7 +72,7 @@ class NTriplesSpec extends SparkSpec {
 
   test("distributed write/read round-trips through spark.read.text") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nt_spec").toString
+    val tmp = tempDir("graft_nt_spec")
     val ds = spark.createDataset(nasty)
     NTriples.write(ds, tmp)
     val back = NTriples.read(spark, tmp).collect().toSet
@@ -82,7 +82,7 @@ class NTriplesSpec extends SparkSpec {
   test("n-quads: graph labels parse, default-graph lines stay, round-trip holds") {
     import spark.implicits._
     // named graph, blank graph label, default graph, junk
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nq_spec")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_nq_spec"))
     val f = tmp.resolve("q.nq")
     java.nio.file.Files.write(f, java.util.Arrays.asList(
       "<http://g.test/s> <http://g.test/p> \"v\" <http://g.test/G1> .",
@@ -96,7 +96,7 @@ class NTriplesSpec extends SparkSpec {
     assert(byO("http://g.test/o").contains(RdfTerm.blank("g2")))
     assert(byO("dflt").isEmpty)
     // write/read round-trip incl. the default-graph quad
-    val out = java.nio.file.Files.createTempDirectory("graft_nq_rt").toString
+    val out = tempDir("graft_nq_rt")
     NQuads.write(spark.createDataset(qs.toSeq), out)
     assert(NQuads.read(spark, out).collect().toSet == qs.toSet)
   }

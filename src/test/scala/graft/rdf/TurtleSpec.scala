@@ -117,7 +117,7 @@ class TurtleSpec extends SparkSpec {
       Quad(None,
         RdfTerm.named("http://g.test/b"), RdfTerm.named("http://g.test/q"),
         RdfTerm.typedLit("3", "http://www.w3.org/2001/XMLSchema#int")))
-    val dir = java.nio.file.Files.createTempDirectory("trig_rt").toString
+    val dir = tempDir("trig_rt")
     Turtle.writeTriG(quads.toDS(), dir)
     assert(Turtle.readTriG(spark, dir, exts = Seq(".txt")).collect().toSet == quads.toSet)
   }
@@ -135,7 +135,7 @@ class TurtleSpec extends SparkSpec {
         RdfTerm.langLit("hej", "sv")),
       Triple(RdfTerm.blank("z"), RdfTerm.named("http://g.test/p3"),
         RdfTerm.typedLit("7", "http://www.w3.org/2001/XMLSchema#int")))
-    val dir = java.nio.file.Files.createTempDirectory("ttl_rt").toString
+    val dir = tempDir("ttl_rt")
     Turtle.write(triples.toDS(), dir)
     // the a-subject block must actually use the ',' object list
     val text = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".txt"))

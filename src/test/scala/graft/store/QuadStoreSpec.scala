@@ -72,7 +72,7 @@ class QuadStoreSpec extends SparkSpec {
   }
 
   test("load reads an NT document into a named graph; silent load of a bad path no-ops") {
-    val nt = java.nio.file.Files.createTempFile("quadstore_load", ".nt")
+    val nt = java.nio.file.Paths.get(tempDir("quadstore_load"), "load.nt")
     java.nio.file.Files.write(nt, java.util.Arrays.asList(
       "<http://g.test/s> <http://g.test/p> <http://g.test/o> ."))
     val loaded = store.update(s"load <${nt.toUri}> into graph lg")
@@ -86,7 +86,7 @@ class QuadStoreSpec extends SparkSpec {
     // SILENT also swallows CONTENT errors, which parse lazily on
     // executors — the op must validate eagerly, not throw at the next
     // action (SPARQL 1.1 §3.1.4; review r9 #4)
-    val bad = java.nio.file.Files.createTempFile("quadstore_bad", ".ttl")
+    val bad = java.nio.file.Paths.get(tempDir("quadstore_bad"), "bad.ttl")
     java.nio.file.Files.write(bad, java.util.Arrays.asList(
       "this is not turtle @@@"))
     val silentBad = store.update(s"load silent <${bad.toUri}> into graph lg")

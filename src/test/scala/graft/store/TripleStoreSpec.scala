@@ -53,7 +53,7 @@ class TripleStoreSpec extends SparkSpec {
   }
 
   test("persist → fromBackup round-trips the triple set") {
-    val dir = java.nio.file.Files.createTempDirectory("ts_persist").toString
+    val dir = tempDir("ts_persist")
     store.persist(dir)
     val back = TripleStore.fromBackup(spark, dir)
     assert(back.triples.collect().toSet == store.triples.collect().toSet)
@@ -69,7 +69,7 @@ class TripleStoreSpec extends SparkSpec {
     // never persisted → no location, no-arg persist errors (Error::NoPersistLocation)
     assert(st.persistLocation.isEmpty)
     assertThrows[IllegalStateException](st.persist())
-    val dir = java.nio.file.Files.createTempDirectory("ts_loc").toString
+    val dir = tempDir("ts_loc")
     st.persist(dir)
     assert(st.persistLocation.contains(dir))
     st.persist() // re-persist in place succeeds
@@ -87,12 +87,12 @@ class TripleStoreSpec extends SparkSpec {
   }
 
   test("fromBackup validates the layout before reading (graph.rs:167-184)") {
-    val missing = java.nio.file.Files.createTempDirectory("ts_bad").toString
+    val missing = tempDir("ts_bad")
     assertThrows[IllegalArgumentException]( // empty dir: no parts, no marker
       TripleStore.fromBackup(spark, s"$missing/sub"))
     assertThrows[IllegalArgumentException](
       TripleStore.fromBackup(spark, missing))
-    val dir = java.nio.file.Files.createTempDirectory("ts_marker").toString
+    val dir = tempDir("ts_marker")
     store.persist(dir)
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir, TripleStore.BackupMarker))
     // marker-less but otherwise valid layout = a pre-marker backup;
@@ -134,7 +134,7 @@ class TripleStoreSpec extends SparkSpec {
     val dir = TripleStore.fromRdf(spark, s"file://$corpus")
     assert(dir.count() == TripleStore.fromRdf(spark, corpus).count())
     // Turtle shares the same listing helper
-    val tmp = java.nio.file.Files.createTempDirectory("ttl_uri").toString
+    val tmp = tempDir("ttl_uri")
     java.nio.file.Files.writeString(java.nio.file.Path.of(tmp, "a.ttl"),
       "<http://x/s> <http://x/p> <http://x/o> .")
     assert(graft.rdf.Turtle.read(spark, s"file://$tmp").count() == 1)
@@ -145,7 +145,7 @@ class TripleStoreSpec extends SparkSpec {
 
   test("corpus persists smaller than its RDF/XML source (parquet replaces K2Tree compression)") {
     val st = TripleStore.fromRdf(spark, ConferenceCorpus.dir.toString)
-    val dir = java.nio.file.Files.createTempDirectory("corpus_persist").toString
+    val dir = tempDir("corpus_persist")
     st.persist(dir)
     def duBytes(p: java.io.File): Long =
       if (p.isFile) p.length
@@ -250,7 +250,7 @@ class TripleStoreSpec extends SparkSpec {
       Triple(RdfTerm.named("s3"), RdfTerm.named("p"), RdfTerm.raw("plain")),
       Triple(RdfTerm.blank("b0"), RdfTerm.named("p"), RdfTerm.named("o")))
     val st = TripleStore.fromTriples(spark, lits)
-    val dir = java.nio.file.Files.createTempDirectory("ts_lit").toString
+    val dir = tempDir("ts_lit")
     st.persist(dir)
     assert(TripleStore.fromBackup(spark, dir).triples.collect().toSet == lits.toSet)
   }
@@ -261,7 +261,7 @@ class TripleStoreSpec extends SparkSpec {
     // the checkpoint and rewrote terms/ while triples/ kept the old ids
     val extra = t("zoe", "is", "cool")
     Seq[String => String](_ + "/", "file:" + _, "file://" + _).foreach { spell =>
-      val dir = java.nio.file.Files.createTempDirectory("ts_spell").toString
+      val dir = tempDir("ts_spell")
       TripleStore.fromTriples(spark, graph).persist(dir)
       val mutated = TripleStore.fromBackup(spark, dir).insertTriple(extra)
       mutated.persist(spell(dir))
@@ -276,8 +276,8 @@ class TripleStoreSpec extends SparkSpec {
     // in-place decision must follow what it reads, not what it remembers
     val triples = (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))
     val extra = t("zoe", "is", "cool")
-    val a = java.nio.file.Files.createTempDirectory("ts_back_a").toString
-    val b = java.nio.file.Files.createTempDirectory("ts_back_b").toString
+    val a = tempDir("ts_back_a")
+    val b = tempDir("ts_back_b")
     TripleStore.fromTriples(spark, triples).persist(a)
     val st = TripleStore.fromBackup(spark, a).insertTriple(extra)
     st.persist(b)
@@ -303,15 +303,15 @@ class TripleStoreSpec extends SparkSpec {
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       // in place: persist() to the location the store remembers
-      val a = java.nio.file.Files.createTempDirectory("ts_cut_a").toString
+      val a = tempDir("ts_cut_a")
       TripleStore.fromTriples(spark, triples).persist(a)
       val inPlace = TripleStore.fromBackup(spark, a).removePattern(None, Some(RdfTerm.named("p3")), None)
       inPlace.persist()
       assert(TripleStore.fromBackup(spark, a).triples.collect().toSet == expected)
       assert(inPlace.triples.collect().toSet == expected)
       // back to the source after the location moved elsewhere unread
-      val c = java.nio.file.Files.createTempDirectory("ts_cut_c").toString
-      val d = java.nio.file.Files.createTempDirectory("ts_cut_d").toString
+      val c = tempDir("ts_cut_c")
+      val d = tempDir("ts_cut_d")
       TripleStore.fromTriples(spark, triples).persist(c)
       val restored = TripleStore.fromBackup(spark, c)
       restored.persist(d)
@@ -328,7 +328,8 @@ class TripleStoreSpec extends SparkSpec {
   test("a failed persist releases its dictionary caches") {
     val st = TripleStore.fromTriples(spark, Seq(t("only", "in", "this-test")))
     // a regular file where the backup directory should go: the first write fails
-    val file = java.nio.file.Files.createTempFile("ts_fail", ".txt").toString
+    val file = tempDir("ts_fail") + "/file.txt"
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(file))
     spark.catalog.clearCache() // suites run one at a time in the forked JVM
     intercept[Exception](st.persist(s"$file/backup"))
     assert(spark.sharedState.cacheManager.isEmpty, "a dictionary cache outlived the failed persist")
@@ -351,7 +352,7 @@ class TripleStoreSpec extends SparkSpec {
       assert(rows.toSet == model, what)
     }
     val initial = pool.take(10).toSet
-    val dir = java.nio.file.Files.createTempDirectory("ts_delta").toString
+    val dir = tempDir("ts_delta")
     TripleStore.fromTriples(spark, initial.toSeq).persist(dir)
     var st = TripleStore.fromBackup(spark, dir)
     var model = initial
