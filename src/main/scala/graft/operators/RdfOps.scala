@@ -1653,14 +1653,18 @@ object RdfOps {
       None -> terms(view.filter($"p" === "in_nation")),
       Some("seg") -> terms(view.filter($"p" === "in_segment")),
       Some("reg") -> terms(view.filter($"p" === "in_region"))))
-    val ntPath = java.nio.file.Files.createTempFile("graft_load", ".nt")
-    java.nio.file.Files.write(ntPath, java.util.Arrays.asList(
-      "<http://g.test/x1> <http://g.test/p> <http://g.test/y1> .",
-      "<http://g.test/x2> <http://g.test/p> <http://g.test/y2> ."))
+    // the LOAD document lives under the scratch root, keyed by the
+    // corpus, and a rerun overwrites it
+    val ntPath = new org.apache.hadoop.fs.Path(scratch(s, "load_nt", d), "load.nt")
+    val fs = ntPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val doc = fs.create(ntPath, true)
+    try doc.write(("<http://g.test/x1> <http://g.test/p> <http://g.test/y1> .\n" +
+      "<http://g.test/x2> <http://g.test/p> <http://g.test/y2> .\n").getBytes("UTF-8"))
+    finally doc.close()
     val fin = base
       .update("create graph work")
       .update("insert data { graph work { GABE likes RIPPLE . RIPPLE made_by GGABI } }")
-      .update(s"load <${ntPath.toUri}> into graph work")
+      .update(s"load <${fs.makeQualified(ntPath)}> into graph work")
       .update("copy seg to snapshot")
       .update("add work to reg")
       .update("move work to archive")

@@ -2,7 +2,7 @@ package graft.store
 
 import graft.query.{GraphRef, Sparql, UpdateOp}
 import graft.rdf.Triple
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One statement of an RDF dataset: `g = None` is the default graph. */
@@ -17,130 +17,83 @@ final case class Quad(
   * dataset notion) with the standard dataset semantics its SPARQL
   * front-end implies.
   *
-  * Scale posture: every verb is one Catalyst filter/union over the
-  * quad frame — a slice predicate on `g` prunes to the touched graphs
-  * (partition the physical table by `g` and the slice is partition
-  * pruning); nothing collects data. The graph CATALOG (`graphNames`)
-  * is driver-side metadata, maintained arithmetically per verb —
-  * catalog-scale (graph count), never data-scale.
+  * The dataset is a driver-side map from graph to an immutable
+  * [[TripleStore]]. Its named keys are the graph CATALOG: a CLEARed
+  * graph maps to an empty store (SPARQL keeps it, so CREATE fails), a
+  * DROPped one has no key (CREATE succeeds again). The default graph
+  * is always a key.
+  *
+  * Scale posture: CREATE/CLEAR/DROP/COPY/MOVE only edit the map (COPY
+  * shares the source's store), and the quad-form data blocks edit one
+  * graph's driver-side delta, so neither deepens any plan however many
+  * verbs run. ADD and LOAD combine data: each stacks one
+  * `union + distinct` on the DESTINATION graph only, and every other
+  * graph passes through unshuffled. Nothing collects data.
   */
 final class QuadStore private (
     val spark: SparkSession,
-    val quads: Dataset[Quad],
-    /** Graphs known to exist: every name ever created or populated.
-      * SPARQL distinguishes an EMPTY graph (CLEARed — still listed)
-      * from an ABSENT one (DROPped — CREATE succeeds again), which a
-      * quad table alone cannot represent. */
-    val graphNames: Set[String],
-    /** Updates since the last lineage cut — see [[update]]. */
-    updateDepth: Int = 0) {
+    graphs: Map[Option[String], TripleStore]) {
 
   import spark.implicits._
 
+  /** Named graphs that exist, empty (CLEARed) ones included. */
+  def graphNames: Set[String] = graphs.keySet.flatten
+
+  /** Every graph's triples with its label as a literal `g` column. */
+  lazy val quads: Dataset[Quad] =
+    graphs.toSeq.sortBy(_._1).map { case (g, st) =>
+      st.triples.select(lit(g.orNull).cast("string").as("g"), $"s", $"p", $"o")
+    }.reduce(_ union _).as[Quad]
+
   def count(): Long = quads.count()
 
-  /** The named slice of the dataset as a plain [[TripleStore]] (for
-    * querying or the triple-form WHERE updates). */
+  /** The graph's own [[TripleStore]] (for querying or the triple-form
+    * WHERE updates); an absent graph reads as empty. */
   def graph(g: Option[String]): TripleStore =
-    TripleStore.fromDataset(
-      quads.filter(sliceCond(g.map(GraphRef.Named).getOrElse(GraphRef.Default)))
-        .select($"s", $"p", $"o").as[Triple])
+    graphs.getOrElse(g, empty)
 
   /** SPARQL 1.1 Update over the dataset. Graph-management error
     * semantics follow §3.2: non-SILENT CREATE of an existing graph,
     * or CLEAR/DROP/ADD/COPY/MOVE of an absent one, fail; SILENT
-    * versions no-op instead.
-    *
-    * Long update chains (migration scripts run dozens of verbs) grow
-    * the lazy plan linearly and its analysis cost quadratically. With
-    * `spark.graft.lineageCutEvery = N` (>0), every Nth derived store
-    * cuts lineage with a lazy localCheckpoint. Default OFF: the cut
-    * materializes the WHOLE store into unreplicated executor storage
-    * at the next action — the right trade for interactive sessions on
-    * small/medium stores, the wrong one for a 100 TB store (full copy,
-    * and executor loss then breaks recomputation, which an uncut plan
-    * recovers from via the source files). Production-scale migrations
-    * should persist() to durable parquet between batches instead. */
-  def update(u: String): QuadStore = {
-    val next = update0(u)
-    val every = spark.conf.get("spark.graft.lineageCutEvery", "0").toInt
-    if (next eq this) this
-    else if (every > 0 && updateDepth + 1 >= every)
-      new QuadStore(spark, next.quads.localCheckpoint(false),
-        next.graphNames, 0)
-    else new QuadStore(spark, next.quads, next.graphNames, updateDepth + 1)
-  }
-
-  private def update0(u: String): QuadStore = Sparql.parseUpdate(u) match {
+    * versions no-op instead. */
+  def update(u: String): QuadStore = Sparql.parseUpdate(u) match {
     case UpdateOp.InsertData(ts, g) =>
-      // driver-side list: broadcast anti-join + append, never a global
-      // distinct (same shape as TripleStore.insertTriples — inserting
-      // two rows must not shuffle the whole dataset)
-      val ins = ts.map(TripleStore.dataTriple).map(t => Quad(g, t.s, t.p, t.o))
-        .distinct.toDS().toDF()
-      val q = quads.toDF()
-      val kept = q.join(broadcast(ins),
-        q("g") <=> ins("g") && q("s") <=> ins("s") &&
-          q("p") <=> ins("p") && q("o") <=> ins("o"),
-        "left_anti")
-      new QuadStore(spark, kept.unionByName(ins).as[Quad], graphNames ++ g)
+      edit(graphs.updated(g, graph(g).insertTriples(ts.map(TripleStore.dataTriple))))
     case UpdateOp.DeleteData(ts, g) =>
-      val del = ts.map(TripleStore.dataTriple).map(t => Quad(g, t.s, t.p, t.o))
-      val q = quads.toDF()
-      val d = del.toDS().toDF()
-      // broadcast anti-join like TripleStore.removeTriples: the delete
-      // list is a driver-side Seq, so the delete stays shuffle-free
-      val kept = q.join(broadcast(d),
-        q("g") <=> d("g") && q("s") <=> d("s") && q("p") <=> d("p") && q("o") <=> d("o"),
-        "left_anti").as[Quad]
-      new QuadStore(spark, kept, graphNames)
+      graphs.get(g).fold(this)(st =>
+        edit(graphs.updated(g, st.removeTriples(ts.map(TripleStore.dataTriple)))))
 
     case UpdateOp.GraphMgmt("create", silent, GraphRef.Named(n), None) =>
-      if (graphNames.contains(n)) {
+      if (graphs.contains(Some(n))) {
         if (silent) this
         else throw new IllegalArgumentException(s"create: graph $n already exists")
-      } else new QuadStore(spark, quads, graphNames + n)
+      } else edit(graphs.updated(Some(n), empty))
 
     case UpdateOp.GraphMgmt(verb @ ("clear" | "drop"), silent, target, None) =>
       requireExists(verb, silent, target) { () =>
-        val kept = quads.filter(!sliceCond(target))
-        val names = if (verb == "clear") graphNames else target match {
-          case GraphRef.Named(n)              => graphNames - n
-          case GraphRef.AllNamed | GraphRef.All => Set.empty[String]
-          case GraphRef.Default               => graphNames // always exists
-        }
-        new QuadStore(spark, kept, names)
+        val hit = graphs.keySet.filter(k => target match {
+          case GraphRef.Named(n) => k.contains(n)
+          case GraphRef.Default  => k.isEmpty
+          case GraphRef.AllNamed => k.isDefined
+          case GraphRef.All      => true
+        })
+        // dropping the default graph empties it: it always exists
+        val (dropped, cleared) =
+          if (verb == "drop") hit.partition(_.isDefined) else (Set.empty[Option[String]], hit)
+        edit(graphs -- dropped ++ cleared.map(_ -> empty))
       }
 
     case UpdateOp.GraphMgmt(verb @ ("add" | "copy" | "move"), silent, src, Some(dst)) =>
       if (src == dst) this // §3.2.5-7: same-graph forms are no-ops
       else requireExists(verb, silent, src) { () =>
-        val srcSlice = relabel(quads.toDF().filter(sliceCond(src)), dst)
-        val base = verb match {
-          case "add"  => quads.toDF() // keep dst contents
-          case "copy" => quads.toDF().filter(!sliceCond(dst))
-          case "move" => quads.toDF().filter(!sliceCond(dst) && !sliceCond(src))
+        val (s, d) = (key(src), key(dst))
+        verb match {
+          case "add"  => edit(graphs.updated(d, merged(d, graph(s).triples)))
+          case "copy" => edit(graphs.updated(d, graph(s)))
+          case _ =>
+            val rest = if (s.isEmpty) graphs.updated(s, empty) else graphs - s
+            edit(rest.updated(d, graph(s)))
         }
-        // add can duplicate (src ∩ dst) — dedup the DESTINATION SLICE
-        // only, never the whole dataset: untouched graphs pass through
-        // the plan unshuffled. copy/move union disjoint slices of a
-        // set and need no distinct at all.
-        val result = (verb match {
-          case "add" =>
-            val others = quads.toDF().filter(!sliceCond(dst))
-            val mergedDst = quads.toDF().filter(sliceCond(dst))
-              .unionByName(srcSlice).distinct()
-            others.unionByName(mergedDst)
-          case _ => base.unionByName(srcSlice)
-        }).as[Quad]
-        val names = (verb match {
-          case "move" => src match {
-            case GraphRef.Named(n) => graphNames - n
-            case _                 => graphNames
-          }
-          case _ => graphNames
-        }) ++ (dst match { case GraphRef.Named(n) => Set(n); case _ => Set.empty[String] })
-        new QuadStore(spark, result, names)
       }
 
     case UpdateOp.Load(silent, source, into) =>
@@ -155,20 +108,12 @@ final class QuadStore private (
           else if (lower.endsWith(".rdf")) TripleStore.fromRdf(spark, source).triples
           else throw new IllegalArgumentException(
             s"load supports .nt/.ttl/.rdf documents, got: $source")
-        val loaded = ts.map(t => Quad(into, t.s, t.p, t.o)).toDF()
         // SILENT must make the operation always succeed (§3.1.4), but
         // the per-file parse runs lazily on executors — force one
         // validating pass NOW so content errors are caught here and
         // swallowed, not thrown from the next unrelated action
-        if (silent) loaded.count()
-        // data-scale input: dedup against the TARGET GRAPH's slice
-        // only — the rest of the dataset passes through unshuffled
-        val target = into.map(GraphRef.Named).getOrElse(GraphRef.Default)
-        val others = quads.toDF().filter(!sliceCond(target))
-        val mergedTarget = quads.toDF().filter(sliceCond(target))
-          .unionByName(loaded).distinct()
-        new QuadStore(spark, others.unionByName(mergedTarget).as[Quad],
-          graphNames ++ into)
+        if (silent) ts.count()
+        edit(graphs.updated(into, merged(into, ts)))
       } catch {
         case scala.util.control.NonFatal(e) =>
           if (silent) this
@@ -180,26 +125,28 @@ final class QuadStore private (
         "run per graph via graph(g).update(…)")
   }
 
-  private def sliceCond(r: GraphRef): Column = r match {
-    case GraphRef.Named(n) => $"g" <=> lit(n)
-    case GraphRef.Default  => $"g".isNull
-    case GraphRef.AllNamed => $"g".isNotNull
-    case GraphRef.All      => lit(true)
-  }
+  private def edit(next: Map[Option[String], TripleStore]): QuadStore =
+    new QuadStore(spark, next)
 
-  private def relabel(df: DataFrame, dst: GraphRef): DataFrame = {
-    val gv = dst match {
-      case GraphRef.Named(n) => lit(n)
-      case GraphRef.Default  => lit(null).cast("string")
-      case other => throw new IllegalArgumentException(
-        s"cannot write into graph operand $other")
-    }
-    df.withColumn("g", gv)
+  private def empty: TripleStore = TripleStore.fromTriples(spark, Nil)
+
+  /** Graph `g` set-unioned with `ts`: the one plan layer ADD and LOAD
+    * stack, on that graph only. */
+  private def merged(g: Option[String], ts: Dataset[Triple]): TripleStore =
+    TripleStore.fromDataset(graph(g).triples.union(ts).distinct())
+
+  /** The map key of an ADD/COPY/MOVE operand (the parser admits only
+    * `graph <name>` and `default` there). */
+  private def key(r: GraphRef): Option[String] = r match {
+    case GraphRef.Named(n) => Some(n)
+    case GraphRef.Default  => None
+    case other => throw new IllegalArgumentException(
+      s"cannot write into graph operand $other")
   }
 
   private def requireExists(verb: String, silent: Boolean, r: GraphRef)(
       run: () => QuadStore): QuadStore = r match {
-    case GraphRef.Named(n) if !graphNames.contains(n) =>
+    case GraphRef.Named(n) if !graphs.contains(Some(n)) =>
       if (silent) this
       else throw new IllegalArgumentException(s"$verb: no such graph $n")
     case _ => run()
@@ -207,27 +154,13 @@ final class QuadStore private (
 }
 
 object QuadStore {
-  /** Dataset from explicit slices: `None` keys the default graph. */
+  /** Dataset from explicit graphs: `None` keys the default graph, which
+    * is empty when not given. */
   def fromGraphs(spark: SparkSession,
       graphs: Seq[(Option[String], Dataset[Triple])]): QuadStore = {
-    import spark.implicits._
-    require(graphs.nonEmpty, "fromGraphs needs at least one graph slice")
-    // attach the graph label as a literal PROJECTION, not a typed map:
-    // the row never leaves Tungsten format (guide §4)
-    val qs = graphs.map { case (g, ts) =>
-      ts.select(
-        g.map(lit).getOrElse(lit(null)).cast("string").as("g"),
-        col("s"), col("p"), col("o")).as[Quad]
-    }.reduce(_ union _)
-    new QuadStore(spark, qs, graphs.flatMap(_._1).toSet)
-  }
-
-  /** Wrap an existing quad frame; the catalog seeds from the distinct
-    * graph names present (one tiny aggregate — catalog-scale). */
-  def fromQuads(spark: SparkSession, quads: Dataset[Quad]): QuadStore = {
-    import spark.implicits._
-    val names = quads.filter(_.g.isDefined).map(_.g.get)
-      .distinct().collect().toSet
-    new QuadStore(spark, quads, names)
+    require(graphs.map(_._1).distinct.size == graphs.size,
+      s"fromGraphs takes each graph once: ${graphs.map(_._1)}")
+    new QuadStore(spark, (Seq(Option.empty[String] -> TripleStore.fromTriples(spark, Nil)) ++
+      graphs.map { case (g, ts) => g -> TripleStore.fromDataset(ts) }).toMap)
   }
 }

@@ -1,15 +1,12 @@
 package graft.store
 
 import scala.collection.immutable.VectorMap
-import scala.collection.mutable
 
 import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.datasources.{FileScanRDD, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The rebuild of the reference's `Graph` (reference:
@@ -32,16 +29,16 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB: triples live partitioned by predicate (the classic
   * vertical-partitioning RDF layout), so per-predicate scans touch one
-  * directory; BGP joins shuffle on term ids (ints, not strings) and
-  * dictionaries join broadcast when under the threshold.
+  * directory, and dictionaries join broadcast when under the threshold.
+  * Only the persisted layout holds term ids: [[fromBackup]] decodes
+  * them on restore, so BGP joins shuffle term structs, not ints
+  * (ROADMAP direction 4 keeps the ids through the query).
   */
 final class TripleStore private (
     val spark: SparkSession,
     base0: Dataset[Triple],
     inserted0: TripleStore.Delta = TripleStore.NoDelta,
-    removed0: TripleStore.Delta = TripleStore.NoDelta,
-    /** Data-derived stores since the last lineage cut — see [[derive]]. */
-    mutationDepth: Int = 0) {
+    removed0: TripleStore.Delta = TripleStore.NoDelta) {
 
   import spark.implicits._
   import TripleStore.{Delta, Layers, NoDelta}
@@ -70,10 +67,9 @@ final class TripleStore private (
 
   def count(): Long = triples.count()
 
-  /** A store with this one's base and a new delta. Insert/remove never
-    * deepen the plan, so they do not count toward the lineage cut. */
+  /** A store with this one's base and a new delta. */
   private def withDelta(base: Dataset[Triple], ins: Delta, rem: Delta): TripleStore = {
-    val st = new TripleStore(spark, base, ins, rem, mutationDepth)
+    val st = new TripleStore(spark, base, ins, rem)
     st.persistedTo = persistedTo
     st
   }
@@ -83,21 +79,11 @@ final class TripleStore private (
     * base, with an empty delta. The persist location carries forward:
     * the reference graph mutates in place so its remembered location
     * survives mutation (graph.rs:641-656) — our immutable derivations
-    * must copy it for no-arg persist() parity.
-    *
-    * Each such derivation stacks its own plan layer, so long chains of
-    * them grow analysis cost. With `spark.graft.lineageCutEvery = N`
-    * (>0), every Nth derivation cuts lineage with a lazy
-    * localCheckpoint — default OFF for the same
-    * durability/materialization trade documented on
-    * [[QuadStore.update]]: production-scale loops should persist() to
-    * durable parquet periodically instead. */
+    * must copy it for no-arg persist() parity. Each derivation stacks
+    * its own plan layer; long loops of them should persist() to
+    * durable parquet periodically. */
   private def derive(ds: Dataset[Triple]): TripleStore = {
-    val every = spark.conf.get("spark.graft.lineageCutEvery", "0").toInt
-    val cut = every > 0 && mutationDepth + 1 >= every
-    val st = new TripleStore(spark,
-      if (cut) ds.localCheckpoint(false) else ds,
-      mutationDepth = if (cut) 0 else mutationDepth + 1)
+    val st = new TripleStore(spark, ds)
     st.persistedTo = persistedTo
     st
   }
@@ -342,22 +328,13 @@ final class TripleStore private (
 
   /** Whether [[triples]] scans files under one of `dirs`: a file-relation
     * leaf of its plan (walked as [[graft.Sizing]] does) with a root at or
-    * under a dir, or an RDD leaf whose lineage scans such a file. The
-    * RDD case is a lineage cut ([[derive]]) not yet computed: until then
-    * its RDD still reads the files it was derived from. A computed cut's
-    * lineage ends at its checkpoint. Paths compare Hadoop-qualified:
-    * `dir`, `dir/` and `file:dir` are one directory. */
+    * under a dir. Paths compare Hadoop-qualified: `dir`, `dir/` and
+    * `file:dir` are one directory. */
   private def reads(dirs: Seq[Path]): Boolean = {
     def under(p: Path): Boolean =
       Iterator.iterate(qualified(p))(_.getParent).takeWhile(_ != null).exists(dirs.contains)
-    val seen = mutable.Set[Int]()
-    def scans(rdd: RDD[_]): Boolean = seen.add(rdd.id) && (rdd match {
-      case f: FileScanRDD => f.filePartitions.exists(_.files.exists(pf => under(pf.toPath)))
-      case _ => rdd.dependencies.exists(d => scans(d.rdd))
-    })
     triples.queryExecution.analyzed.collectLeaves().exists {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths.exists(under)
-      case l: LogicalRDD => scans(l.rdd)
       case _ => false
     }
   }

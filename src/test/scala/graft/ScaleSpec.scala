@@ -575,43 +575,40 @@ class ScaleSpec extends SparkSpec {
     assert(Tables.normalizeTs(fromNtz).schema("ts").dataType == TimestampType)
   }
 
-  test("chained dataset updates cut lineage when lineageCutEvery is set") {
-    // with spark.graft.lineageCutEvery = 8, every 8th QuadStore update
-    // (and every 8th data-derived TripleStore derivation) cuts lineage
-    // (lazy localCheckpoint), so plan size is O(verbs since last cut),
-    // not O(all verbs ever) — 24 quad inserts would stack 24
-    // anti-join+union layers otherwise. Default is OFF (the cut
-    // materializes the whole store into unreplicated executor storage
-    // — wrong for a 100 TB store; see QuadStore.update's scaladoc).
-    // TripleStore insert/remove need no cut: they edit a driver-side
-    // delta over a fixed base (pinned in the next test).
+  test("a 30-verb QuadStore script keeps a constant optimized plan") {
+    // graph verbs edit the driver-side graph map and data blocks edit
+    // one graph's delta, so the quad plan depends on the graphs and the
+    // shape of their deltas, never on how many verbs ran. Each 6-verb
+    // round of the seeded script leaves the same graphs in the same
+    // shape (g1 = src plus a one-insert, one-delete delta; tmp gone).
     import spark.implicits._
-    import graft.rdf.{RdfTerm, Triple}
-    spark.conf.set("spark.graft.lineageCutEvery", "8")
-    try {
-      val base = store.QuadStore.fromGraphs(spark, Seq(
-        Option.empty[String] -> Seq(Triple(RdfTerm.named("s0"),
-          RdfTerm.named("p"), RdfTerm.named("o0"))).toDS()))
-      val chained = (1 to 24).foldLeft(base)((st, i) =>
-        st.update(s"insert data { s$i p o$i }"))
-      assert(chained.count() == 25)
-      val nNodes = chained.quads.queryExecution.optimizedPlan
-        .collect { case _ => 1 }.sum
-      assert(nNodes < 60,
-        s"chained-update plan grew to $nNodes nodes — lost the lineage cut?")
-      // the TripleStore mutation chain stays under the same bound — the
-      // reference's documented usage is insert_triple in a loop
-      // (graph.rs:414-509)
-      val ts0 = store.TripleStore.fromTriples(spark, Seq(Triple(
-        RdfTerm.named("t0"), RdfTerm.named("p"), RdfTerm.named("o"))))
-      val tsChained = (1 to 24).foldLeft(ts0)((st, i) => st.insertTriple(
-        Triple(RdfTerm.named(s"t$i"), RdfTerm.named("p"), RdfTerm.named("o"))))
-      assert(tsChained.count() == 25)
-      val tn = tsChained.triples.queryExecution.optimizedPlan
-        .collect { case _ => 1 }.sum
-      assert(tn < 60,
-        s"mutation-chain plan grew to $tn nodes — lost the lineage cut?")
-    } finally spark.conf.set("spark.graft.lineageCutEvery", "0")
+    def t(i: Int) = Triple(RdfTerm.named(s"s$i"), RdfTerm.named("p"), RdfTerm.named(s"o$i"))
+    val start = store.QuadStore.fromGraphs(spark, Seq(
+      None -> (0 until 3).map(t).toDS(),
+      Some("src") -> (3 until 8).map(t).toDS(),
+      Some("g1") -> (8 until 10).map(t).toDS()))
+    val rnd = new scala.util.Random(42)
+    val rounds = Seq.fill(5) {
+      val Seq(a, b) = rnd.shuffle((0 until 12).toList).take(2)
+      (a, b, if (rnd.nextBoolean()) "clear" else "drop")
+    }
+    val script = rounds.flatMap { case (a, b, verb) =>
+      Seq(s"$verb graph g1",
+        "create graph tmp",
+        "copy src to tmp",
+        s"insert data { graph tmp { s$a p o$a } }",
+        s"delete data { graph tmp { s$b p o$b } }",
+        "move tmp to g1")
+    }
+    assert(rounds.map(_._3).toSet == Set("clear", "drop"))
+    val nodes = Seq(6, 12, 30).map { n =>
+      val qs = script.take(n).foldLeft(start)(_.update(_))
+      val (a, b, _) = rounds(n / 6 - 1)
+      assert(qs.graphNames == Set("src", "g1"))
+      assert(qs.graph(Some("g1")).triples.collect().toSet == (3 until 8).map(t).toSet + t(a) - t(b))
+      qs.quads.queryExecution.optimizedPlan.collect { case _ => 1 }.sum
+    }
+    assert(nodes.distinct.size == 1, s"quad plan grew with the verb count: $nodes")
   }
 
   test("insert/remove keep one anti-join over the base, without the lineage knob") {
@@ -622,56 +619,49 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.catalyst.plans.logical.Join
     def t(i: Int) = Triple(RdfTerm.named(s"t$i"), RdfTerm.named("p"), RdfTerm.named("o"))
-    val prev = spark.conf.getOption("spark.graft.lineageCutEvery")
-    spark.conf.unset("spark.graft.lineageCutEvery")
-    try {
-      val base = TripleStore.fromTriples(spark, (0 until 8).map(t))
-      val basePlan = base.triples.queryExecution.optimizedPlan
-      def mutated(n: Int) = (1 to n).foldLeft(base)((st, i) =>
-        st.insertTriple(t(100 + i)).removeTriple(t(i % 8)))
-      val plans = Seq(4, 24).map { n =>
-        val st = mutated(n)
-        assert(st.count() == 8 + n - math.min(n, 8))
-        st.triples.queryExecution.optimizedPlan
-      }
-      val sizes = plans.map(_.collect { case _ => 1 }.sum)
-      assert(sizes.distinct.size == 1, s"plan grew with the mutation count: $sizes")
-      plans.foreach { p =>
-        val antis = p.collect { case j: Join if j.joinType == LeftAnti => j }
-        assert(antis.size == 1, p.treeString)
-        assert(antis.head.left.sameResult(basePlan), p.treeString)
-      }
-    } finally prev.foreach(spark.conf.set("spark.graft.lineageCutEvery", _))
+    val base = TripleStore.fromTriples(spark, (0 until 8).map(t))
+    val basePlan = base.triples.queryExecution.optimizedPlan
+    def mutated(n: Int) = (1 to n).foldLeft(base)((st, i) =>
+      st.insertTriple(t(100 + i)).removeTriple(t(i % 8)))
+    val plans = Seq(4, 24).map { n =>
+      val st = mutated(n)
+      assert(st.count() == 8 + n - math.min(n, 8))
+      st.triples.queryExecution.optimizedPlan
+    }
+    val sizes = plans.map(_.collect { case _ => 1 }.sum)
+    assert(sizes.distinct.size == 1, s"plan grew with the mutation count: $sizes")
+    plans.foreach { p =>
+      val antis = p.collect { case j: Join if j.joinType == LeftAnti => j }
+      assert(antis.size == 1, p.treeString)
+      assert(antis.head.left.sameResult(basePlan), p.treeString)
+    }
   }
 
   test("doc_rag_index_append appends only to touched list partitions, base files byte-stable") {
     import scala.jdk.CollectionConverters._
-    val root = tempDir("rag_app_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      def listing(dir: String): Map[String, Long] = {
-        val base = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(base).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p)
-            && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
-          .toMap
-      }
-      val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
-      val before = listing(dir)
-      val touched = operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
-      val after = listing(dir)
-      // every base file survives the append byte-identically
-      before.foreach { case (f, sz) =>
-        assert(after.get(f).contains(sz), s"base file $f rewritten by append") }
-      // new files appear ONLY under the touched list_id= directories
-      val fresh = after.keySet -- before.keySet
-      assert(fresh.nonEmpty, "append wrote nothing")
-      val touchedDirs = touched.map(l => s"list_id=$l/").toSet
-      fresh.foreach { f =>
-        assert(touchedDirs.exists(f.startsWith),
-          s"append wrote $f outside the touched partitions $touched") }
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("rag_app_pin")
+    def listing(dir: String): Map[String, Long] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)
+          && p.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+    }
+    val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
+    val before = listing(dir)
+    val touched = operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
+    val after = listing(dir)
+    // every base file survives the append byte-identically
+    before.foreach { case (f, sz) =>
+      assert(after.get(f).contains(sz), s"base file $f rewritten by append") }
+    // new files appear ONLY under the touched list_id= directories
+    val fresh = after.keySet -- before.keySet
+    assert(fresh.nonEmpty, "append wrote nothing")
+    val touchedDirs = touched.map(l => s"list_id=$l/").toSet
+    fresh.foreach { f =>
+      assert(touchedDirs.exists(f.startsWith),
+        s"append wrote $f outside the touched partitions $touched") }
   }
 
   test("bloom pre-pass: definite-absent branch joins nothing; one exact anti-join remains") {
@@ -686,122 +676,113 @@ class ScaleSpec extends SparkSpec {
   test("doc_rag_index_compact rewrites only touched lists, one file each, rows intact") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = tempDir("rag_cmp_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      def listing(dir: String): Map[String, Long] = {
-        val base = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(base).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p)
-            && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
-          .toMap
-      }
-      val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
-      val touched = operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
-      val fragged = listing(dir)
-      val rowsBefore = spark.read.parquet(dir)
-        .select($"doc_id", $"chunk_id", $"list_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-      operators.CurationOps.ragCompactTouched(spark, dir, touched)
-      val compacted = listing(dir)
-      val touchedDirs = touched.map(l => s"list_id=$l/").toSet
-      // untouched base partitions keep their files byte-identically
-      fragged.filterNot { case (f, _) => touchedDirs.exists(f.startsWith) }
-        .foreach { case (f, sz) =>
-          assert(compacted.get(f).contains(sz), s"untouched file $f rewritten") }
-      // every touched partition collapsed to exactly one file
-      touched.foreach { l =>
-        val files = compacted.keySet.filter(_.startsWith(s"list_id=$l/"))
-        assert(files.size == 1, s"list $l has ${files.size} files after compact")
-      }
-      // and compaction was worth doing: strictly fewer files than the
-      // fragmented layout (base write + append write per touched list)
-      assert(compacted.size < fragged.size, "compaction freed no files")
-      // content identical row-for-row
-      val rowsAfter = spark.read.parquet(dir)
-        .select($"doc_id", $"chunk_id", $"list_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-      assert(rowsAfter == rowsBefore)
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("rag_cmp_pin")
+    def listing(dir: String): Map[String, Long] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)
+          && p.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+    }
+    val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
+    val touched = operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
+    val fragged = listing(dir)
+    val rowsBefore = spark.read.parquet(dir)
+      .select($"doc_id", $"chunk_id", $"list_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    operators.CurationOps.ragCompactTouched(spark, dir, touched)
+    val compacted = listing(dir)
+    val touchedDirs = touched.map(l => s"list_id=$l/").toSet
+    // untouched base partitions keep their files byte-identically
+    fragged.filterNot { case (f, _) => touchedDirs.exists(f.startsWith) }
+      .foreach { case (f, sz) =>
+        assert(compacted.get(f).contains(sz), s"untouched file $f rewritten") }
+    // every touched partition collapsed to exactly one file
+    touched.foreach { l =>
+      val files = compacted.keySet.filter(_.startsWith(s"list_id=$l/"))
+      assert(files.size == 1, s"list $l has ${files.size} files after compact")
+    }
+    // and compaction was worth doing: strictly fewer files than the
+    // fragmented layout (base write + append write per touched list)
+    assert(compacted.size < fragged.size, "compaction freed no files")
+    // content identical row-for-row
+    val rowsAfter = spark.read.parquet(dir)
+      .select($"doc_id", $"chunk_id", $"list_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    assert(rowsAfter == rowsBefore)
   }
 
   test("doc_rag_index_delete rewrites only victim lists; untouched lists byte-stable; victims gone") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = tempDir("rag_del_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      def listing(dir: String): Map[String, Long] = {
-        val base = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(base).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p)
-            && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
-          .toMap
-      }
-      val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
-      operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
-      val before = listing(dir)
-      val touched = operators.CurationOps.ragDeleteFrom(spark, dir)
-      val after = listing(dir)
-      assert(touched.nonEmpty, "takedown set hit no list")
-      val touchedDirs = touched.map(l => s"list_id=$l/").toSet
-      // lists holding no victims keep their files byte-identically —
-      // delete cost is proportional to the deleted data's spread
-      before.filterNot { case (f, _) => touchedDirs.exists(f.startsWith) }
-        .foreach { case (f, sz) =>
-          assert(after.get(f).contains(sz), s"untouched file $f rewritten by delete") }
-      // and the victims are really gone from the read-back
-      val mod = operators.CurationOps.RagTakedownMod
-      val res = operators.CurationOps.RagTakedownRes
-      assert(spark.read.parquet(dir)
-        .filter($"doc_id" % mod === res).count() == 0)
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("rag_del_pin")
+    def listing(dir: String): Map[String, Long] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)
+          && p.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+    }
+    val (dir, cents) = operators.CurationOps.ragAppendBase(spark, sf0001)
+    operators.CurationOps.ragAppendNew(spark, sf0001, dir, cents)
+    val before = listing(dir)
+    val touched = operators.CurationOps.ragDeleteFrom(spark, dir)
+    val after = listing(dir)
+    assert(touched.nonEmpty, "takedown set hit no list")
+    val touchedDirs = touched.map(l => s"list_id=$l/").toSet
+    // lists holding no victims keep their files byte-identically —
+    // delete cost is proportional to the deleted data's spread
+    before.filterNot { case (f, _) => touchedDirs.exists(f.startsWith) }
+      .foreach { case (f, sz) =>
+        assert(after.get(f).contains(sz), s"untouched file $f rewritten by delete") }
+    // and the victims are really gone from the read-back
+    val mod = operators.CurationOps.RagTakedownMod
+    val res = operators.CurationOps.RagTakedownRes
+    assert(spark.read.parquet(dir)
+      .filter($"doc_id" % mod === res).count() == 0)
   }
 
   test("sim_ann_ivf_balance splits only over-cap lists; untouched list dirs byte-stable") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val root = tempDir("ivf_bal_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      def listing(dir: String): Map[String, Long] = {
-        val base = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(base).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p)
-            && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
-          .toMap
-      }
-      val dir = operators.MlOps.ivfBalanceBuild(spark, sf0001)
-      val before = listing(dir)
-      val rowsBefore = spark.read.parquet(dir)
-        .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
-      val hot = operators.MlOps.ivfSplitHot(spark, dir)
-      assert(hot.nonEmpty, "fixture produced no over-cap list — split path unexercised")
-      val after = listing(dir)
-      val hotDirs = hot.flatMap(l =>
-        Seq(s"list_id=$l/", s"list_id=${operators.IvfKmeans.K + l}/")).toSet
-      // cold lists keep their files byte-identically — split cost is
-      // proportional to the hot data, never the index
-      before.filterNot { case (f, _) => hotDirs.exists(f.startsWith) }
-        .foreach { case (f, sz) =>
-          assert(after.get(f).contains(sz), s"untouched file $f rewritten by split") }
-      // every new/rewritten file is confined to hot parents + children
-      val changed = (after.keySet -- before.keySet) ++
-        before.keySet.filter(f => !after.get(f).contains(before(f)))
-      changed.foreach { f =>
-        assert(hotDirs.exists(f.startsWith), s"split touched $f outside hot lists $hot") }
-      // each split produced a real child partition
-      hot.foreach { l =>
-        assert(after.keySet.exists(_.startsWith(s"list_id=${operators.IvfKmeans.K + l}/")),
-          s"no child partition for split list $l") }
-      // split MOVES vectors, never drops or duplicates them
-      val rowsAfter = spark.read.parquet(dir)
-        .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(rowsAfter == rowsBefore)
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("ivf_bal_pin")
+    def listing(dir: String): Map[String, Long] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)
+          && p.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+    }
+    val dir = operators.MlOps.ivfBalanceBuild(spark, sf0001)
+    val before = listing(dir)
+    val rowsBefore = spark.read.parquet(dir)
+      .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    val hot = operators.MlOps.ivfSplitHot(spark, dir)
+    assert(hot.nonEmpty, "fixture produced no over-cap list — split path unexercised")
+    val after = listing(dir)
+    val hotDirs = hot.flatMap(l =>
+      Seq(s"list_id=$l/", s"list_id=${operators.IvfKmeans.K + l}/")).toSet
+    // cold lists keep their files byte-identically — split cost is
+    // proportional to the hot data, never the index
+    before.filterNot { case (f, _) => hotDirs.exists(f.startsWith) }
+      .foreach { case (f, sz) =>
+        assert(after.get(f).contains(sz), s"untouched file $f rewritten by split") }
+    // every new/rewritten file is confined to hot parents + children
+    val changed = (after.keySet -- before.keySet) ++
+      before.keySet.filter(f => !after.get(f).contains(before(f)))
+    changed.foreach { f =>
+      assert(hotDirs.exists(f.startsWith), s"split touched $f outside hot lists $hot") }
+    // each split produced a real child partition
+    hot.foreach { l =>
+      assert(after.keySet.exists(_.startsWith(s"list_id=${operators.IvfKmeans.K + l}/")),
+        s"no child partition for split list $l") }
+    // split MOVES vectors, never drops or duplicates them
+    val rowsAfter = spark.read.parquet(dir)
+      .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(rowsAfter == rowsBefore)
   }
 
   test("sq8 scan joins broadcast query codes and scores with the native kernel") {
@@ -818,19 +799,16 @@ class ScaleSpec extends SparkSpec {
     // corpus-keyed dir, then probes through ragProbedIndexRead — pin
     // the scan shape of that EXACT read path: the probed isin() must
     // become a partition filter (directory pruning), never a full scan
-    val root = tempDir("rag_idx_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      operators.CurationOps.docRagIndex(spark, sf0001).collect()
-      val dir = operators.CurationOps.ragIndexDir(spark, sf0001)
-      val probed = operators.CurationOps.ragProbedIndexRead(spark, dir, Seq(3, 7))
-      val physical = probed.queryExecution.executedPlan.toString
-      assert(physical.contains("PartitionFilters: [list_id"), physical)
-      // and the on-disk layout really is one directory per list
-      val parts = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("list_id="))
-      assert(parts.nonEmpty, s"no list_id= partitions under $dir")
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("rag_idx_pin")
+    operators.CurationOps.docRagIndex(spark, sf0001).collect()
+    val dir = operators.CurationOps.ragIndexDir(spark, sf0001)
+    val probed = operators.CurationOps.ragProbedIndexRead(spark, dir, Seq(3, 7))
+    val physical = probed.queryExecution.executedPlan.toString
+    assert(physical.contains("PartitionFilters: [list_id"), physical)
+    // and the on-disk layout really is one directory per list
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("list_id="))
+    assert(parts.nonEmpty, s"no list_id= partitions under $dir")
   }
 
   test("NB scoring joins the model BROADCAST; the corpus never shuffles to meet it") {
@@ -886,17 +864,14 @@ class ScaleSpec extends SparkSpec {
     // serves through ragProbedIndexRead + the lang data filter — pin
     // BOTH halves of the claimed scan shape on that exact read path:
     // probed lists prune directories, the predicate reaches parquet
-    val root = tempDir("rag_lidx_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
-    try {
-      operators.CurationOps.docRagIndexFiltered(spark, sf0001).collect()
-      val dir = operators.CurationOps.ragLangIndexDir(spark, sf0001)
-      val probed = operators.CurationOps.ragProbedIndexRead(spark, dir, Seq(3, 7))
-        .filter(col("lang") === operators.CurationOps.RagFilterLang)
-      val physical = probed.queryExecution.executedPlan.toString
-      assert(physical.contains("PartitionFilters: [list_id"), physical)
-      assert(physical.contains("EqualTo(lang,en)"), physical)
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("rag_lidx_pin")
+    operators.CurationOps.docRagIndexFiltered(spark, sf0001).collect()
+    val dir = operators.CurationOps.ragLangIndexDir(spark, sf0001)
+    val probed = operators.CurationOps.ragProbedIndexRead(spark, dir, Seq(3, 7))
+      .filter(col("lang") === operators.CurationOps.RagFilterLang)
+    val physical = probed.queryExecution.executedPlan.toString
+    assert(physical.contains("PartitionFilters: [list_id"), physical)
+    assert(physical.contains("EqualTo(lang,en)"), physical)
   }
 
   test("mix epochs: one corpus scan — everything downstream reads the cached rollup") {

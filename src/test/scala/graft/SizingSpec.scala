@@ -115,7 +115,8 @@ class SizingSpec extends SparkSpec {
     val hits = queryPathHits(
       "writeStream" -> """\bwriteStream\b""".r,
       ".foreachBatch" -> """\.foreachBatch\b""".r,
-      "createTempDirectory" -> """\bcreateTempDirectory\b""".r)
+      "createTempDirectory" -> """\bcreateTempDirectory\b""".r,
+      "createTempFile" -> """\bcreateTempFile\b""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -35,14 +35,33 @@ trait SparkSpec extends AnyFunSuite {
     d.toString
   }
 
+  private val IndexRoot = "spark.graft.indexRoot"
+  /** `spark.graft.indexRoot` as it was before the calling test moved it. */
+  @volatile private var rootBefore: Option[Option[String]] = None
+
+  /** Points `spark.graft.indexRoot` (the root of every `Tables.scratch`
+    * dir) at a fresh [[tempDir]] until the calling test ends, so index
+    * and cache trees keyed by a throwaway corpus die with the test; the
+    * root the test found comes back afterwards. */
+  def tempIndexRoot(prefix: String): String = {
+    val d = tempDir(prefix)
+    if (rootBefore.isEmpty) rootBefore = Some(spark.conf.getOption(IndexRoot))
+    spark.conf.set(IndexRoot, d)
+    d
+  }
+
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally Iterator.continually(testDirs.poll()).takeWhile(_ != null)
-      .filter(Files.exists(_)).foreach { d =>
-        val walk = Files.walk(d)
-        try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
-        finally walk.close()
-      }
+    finally {
+      rootBefore.foreach(_.fold(spark.conf.unset(IndexRoot))(spark.conf.set(IndexRoot, _)))
+      rootBefore = None
+      Iterator.continually(testDirs.poll()).takeWhile(_ != null)
+        .filter(Files.exists(_)).foreach { d =>
+          val walk = Files.walk(d)
+          try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+          finally walk.close()
+        }
+    }
 
   /** `body`'s result and every stderr line it printed. */
   def withStderr[T](body: => T): (T, Seq[String]) = {

@@ -82,32 +82,28 @@ class StreamSinkSpec extends SparkSpec {
   test("land runs at the caller's parts, restores the session's, and a rerun replaces its rows") {
     val root = tempDir("stream_land")
     val all = writeSource(s"$root/in")
-    spark.conf.set("spark.graft.indexRoot", s"$root/scratch")
+    tempIndexRoot("stream_land_scratch")
     val before = spark.conf.get(partsKey)
-    try {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      def land(): DataFrame = Streams.land(spark, "sink_spec", s"$root/in",
-          source(s"$root/in"), 3) { b => seen.add(b.sparkSession.conf.get(partsKey)); b }
-      val landDir = Tables.scratch(spark, "stream_sink_spec", s"$root/in")
-      assert(land().columns.toSeq == Seq("id", "tag"))
-      assert(landed(landDir) == all.sorted)
-      assert(seen.asScala.toSet == Set("3"))
-      assert(spark.conf.get(partsKey) == before)
-      assert(land().collect().length == all.size)
-      val batches = Files.list(Paths.get(landDir))
-      try assert(batches.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("batch=")).toSet == Set("batch=0", "batch=1", "batch=2"))
-      finally batches.close()
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def land(): DataFrame = Streams.land(spark, "sink_spec", s"$root/in",
+        source(s"$root/in"), 3) { b => seen.add(b.sparkSession.conf.get(partsKey)); b }
+    val landDir = Tables.scratch(spark, "stream_sink_spec", s"$root/in")
+    assert(land().columns.toSeq == Seq("id", "tag"))
+    assert(landed(landDir) == all.sorted)
+    assert(seen.asScala.toSet == Set("3"))
+    assert(spark.conf.get(partsKey) == before)
+    assert(land().collect().length == all.size)
+    val batches = Files.list(Paths.get(landDir))
+    try assert(batches.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("batch=")).toSet == Set("batch=0", "batch=1", "batch=2"))
+    finally batches.close()
   }
 
   test("ev_stream_scd2 over an empty event log fires one batch and yields an empty dimension") {
     val d = tempDir("scd2_empty")
     Tables.events(spark, sf0001).limit(0).write.parquet(s"$d/events.parquet")
-    spark.conf.set("spark.graft.indexRoot", s"$d/scratch")
-    try {
-      assert(operators.EventOps.evStreamScd2(spark, d).count() == 0L)
-      assert(operators.EventOps.evScd2(spark, d).count() == 0L)
-    } finally spark.conf.unset("spark.graft.indexRoot")
+    tempIndexRoot("scd2_empty_scratch")
+    assert(operators.EventOps.evStreamScd2(spark, d).count() == 0L)
+    assert(operators.EventOps.evScd2(spark, d).count() == 0L)
   }
 }

@@ -14,10 +14,11 @@ class EdgeCaseSpec extends SparkSpec {
 
   /** A corpus of only edge cases, with the full 5-column document
     * schema the loaders guarantee; written per test into a directory
-    * that dies with the test. */
+    * that dies with the test, as do the index trees keyed by it. */
   private def edgeCorpus(): String = {
     import spark.implicits._
     val d = tempDir("edge")
+    tempIndexRoot("edge_scratch")
     val big = (1 to 5000).map(i => s"tok$i").mkString(" ")
     Seq(
       (0L, "", "en", "src0", 0L),                            // empty text

@@ -71,8 +71,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("compact sink: per-partition files drop to ceil(rows/target), content intact") {
     import scala.jdk.CollectionConverters._
-    val root = tempDir("compact_pin")
-    spark.conf.set("spark.graft.indexRoot", root)
+    val root = tempIndexRoot("compact_pin")
     spark.conf.set("spark.graft.compactMaxRows", "3")
     try {
       val out = CurationOps.docCompactSink(spark, sf0001)
@@ -107,10 +106,7 @@ class Round16OpsSpec extends SparkSpec {
         assert(compact1(s"source=$src") == 1, s"$src: expected 1 compacted file")
       }
       assert(frag1.values.sum > compact1.values.sum, "compaction freed no files")
-    } finally {
-      spark.conf.unset("spark.graft.indexRoot")
-      spark.conf.unset("spark.graft.compactMaxRows")
-    }
+    } finally spark.conf.unset("spark.graft.compactMaxRows")
   }
 
   test("rag index append: appended index covers every chunk exactly once") {

@@ -11,10 +11,12 @@ class Round17OpsSpec extends SparkSpec {
 
   /** A small synthetic corpus written in the DIRECTORY layout (what
     * Spark itself writes — part files under `documents.parquet/`),
-    * as opposed to the driver testdata's single-file layout. */
+    * as opposed to the driver testdata's single-file layout. The
+    * index trees keyed by it die with the calling test. */
   private def writeDirLayoutDocs(withNullSource: Boolean): String = {
     import spark.implicits._
     val dir = tempDir("r17docs")
+    tempIndexRoot("r17docs_scratch")
     val words = Seq("alpha", "beta", "gamma", "delta", "omega", "kappa")
     val docs = (0L until 40L).map { i =>
       val text = (0 until 24)

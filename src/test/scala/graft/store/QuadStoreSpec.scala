@@ -93,6 +93,101 @@ class QuadStoreSpec extends SparkSpec {
     assert(contents(silentBad) == contents(store)) // forces the scan: no throw
   }
 
+  test("a seeded verb script keeps set semantics against a Map model") {
+    type Model = Map[Option[String], Set[Triple]]
+    // the update text and the model after it; None: the update must fail
+    type Step = (String, Model => Option[Model])
+    val none = Set.empty[Triple]
+    def sil(silent: Boolean) = if (silent) " silent" else ""
+    // a §3.2 verb whose operand check fails throws, or no-ops when SILENT
+    def guard(ok: Model => Boolean, silent: Boolean)(f: Model => Model): Model => Option[Model] =
+      m => if (ok(m)) Some(f(m)) else if (silent) Some(m) else None
+    def ref(g: Option[String]) = g.fold("default")(n => s"graph $n")
+    def block(g: Option[String], ts: Seq[Triple]) = {
+      val data = ts.map(x => s"${x.s.value} ${x.p.value} ${x.o.value}").mkString(" . ")
+      g.fold(s"{ $data }")(n => s"{ graph $n { $data } }")
+    }
+    def create(n: String, silent: Boolean): Step =
+      (s"create${sil(silent)} graph $n", guard(!_.contains(Some(n)), silent)(_ + (Some(n) -> none)))
+    // clear or drop over `graph <n>`, `default`, `named` or `all`
+    def wipe(verb: String, operand: String, silent: Boolean): Step = {
+      val hit: Option[String] => Boolean = operand match {
+        case "default" => _.isEmpty
+        case "named"   => _.isDefined
+        case "all"     => _ => true
+        case named     => _.contains(named.stripPrefix("graph "))
+      }
+      (s"$verb${sil(silent)} $operand",
+        guard(m => !operand.startsWith("graph ") || m.keySet.exists(hit), silent) { m =>
+          // the default graph always exists: dropping it empties it
+          val kept = if (verb == "drop") m.filter { case (g, _) => g.isEmpty || !hit(g) } else m
+          kept.map { case (g, ts) => g -> (if (hit(g)) none else ts) }
+        })
+    }
+    def xfer(verb: String, src: Option[String], dst: Option[String], silent: Boolean): Step =
+      (s"$verb${sil(silent)} ${ref(src)} to ${ref(dst)}",
+        guard(m => src == dst || m.contains(src), silent) { m =>
+          val from = m.getOrElse(src, none)
+          if (src == dst) m else verb match {
+            case "add"  => m.updated(dst, m.getOrElse(dst, none) ++ from)
+            case "copy" => m.updated(dst, from)
+            case "move" => (if (src.isEmpty) m.updated(src, none) else m - src).updated(dst, from)
+          }
+        })
+    def ins(g: Option[String], ts: Seq[Triple]): Step =
+      (s"insert data ${block(g, ts)}", m => Some(m.updated(g, m.getOrElse(g, none) ++ ts)))
+    def del(g: Option[String], ts: Seq[Triple]): Step =
+      (s"delete data ${block(g, ts)}", m => Some(m.get(g).fold(m)(old => m.updated(g, old -- ts))))
+
+    val (g1, g2, g3) = (Some("g1"), Some("g2"), Some("g3"))
+    // fixed opening: mutate a COPY's source, then the copy, then move
+    // the copy away; verbs on the moved graph fail unless SILENT
+    val opening = Seq(
+      xfer("copy", g1, g2, silent = false),
+      ins(g1, Seq(t("n1", "p", "n2"))),
+      del(g1, Seq(t("c", "p", "d"))),
+      del(g2, Seq(t("e", "p", "f"))),
+      xfer("copy", None, g3, silent = false),
+      ins(None, Seq(t("a", "p", "x"))),
+      xfer("move", g2, None, silent = false),
+      wipe("drop", "graph g2", silent = false),
+      wipe("drop", "graph g2", silent = true),
+      xfer("add", g2, g1, silent = false),
+      create("g1", silent = false),
+      wipe("clear", "named", silent = false))
+    val names = Seq("g1", "g2", "g3")
+    val pool = for (s <- Seq("a", "b", "c"); o <- Seq("x", "y")) yield t(s, "p", o)
+    val rnd = new scala.util.Random(11)
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    def graphOf(): Option[String] = if (rnd.nextInt(4) == 0) None else Some(pick(names))
+    val random = Seq.fill(28) {
+      val silent = rnd.nextInt(3) == 0
+      rnd.nextInt(7) match {
+        case 0 => create(pick(names), silent)
+        case 1 => wipe(pick(Seq("clear", "drop")),
+          pick(names.map("graph " + _) ++ Seq("default", "named", "all")), silent)
+        case 2 | 3 => xfer(pick(Seq("add", "copy", "move")), graphOf(), graphOf(), silent)
+        case 4 | 5 => ins(graphOf(), Seq.fill(1 + rnd.nextInt(2))(pick(pool)))
+        case _ => del(graphOf(), Seq.fill(1 + rnd.nextInt(2))(pick(pool)))
+      }
+    }
+    var qs = store
+    var model: Model = Map(None -> Set(t("a", "p", "b")), g1 -> Set(t("c", "p", "d"), t("e", "p", "f")))
+    (opening ++ random :+ wipe("drop", "all", silent = false)).zipWithIndex.foreach {
+      case ((u, next), i) =>
+        next(model) match {
+          case Some(m) => qs = qs.update(u); model = m
+          case None => assertThrows[IllegalArgumentException](qs.update(u))
+        }
+        val rows = qs.quads.collect()
+        val want = for ((g, ts) <- model.toSeq; x <- ts.toSeq)
+          yield (g.getOrElse("default"), x.s.value, x.p.value, x.o.value)
+        assert(rows.length == want.size, s"step $i `$u`: duplicate or missing rows")
+        assert(contents(qs) == want.toSet, s"step $i `$u`")
+        assert(qs.graphNames == model.keySet.flatten, s"step $i `$u`")
+    }
+  }
+
   test("graph(g) slices a TripleStore view; same-graph add/copy/move no-op") {
     assert(store.graph(Some("g1")).count() == 2)
     assert(store.graph(None).count() == 1)

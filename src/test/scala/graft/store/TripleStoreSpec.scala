@@ -289,15 +289,16 @@ class TripleStoreSpec extends SparkSpec {
     assert(st.persistLocation.contains(a))
   }
 
-  test("with lineageCutEvery set, persisting over a pending cut's source keeps that backup whole") {
-    // a lazy lineage cut is a plan leaf whose RDD, until first computed,
-    // still scans the backup it was derived from. With adaptive execution
-    // and broadcast joins off, building the cut runs no stage at all, so
-    // every dictionary and triple read waits for the first action.
+  test("removePattern store persisted over its source stays whole") {
+    // a removePattern store is a filter over the backup it was restored
+    // from, persisted both in place and back to that source after its
+    // location moved. With adaptive execution and broadcast joins off,
+    // no stage runs before the persist, so every dictionary and triple
+    // read waits for the first action.
     val triples = (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))
     val gone = triples.filter(_.p == RdfTerm.named("p3")).toSet
     val expected = triples.toSet -- gone
-    val keys = Seq("spark.graft.lineageCutEvery" -> "1", "spark.sql.adaptive.enabled" -> "false",
+    val keys = Seq("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
