@@ -6,7 +6,7 @@ import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** The rebuild of the reference's `Graph` (reference:
@@ -27,48 +27,48 @@ import org.apache.spark.sql.functions._
   *    GC bookkeeping disappears because dictionaries are derived;
   *  - the 8 access paths (graph.rs:842-1009) → one Catalyst filter.
   *
-  * At 100 TB: triples live partitioned by predicate (the classic
-  * vertical-partitioning RDF layout), so per-predicate scans touch one
-  * directory, and dictionaries join broadcast when under the threshold.
-  * Only the persisted layout holds term ids: [[fromBackup]] decodes
-  * them on restore, so BGP joins shuffle term structs, not ints
-  * (ROADMAP direction 4 keeps the ids through the query).
+  * At 100 TB: triples persist partitioned by predicate (the classic
+  * vertical-partitioning RDF layout) and dictionaries join broadcast
+  * when under the threshold. [[fromBackup]] decodes a backup ONCE, like
+  * the reference's loaded trees, into a local checkpoint (executor
+  * memory, spilling to local disk) that every later query, mutation
+  * and re-persist scans. The trade-offs:
+  *  - a predicate-bound pattern scans the snapshot; it no longer prunes
+  *    `p_id=` directories;
+  *  - a lost executor fails the next query with a checkpoint-block
+  *    error; it never silently re-reads a backup that may have been
+  *    overwritten since (which also makes an in-place persist safe);
+  *  - queries run on decoded terms, so BGP joins shuffle term structs,
+  *    not ints, and a store larger than executor storage needs the ids
+  *    kept through the query instead (ROADMAP direction 4).
   */
 final class TripleStore private (
     val spark: SparkSession,
-    base0: Dataset[Triple],
-    inserted0: TripleStore.Delta = TripleStore.NoDelta,
-    removed0: TripleStore.Delta = TripleStore.NoDelta) {
+    base: Dataset[Triple],
+    inserted: TripleStore.Delta = TripleStore.NoDelta,
+    removed: TripleStore.Delta = TripleStore.NoDelta) {
 
   import spark.implicits._
-  import TripleStore.{Delta, Layers, NoDelta}
 
-  /** Replaced only by [[persist]] when re-persisting over directories
-    * this store reads from: the checkpointed composition becomes the new
-    * base (it survives the overwrite) and the delta is cleared. */
-  @volatile private var layers: Layers = compose(base0, inserted0, removed0)
-
-  def triples: Dataset[Triple] = layers.triples
-
-  /** Builds the store's one Dataset: the base minus every triple the
-    * delta touches (broadcast null-safe left-anti join — the delta is
+  /** The store's one Dataset: the base minus every triple the delta
+    * touches (broadcast null-safe left-anti join — the delta is
     * driver-sized, and `<=>` matches the null lang / datatype of IRIs),
     * plus the inserted triples. Built once per store, so its plan depth
     * is constant however many mutations ran. Pinned in ScaleSpec. */
-  private def compose(base: Dataset[Triple], ins: Delta, rem: Delta): Layers =
-    Layers(base, ins, rem, if (ins.isEmpty && rem.isEmpty) base else {
+  val triples: Dataset[Triple] =
+    if (inserted.isEmpty && removed.isEmpty) base else {
       val b = base.toDF()
-      val touched = (ins.keys ++ rem.keys).toSeq.toDS().toDF()
+      val touched = (inserted.keys ++ removed.keys).toSeq.toDS().toDF()
       val kept = b.join(broadcast(touched),
         b("s") <=> touched("s") && b("p") <=> touched("p") && b("o") <=> touched("o"),
         "left_anti")
-      (if (ins.isEmpty) kept else kept.unionByName(ins.keys.toSeq.toDS().toDF())).as[Triple]
-    })
+      (if (inserted.isEmpty) kept else kept.unionByName(inserted.keys.toSeq.toDS().toDF())).as[Triple]
+    }
 
   def count(): Long = triples.count()
 
   /** A store with this one's base and a new delta. */
-  private def withDelta(base: Dataset[Triple], ins: Delta, rem: Delta): TripleStore = {
+  private def withDelta(ins: TripleStore.Delta, rem: TripleStore.Delta): TripleStore = {
     val st = new TripleStore(spark, base, ins, rem)
     st.persistedTo = persistedTo
     st
@@ -80,8 +80,8 @@ final class TripleStore private (
     * the reference graph mutates in place so its remembered location
     * survives mutation (graph.rs:641-656) — our immutable derivations
     * must copy it for no-arg persist() parity. Each derivation stacks
-    * its own plan layer; long loops of them should persist() to
-    * durable parquet periodically. */
+    * its own plan layer; long loops of them should persist() and
+    * restore periodically, since [[fromBackup]] starts from a snapshot. */
   private def derive(ds: Dataset[Triple]): TripleStore = {
     val st = new TripleStore(spark, ds)
     st.persistedTo = persistedTo
@@ -99,10 +99,8 @@ final class TripleStore private (
     * shuffle EVERY stored triple to insert a handful — this shape
     * touches the store with one broadcast probe, which is what survives
     * 100 TB. */
-  def insertTriples(ts: Seq[Triple]): TripleStore = {
-    val l = layers
-    withDelta(l.base, l.inserted ++ ts.map(_ -> ()), l.removed -- ts)
-  }
+  def insertTriples(ts: Seq[Triple]): TripleStore =
+    withDelta(inserted ++ ts.map(_ -> ()), removed -- ts)
 
   /** Remove one triple (reference: remove_triple, graph.rs:510-629).
     * Removing an absent triple is a silent no-op, matching the
@@ -113,10 +111,8 @@ final class TripleStore private (
     * leave `inserted`. The broadcast anti-join, not `.except()`: except
     * plans a full shuffle + distinct of EVERY stored triple to delete a
     * handful of rows (round-2 verdict #6). */
-  def removeTriples(ts: Seq[Triple]): TripleStore = {
-    val l = layers
-    withDelta(l.base, l.inserted -- ts, l.removed ++ ts.map(_ -> ()))
-  }
+  def removeTriples(ts: Seq[Triple]): TripleStore =
+    withDelta(inserted -- ts, removed ++ ts.map(_ -> ()))
 
   /** Remove every triple matching a pattern (None = wildcard) — the
     * reference's promised-but-unshipped "remove-queries"
@@ -323,22 +319,6 @@ final class TripleStore private (
     persistedTo = Some(path); this
   }
 
-  private def qualified(p: Path): Path =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
-
-  /** Whether [[triples]] scans files under one of `dirs`: a file-relation
-    * leaf of its plan (walked as [[graft.Sizing]] does) with a root at or
-    * under a dir. Paths compare Hadoop-qualified: `dir`, `dir/` and
-    * `file:dir` are one directory. */
-  private def reads(dirs: Seq[Path]): Boolean = {
-    def under(p: Path): Boolean =
-      Iterator.iterate(qualified(p))(_.getParent).takeWhile(_ != null).exists(dirs.contains)
-    triples.queryExecution.analyzed.collectLeaves().exists {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths.exists(under)
-      case _ => false
-    }
-  }
-
   /** Re-persist to the remembered location (reference: persist with no
     * argument, graph.rs:641-656 — errors when the graph has never been
     * persisted, our analogue of `Error::NoPersistLocation`). */
@@ -349,19 +329,10 @@ final class TripleStore private (
   /** Persist as dictionary-encoded, predicate-partitioned parquet
     * (reference: persist_to, graph.rs:630-695; layout mirrors
     * trees/<predId>.json as triples/p_id=<id>/). Remembers `path` for
-    * no-arg [[persist()]] / [[persistLocation]]. */
+    * no-arg [[persist()]] / [[persistLocation]]. A store built with
+    * [[TripleStore.fromDataset]] over `path`'s own parquet must not
+    * persist there: Spark cannot overwrite a source it is scanning. */
   def persist(path: String): Unit = {
-    // Overwriting a directory this store READS from (whatever location
-    // it remembers) would delete its own input mid-scan (Spark cannot
-    // overwrite a source in place). Materialize the plan first — an
-    // in-place rewrite is a full materialization no matter what — and
-    // keep the checkpointed dataset as the new base (with an empty
-    // delta) so this store stays readable after the overwrite. A persist
-    // to a path it does not read streams without the checkpoint.
-    if (reads(Seq("terms", "predicates", "triples").map(d => qualified(new Path(path, d))))) {
-      val cp = triples.localCheckpoint(true)
-      layers = Layers(cp, NoDelta, NoDelta, cp)
-    }
     val terms = termDict.cache()
     val preds = predicateDict.cache()
     try {
@@ -391,9 +362,14 @@ final class TripleStore private (
     * src/rdf/builder.rs:11-40). Driver-side byte array for parity. */
   def toRdfXml: Array[Byte] = RdfXmlWriter.triplesToRdfXml(iter)
 
-  /** Estimated in-memory size (reference: footprint, graph.rs:1010-1027). */
+  /** Estimated in-memory size (reference: footprint, graph.rs:1010-1027):
+    * the counted triples times the optimizer's row width, the rule it
+    * applies to a local relation, so a store reports the same size
+    * however it was built. Costs one count. The optimizer's own estimate
+    * of a restored store is the product of the three dictionary joins
+    * that decoded it, carried into the snapshot. */
   def footprint: BigInt =
-    triples.queryExecution.optimizedPlan.stats.sizeInBytes
+    EstimationUtils.getSizePerRow(triples.queryExecution.analyzed.output) * count()
 
   def cache(): TripleStore = { triples.cache(); this }
 }
@@ -402,11 +378,6 @@ object TripleStore {
   /** A driver-side delta: a duplicate-free, insertion-ordered triple set. */
   private[store] type Delta = VectorMap[Triple, Unit]
   private[store] val NoDelta: Delta = VectorMap.empty
-
-  /** A store's base, its delta (`inserted` and `removed` disjoint) and
-    * their composition, swapped as one value. */
-  private[store] final case class Layers(
-      base: Dataset[Triple], inserted: Delta, removed: Delta, triples: Dataset[Triple])
 
   /** Update-block token → term: bare tokens are IRIs (update blocks
     * are DATA, not patterns — same coercion as the reference's loader);
@@ -457,13 +428,19 @@ object TripleStore {
   val BackupMarker = ".graftbackup"
 
   /** Restore from persisted layout (reference: Graph::from_backup,
-    * graph.rs:54-222): join ids back to terms. Validates the layout
+    * graph.rs:54-222): join ids back to terms, once. Validates the layout
     * (terms/predicates/triples dirs; marker if present) up front, like the
     * reference's existence checks (graph.rs:167-184) — a clear error
     * beats a parquet scan failure deep inside a job. Like [[persist]],
     * the dictionary joins carry no broadcast hint — the dicts scale
     * with the data, so AQE decides broadcast-vs-shuffle from their
-    * actual size at runtime. */
+    * actual size at runtime (pinned in ScaleSpec). The decoded triples
+    * are an eager local checkpoint, as the reference loads its trees
+    * before returning: no query re-joins the dictionaries, an unreadable
+    * part file fails here rather than at the first query, and the store
+    * reads no backup directory afterwards, so persisting over its own
+    * source is safe. Spark's ContextCleaner frees the snapshot with the
+    * last store that shares it. */
   def fromBackup(spark: SparkSession, path: String): TripleStore = {
     import spark.implicits._
     val root = new Path(path)
@@ -492,6 +469,7 @@ object TripleStore {
       .join(dim(preds, "p", "pid"), $"p_id" === $"pid")
       .select($"s", $"p", $"o")
       .as[Triple]
+      .localCheckpoint(eager = true)
     // the reference restores persist_location from head.json
     // (graph.rs:54-222) — a restored graph re-persists in place
     new TripleStore(spark, ds).rememberLocation(path)

@@ -81,7 +81,34 @@ class ScaleSpec extends SparkSpec {
       assert(insPlan.contains("BroadcastHashJoin"), insPlan)
       assert(insPlan.contains("LeftAnti"), insPlan)
       assert(!insPlan.contains("HashAggregate"), insPlan)
+      // restore decodes through the same unhinted joins, in the one
+      // plan its snapshot runs
+      val dir = tempDir("unhinted_restore")
+      store.persist(dir)
+      val (_, restorePlans) = sqlActionsDuring(TripleStore.fromBackup(spark, dir))
+      assert(restorePlans.map(_._1) == Seq("localCheckpoint"), restorePlans)
+      assert(!restorePlans.head._2.contains("BroadcastHashJoin"), restorePlans.head._2)
+      assert(restorePlans.head._2.contains("SortMergeJoin"), restorePlans.head._2)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("a lookup on a restored store scans its snapshot, not the backup") {
+    // fromBackup decodes once: a lookup reads neither dictionary nor
+    // the id triples again, so it broadcasts nothing and starts at most
+    // two jobs
+    def t(s: String, p: String, o: String) =
+      Triple(RdfTerm.named(s), RdfTerm.named(p), RdfTerm.named(o))
+    val dir = tempDir("snap_lookup")
+    TripleStore.fromTriples(spark,
+      (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))).persist(dir)
+    val df = TripleStore.fromBackup(spark, dir)
+      .query(query.Sparql.parse("select $o where { s8 p1 $o }"))
+    val (rows, jobs) = jobsDuring(df.collect())
+    assert(rows.map(_.getStruct(0).getAs[String]("value")).toSeq == Seq("o8"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("FileScan"), p) // of terms/, predicates/ or triples/
+    assert(!p.contains("BroadcastExchange"), p)
+    assert(jobs.size <= 2, jobs)
   }
 
   test("OPTIONAL compiles to a left join below the projection") {

@@ -72,6 +72,26 @@ trait SparkSpec extends AnyFunSuite {
     (r, buf.toString.linesIterator.toSeq)
   }
 
+  /** `body`'s result and the name and executed plan of every Dataset
+    * action it ran in this session (such as `localCheckpoint`), read once
+    * the listener bus has delivered every event of the run. */
+  def sqlActionsDuring[T](body: => T): (T, Seq[(String, String)]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        ran.add(name -> qe.executedPlan.toString)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      Bench.drainListeners(spark.sparkContext)
+      (r, ran.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** `body`'s result and the result-stage name (its call site, such as
     * `count at Fixpoint.scala:33`) of every job it started, read once
     * the listener bus has delivered every event of the run. */

@@ -326,6 +326,44 @@ class TripleStoreSpec extends SparkSpec {
     }
   }
 
+  test("a restored store keeps its triples when a store derived from it persists in place") {
+    // fromBackup loads the backup once: rewriting that directory later
+    // does not reach the stores already restored from it
+    val dir = tempDir("ts_snap")
+    TripleStore.fromTriples(spark, graph).persist(dir)
+    val a = TripleStore.fromBackup(spark, dir)
+    val x = t("zoe", "is", "cool")
+    a.insertTriple(x).persist()
+    assert(TripleStore.fromBackup(spark, dir).triples.collect().toSet == graph.toSet + x)
+    assert(a.triples.collect().toSet == graph.toSet)
+    val q = Sparql.parse("select $who where { $who is cool }")
+    assert(a.get(q).map(_.value).sorted == Seq("gabe", "james"))
+  }
+
+  test("fromBackup reads every part file before it returns") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = tempDir("ts_trunc")
+    TripleStore.fromTriples(spark,
+      (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))).persist(dir)
+    val walk = Files.walk(Paths.get(dir, "triples"))
+    val parts = try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .toSeq.sortBy(_.toString) finally walk.close()
+    val victim = parts.last
+    Files.write(victim, Files.readAllBytes(victim).take(Files.size(victim).toInt / 2))
+    intercept[Exception](TripleStore.fromBackup(spark, dir))
+  }
+
+  test("a restored store's footprint is its size, not the dictionary joins' estimate") {
+    val triples = (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))
+    val dir = tempDir("ts_fp")
+    TripleStore.fromTriples(spark, triples).persist(dir)
+    val restored = TripleStore.fromBackup(spark, dir).footprint
+    val local = TripleStore.fromTriples(spark, triples).footprint
+    assert(restored > 0 && restored < Long.MaxValue, restored)
+    assert(restored <= local * 10 && local <= restored * 10, s"restored $restored, local $local")
+  }
+
   test("a failed persist releases its dictionary caches") {
     val st = TripleStore.fromTriples(spark, Seq(t("only", "in", "this-test")))
     // a regular file where the backup directory should go: the first write fails
