@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables._
 import graft.query.{Bgp, Sparql}
+import graft.rdf.RdfTerm
 import graft.store.Dict
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,35 +25,32 @@ import org.apache.spark.sql.functions._
   */
 object RdfOps {
 
-  /** A string column as a named-term struct with EXACTLY the
-    * [[graft.rdf.RdfTerm]] product-encoder schema, so `.as[Triple]` /
+  /** A string column as a named term ([[RdfTerm.column]]), whose schema
+    * is EXACTLY the [[RdfTerm]] product encoder's, so `.as[Triple]` /
     * `.as[Quad]` over a [[namedTriples]]/[[namedQuads]] projection is
     * an analysis-time view — no deserialize-to-object/serialize
     * boundary in the plan. The former row-by-row typed map
     * (`.map(Triple(RdfTerm.named(_), …))`) paid an object round-trip
     * per row AND split whole-stage codegen at both ends (guide §4:
     * prefer codegen-friendly expressions over Scala closures). */
-  private[graft] def namedTermStruct(c: Column): Column =
-    struct(lit(graft.rdf.RdfTerm.Named).as("kind"), c.as("value"),
-      lit(null).cast("string").as("lang"), lit(null).cast("string").as("datatype"))
+  private def iri(c: Column): Column = RdfTerm.column(RdfTerm.Named, c)
 
   /** (s, p, o) string columns → `Dataset[Triple]` of named terms as a
-    * pure codegen projection — see [[namedTermStruct]]. */
+    * pure codegen projection — see [[iri]]. */
   private[graft] def namedTriples(df: DataFrame): Dataset[graft.rdf.Triple] = {
     val sp = df.sparkSession
     import sp.implicits._
-    df.select(namedTermStruct(df("s")).as("s"), namedTermStruct(df("p")).as("p"),
-      namedTermStruct(df("o")).as("o")).as[graft.rdf.Triple]
+    df.select(iri(df("s")).as("s"), iri(df("p")).as("p"), iri(df("o")).as("o"))
+      .as[graft.rdf.Triple]
   }
 
   /** (g, s, p, o) string columns → `Dataset[Quad]` of named terms as a
-    * pure codegen projection — see [[namedTermStruct]]. */
+    * pure codegen projection — see [[iri]]. */
   private[graft] def namedQuads(df: DataFrame): Dataset[graft.rdf.Quad] = {
     val sp = df.sparkSession
     import sp.implicits._
-    df.select(namedTermStruct(df("g")).as("g"), namedTermStruct(df("s")).as("s"),
-      namedTermStruct(df("p")).as("p"), namedTermStruct(df("o")).as("o"))
-      .as[graft.rdf.Quad]
+    df.select(iri(df("g")).as("g"), iri(df("s")).as("s"), iri(df("p")).as("p"),
+      iri(df("o")).as("o")).as[graft.rdf.Quad]
   }
 
   /** The shared triple view. Dimension joins are broadcast. */
@@ -839,16 +837,9 @@ object RdfOps {
   def bgpFilterIsiri(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val view = typedTripleView(s, d)
-    val mk = Some((df: DataFrame, pos: String, kind: String) => kind match {
-      case graft.query.QueryUnit.Iri   => df(pos).getField("kind") === "named"
-      case graft.query.QueryUnit.Blank => df(pos).getField("kind") === "blank"
-      case _ => df(pos).getField("kind").isin("raw", "lang", "typed")
-    })
     def run(tag: String, fn: String): DataFrame =
       Bgp.compile(view,
-          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $fn ( $$o ) ) }"),
-          matchValue = (df, pos) => df(pos).getField("value"),
-          matchKind = mk)
+          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $fn ( $$o ) ) }"))
         .select(lit(tag).as("q"), $"x.value".as("x"), $"p.value".as("p"), $"o.value".as("o"))
     val res = run("iri", "isiri").union(run("lit", "isliteral"))
     res.orderBy(res("q"), res("x"), res("p"), res("o"))
@@ -867,20 +858,11 @@ object RdfOps {
       |  SELECT 'lit', s, p, o FROM t WHERE o_kind IN ('raw', 'lang', 'typed')) u
       |ORDER BY q, x, p, o""".stripMargin
 
-  /** 4-field term-struct builders (kind, value, lang, datatype) — the
-    * store's own term shape ([[graft.store.TripleStore]]), shared by
-    * the synthetic kind-aware views below. */
-  private val nullS = lit(null).cast("string")
-  private def iri(c: org.apache.spark.sql.Column) =
-    struct(lit("named").as("kind"), c.as("value"),
-      nullS.as("lang"), nullS.as("datatype"))
-  private def langLit(c: org.apache.spark.sql.Column, lg: org.apache.spark.sql.Column) =
-    struct(lit("lang").as("kind"), c.as("value"), lg.as("lang"), nullS.as("datatype"))
-  private def raw(c: org.apache.spark.sql.Column) =
-    struct(lit("raw").as("kind"), c.as("value"), nullS.as("lang"), nullS.as("datatype"))
-  private def typed(c: org.apache.spark.sql.Column, dt: String) =
-    struct(lit("typed").as("kind"), c.as("value"), nullS.as("lang"),
-      lit(dt).as("datatype"))
+  /** Literal term builders for the synthetic kind-aware views below —
+    * the store's own term shape ([[RdfTerm.column]]), like [[iri]]. */
+  private def langLit(c: Column, lg: Column) = RdfTerm.column(RdfTerm.Lang, c, lang = lg)
+  private def raw(c: Column) = RdfTerm.column(RdfTerm.Raw, c)
+  private def typed(c: Column, dt: String) = RdfTerm.column(RdfTerm.Typed, c, datatype = lit(dt))
 
   /** Lang-aware triple view: full 4-field term structs (kind, value,
     * lang, datatype) like the store's own ([[graft.store.TripleStore]]),
@@ -910,8 +892,7 @@ object RdfOps {
     val view = langTripleView(s, d)
     def run(tag: String, filter: String): DataFrame =
       Bgp.compile(view,
-          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $filter ) }"),
-          matchValue = (df, pos) => df(pos).getField("value"))
+          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $filter ) }"))
         .select(lit(tag).as("q"), $"x.value".as("x"), $"p.value".as("p"), $"o.value".as("o"))
     val res = run("en", "lang ( $o ) == en")
       .union(run("plain", "lang ( $o ) == \"\""))
@@ -1106,8 +1087,7 @@ object RdfOps {
         typed($"c_nationkey".cast("string"), XsdInteger).as("o")))
     def run(t: String, filter: String): DataFrame =
       Bgp.compile(view,
-          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $filter ) }"),
-          matchValue = (df, pos) => df(pos).getField("value"))
+          Sparql.parse(s"select $$x $$p $$o where { $$x $$p $$o . filter ( $filter ) }"))
         .select(lit(t).as("q"), $"x.value".as("x"), $"p.value".as("p"), $"o.value".as("o"))
     val res = run("en", "langmatches ( lang ( $o ) , en )")
       .union(run("star", "langmatches ( lang ( $o ) , * )"))
@@ -1247,8 +1227,7 @@ object RdfOps {
           Sparql.parse(
             s"""select $$x $$a $$b where {
                |  $$x label $$a . $$x alias $$b . filter ( $filter )
-               |}""".stripMargin),
-          matchValue = (df, pos) => df(pos).getField("value"))
+               |}""".stripMargin))
         .select(lit(t).as("q"), $"x.value".as("x"), $"a.value".as("a"),
           $"b.value".as("b"))
     val res = run("same", "sameterm ( $a , $b )")
@@ -1287,8 +1266,7 @@ object RdfOps {
         |  filter ( datatype ( $dt ) == http://www.w3.org/2001/XMLSchema#string ) .
         |  filter ( isiri ( $u ) )
         |}""".stripMargin)
-    val res = Bgp.compile(view, q,
-      matchValue = (df, pos) => df(pos).getField("value"))
+    val res = Bgp.compile(view, q)
     res.select($"x.value".as("x"), $"v.value".as("v"),
         $"t.value".as("t"), $"lt.value".as("lt"),
         $"lt.lang".as("lt_lang"), $"dt.datatype".as("dt_dt"),
@@ -1369,16 +1347,8 @@ object RdfOps {
   def bgpTyped(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val view = typedTripleView(s, d)
-    val mk = Some((df: DataFrame, pos: String, kind: String) => kind match {
-      case graft.query.QueryUnit.Iri   => df(pos).getField("kind") === "named"
-      case graft.query.QueryUnit.Blank => df(pos).getField("kind") === "blank"
-      case _ => df(pos).getField("kind").isin("raw", "lang", "typed")
-    })
     def run(tag: String, pattern: String): DataFrame =
-      Bgp.compile(view,
-          Sparql.parse(s"select $$x $$p where { $$x $$p $pattern }"),
-          matchValue = (df, pos) => df(pos).getField("value"),
-          matchKind = mk)
+      Bgp.compile(view, Sparql.parse(s"select $$x $$p where { $$x $$p $pattern }"))
         .select(lit(tag).as("q"), $"x.value".as("x"), $"p.value".as("p"))
     val res = run("lit", "\"NATION_2\"")
       .union(run("iri", "<NATION_2>"))

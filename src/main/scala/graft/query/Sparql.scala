@@ -1,8 +1,10 @@
 package graft.query
 
 import graft.Fixpoint
+import graft.rdf.RdfTerm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's query AST rebuilt 1:1 (reference: src/rdf/query.rs:2-31):
   * a `select` list of `$`-prefixed variables plus a `filter` of triple
@@ -1468,8 +1470,8 @@ final case class QFn(fn: String, arg: String) extends QueryUnit
 
 /** A parsed SPARQL 1.1 Update request (see [[Sparql.parseUpdate]]).
   * Patterns/templates stay raw token triples — the executor
-  * ([[graft.store.TripleStore.update]]) parses terms with the store's
-  * own kind mapping. */
+  * ([[graft.store.TripleStore.update]]) parses data terms with
+  * [[QueryUnit.term]]. */
 sealed trait UpdateOp
 object UpdateOp {
   final case class InsertData(
@@ -1523,6 +1525,16 @@ object QueryUnit {
       QVal(s.substring(1, s.length - 1), Some(Lit))
     else if (s.startsWith("_:")) QVal(s.substring(2), Some(Blank))
     else QVal(s)
+
+  /** Data token → term, for update data blocks and CONSTRUCT templates:
+    * bare tokens are IRIs (these are DATA, not patterns — same coercion
+    * as the reference's loader); `"x"` is a plain literal, `_:x` a
+    * blank node. */
+  def term(v: QVal): RdfTerm = v.kind match {
+    case Some(Lit)   => RdfTerm.raw(v.value)
+    case Some(Blank) => RdfTerm.blank(v.value)
+    case _           => RdfTerm.named(v.value)
+  }
 }
 
 /** Generic conjunctive basic-graph-pattern compiler over any DataFrame
@@ -1532,9 +1544,11 @@ object QueryUnit {
   * pushdown plus parquet partition pruning on `p` subsume the 8-way
   * access-path dispatch — and shared variables become equi-joins.
   *
-  * `matchValue` adapts the compiler to the physical term type: for a
-  * plain string triple view it is the column itself; for
-  * `Dataset[Triple]` it is the term struct's `value` field.
+  * The term shape comes from the input's schema ([[Term]]): a string
+  * column is a lexical value with no kind, so typed patterns and the
+  * `is*` filters fail fast on it; a struct column matches by its
+  * `value` field, and by kind too when it has a `kind` field — the
+  * `Dataset[Triple]` term structs, or any view with that field.
   */
 object Bgp {
   private val positions = Seq("s", "p", "o")
@@ -1543,12 +1557,65 @@ object Bgp {
     * this multiple of the predicate's edge count (see pathDf). */
   val HopBudgetFactor: Long = 4L
 
-  def compile(
-      triples: DataFrame,
-      q: Sparql,
-      matchValue: (DataFrame, String) => Column = (df, pos) => df(pos),
-      distinct: Boolean = true,
-      matchKind: Option[(DataFrame, String, String) => Column] = None): DataFrame = {
+  /** A term column read by its data type — the one place that decides
+    * how a pattern position, a FILTER operand or a template constant
+    * meets a term. A string column is a lexical value with no kind. A
+    * struct column is matched by its `value` field; when it also has
+    * `kind`, typed patterns and the `is*` filters are legal on it. */
+  final case class Term(c: Column, dt: DataType) {
+    private val fields: Set[String] = dt match {
+      case st: StructType => st.fieldNames.toSet
+      case _              => Set.empty
+    }
+
+    /** A struct field; a column without it fails fast. */
+    def field(f: String, use: => String): Column = {
+      require(fields(f), s"$use requires a term struct with a '$f' field")
+      c.getField(f)
+    }
+
+    /** The lexical value: the column itself, or the struct's `value`. */
+    def value: Column =
+      if (dt.isInstanceOf[StructType]) field("value", "term matching") else c
+
+    def kindAware: Boolean = fields("kind")
+
+    /** The term kind; a kind-less column fails fast. */
+    def kind(use: => String): Column = {
+      require(kindAware, s"$use requires a kind-aware store")
+      c.getField("kind")
+    }
+
+    /** The typed-syntax rule ([[QueryUnit.parse]]): `<x>` is an IRI,
+      * `_:x` a blank node, `"x"` any literal kind. */
+    def isKind(k: String, use: => String): Column = k match {
+      case QueryUnit.Iri   => kind(use) === RdfTerm.Named
+      case QueryUnit.Blank => kind(use) === RdfTerm.Blank
+      case QueryUnit.Lit   => kind(use).isin(RdfTerm.LiteralKinds: _*)
+    }
+
+    /** A pattern value matched here: by lexical value, plus the kind
+      * rule when the value is typed. */
+    def matches(v: QVal): Column =
+      v.kind.foldLeft(value === lit(v.value))((m, k) => m && isKind(k, s"typed pattern (kind=$k)"))
+
+    /** A template constant in this column's shape: the value itself on
+      * a string column; on a struct column, [[QueryUnit.term]]'s term
+      * restricted to the column's fields. */
+    def constant(v: QVal): Column = dt match {
+      case st: StructType =>
+        // the data mapping yields no lang or datatype, so both stay null
+        val t = RdfTerm.column(QueryUnit.term(v).kind, lit(v.value))
+        struct(st.fieldNames.toSeq.map(f => t.getField(f).as(f)): _*)
+      case _ => lit(v.value)
+    }
+  }
+
+  object Term {
+    def apply(df: DataFrame, name: String): Term = Term(df(name), df.schema(name).dataType)
+  }
+
+  def compile(triples: DataFrame, q: Sparql, distinct: Boolean = true): DataFrame = {
     require(q.conds.nonEmpty || q.graphGroups.nonEmpty || q.subqueries.nonEmpty,
       "empty BGP")
 
@@ -1620,8 +1687,8 @@ object Bgp {
       require(nMax.forall(m => m >= nMin && m <= 16 && (m >= 1 || nMin == 0)),
         s"path quantifier must satisfy 0 <= n <= m <= 16, got {$nMin,${nMax.get}}")
       val edges = data
-        .filter(matchValue(data, "p") === lit(base))
-        .select(matchValue(data, "s").as("_a"), matchValue(data, "o").as("_b"))
+        .filter(Term(data, "p").value === lit(base))
+        .select(Term(data, "s").value.as("_a"), Term(data, "o").value.as("_b"))
         .distinct().localCheckpoint(false)
       def swap(df: DataFrame) = df.select(col("_b").as("_a"), col("_a").as("_b"))
       def compose(l: DataFrame, r: DataFrame) = l.toDF("_a", "_m")
@@ -1650,8 +1717,8 @@ object Bgp {
         }
       }
       def selfPairs = {
-        val terms = data.select(matchValue(data, "s").as("_n"))
-          .union(data.select(matchValue(data, "o").as("_n")))
+        val terms = data.select(Term(data, "s").value.as("_n"))
+          .union(data.select(Term(data, "o").value.as("_n")))
         seed.fold(terms)(v => terms.filter(col("_n") === lit(v)))
           .select(col("_n").as("_a"), col("_n").as("_b"))
       }
@@ -1672,29 +1739,20 @@ object Bgp {
       * values, so the kind constraint binds at the path's ends). A
       * bare value still matches any kind, same as plain patterns. */
     def finishPairs(df0: DataFrame, su: QueryUnit, ou: QueryUnit): DataFrame = {
-      def endpointFilter(dfx: DataFrame, endCol: String, v: String,
-          kind: Option[String]): DataFrame = {
-        val eq = dfx.filter(col(endCol) === lit(v))
-        kind match {
-          case None => eq
-          case Some(k) =>
-            require(matchKind.isDefined,
-              s"typed pattern (kind=$k) requires a kind-aware store")
-            val kindTerms = data
-              .filter(matchValue(data, "s") === lit(v) &&
-                matchKind.get(data, "s", k))
-              .select(matchValue(data, "s").as(endCol))
-              .union(data
-                .filter(matchValue(data, "o") === lit(v) &&
-                  matchKind.get(data, "o", k))
-                .select(matchValue(data, "o").as(endCol)))
-              .distinct()
-            eq.join(kindTerms, Seq(endCol), "left_semi")
+      def endpointFilter(dfx: DataFrame, endCol: String, u: QVal): DataFrame = {
+        val eq = dfx.filter(col(endCol) === lit(u.value))
+        if (u.kind.isEmpty) eq
+        else {
+          def kindTerms(pos: String): DataFrame = {
+            val t = Term(data, pos)
+            data.filter(t.matches(u)).select(t.value.as(endCol))
+          }
+          eq.join(kindTerms("s").union(kindTerms("o")).distinct(), Seq(endCol), "left_semi")
         }
       }
       var df = df0
-      su match { case QVal(v, k) => df = endpointFilter(df, "_a", v, k); case _ => () }
-      ou match { case QVal(v, k) => df = endpointFilter(df, "_b", v, k); case _ => () }
+      su match { case u: QVal => df = endpointFilter(df, "_a", u); case _ => () }
+      ou match { case u: QVal => df = endpointFilter(df, "_b", u); case _ => () }
       (su, ou) match {
         case (QVar(a), QVar(b)) if a == b =>
           df.filter(col("_a") === col("_b")).select(col("_a").as(a))
@@ -1757,26 +1815,19 @@ object Bgp {
         graphVar: Option[String] = None,
         over: DataFrame = data): DataFrame = {
       val units = Seq(pat._1, pat._2, pat._3)
-      // filter bound positions; a TYPED value additionally constrains
-      // the term kind via the store-provided predicate — plain string
-      // triple views carry no kind, so typed syntax there fails fast
-      // rather than silently matching by value only
+      // filter bound positions by the term rule ([[Term.matches]]): a
+      // TYPED value also constrains the kind, and fails fast on a
+      // kind-less view rather than silently matching by value only
       var df = over
       units.zip(positions).foreach {
-        case (QVal(v, k), pos) =>
+        case (v: QVal, pos) =>
+          val t = Term(df, pos)
           // a plain alternation stays ONE scan: the branch list becomes
           // an IN filter on the predicate (pushes down like equality)
-          df =
-            if (pos == "p" && altPreds.isDefined)
-              df.filter(matchValue(df, pos).isin(altPreds.get: _*))
-            else if (pos == "p" && negPreds.isDefined)
-              df.filter(!matchValue(df, pos).isin(negPreds.get: _*))
-            else df.filter(matchValue(df, pos) === lit(v))
-          k.foreach { kind =>
-            require(matchKind.isDefined,
-              s"typed pattern (kind=$kind) requires a kind-aware store")
-            df = df.filter(matchKind.get(df, pos, kind))
-          }
+          df = df.filter(
+            if (pos == "p" && altPreds.isDefined) t.value.isin(altPreds.get: _*)
+            else if (pos == "p" && negPreds.isDefined) !t.value.isin(negPreds.get: _*)
+            else t.matches(v))
         case _ => ()
       }
       // same variable twice in one pattern → positional equality
@@ -1821,8 +1872,7 @@ object Bgp {
           s"graph term must be a name or variable, got accessor: $f")
         case QVal(v, _) =>
           compile(named.filter(named("g") === lit(v)),
-            Sparql(vars = groupVars, conds = pats),
-            matchValue, distinct = false, matchKind)
+            Sparql(vars = groupVars, conds = pats), distinct = false)
         case QVar(gv) =>
           def hasPathSyntax(u: QueryUnit): Boolean = u match {
             case QVal(p, None) => Sparql.pathSyntax(p)
@@ -1844,7 +1894,7 @@ object Bgp {
     val required = joinAll(q.conds.map(patternDf) ++
       q.graphGroups.map { case (t, pats) => graphDf(t, pats) } ++
       // subqueries share the outer query's default-graph dataset
-      q.subqueries.map(sq => compile(data, sq, matchValue, distinct, matchKind)))
+      q.subqueries.map(sq => compile(data, sq, distinct)))
     // OPTIONAL groups: each compiles as its own mini-BGP and
     // left-joins on the variables it shares with the required part
     val joined = q.optionals.foldLeft(required) { (acc, group) =>
@@ -1955,22 +2005,14 @@ object Bgp {
         // accessor/filter machinery — lang()/datatype()/isiri()/
         // sameterm() — exactly like a pattern-bound term.
         case "strdt" | "strlang" | "iri" | "bnode" =>
-          def lex(a: String): Column = {
-            val c0 = col(a)
-            if (a.startsWith("$")) acc.schema(a.substring(1)).dataType match {
-              case _: org.apache.spark.sql.types.StructType => c0.getField("value")
-              case _ => c0
-            } else c0
-          }
-          val ns = lit(null).cast("string")
-          def term(kind: String, lg: Column, dt: Column): Column =
-            struct(lit(kind).as("kind"), lex(args.head).as("value"),
-              lg.as("lang"), dt.as("datatype"))
+          def lex(a: String): Column =
+            if (a.startsWith("$")) Term(acc, a.substring(1)).value else lit(a)
+          val v = lex(args.head)
           fn match {
-            case "iri"     => term("named", ns, ns)
-            case "bnode"   => term("blank", ns, ns)
-            case "strlang" => term("lang", lex(args(1)), ns)
-            case "strdt"   => term("typed", ns, lex(args(1)))
+            case "iri"     => RdfTerm.column(RdfTerm.Named, v)
+            case "bnode"   => RdfTerm.column(RdfTerm.Blank, v)
+            case "strlang" => RdfTerm.column(RdfTerm.Lang, v, lang = lex(args(1)))
+            case "strdt"   => RdfTerm.column(RdfTerm.Typed, v, datatype = lex(args(1)))
           }
         case other => throw new IllegalArgumentException(
           s"unsupported bind function: $other")
@@ -2049,37 +2091,29 @@ object Bgp {
           case other => throw new IllegalArgumentException(
             s"filter function $fnBase takes a variable, got: $other")
         }
-        val term = acc(n)
-        val kindAware = acc.schema(n).dataType match {
-          case st: org.apache.spark.sql.types.StructType => st.fieldNames.contains("kind")
-          case _ => false
-        }
-        def termValue = if (kindAware) term.getField("value") else term
-        def kindCol = {
-          require(kindAware, s"filter function $fnBase requires a kind-aware store")
-          term.getField("kind")
-        }
+        val term = Term(acc, n)
+        val use = s"filter function $fnBase"
         def arg: String = r match {
           case QVal(v, _) => v
           case other => throw new IllegalArgumentException(
             s"filter function $fnBase takes a literal argument, got: $other")
         }
         val raw = fnBase match {
-          case "bound"     => term.isNotNull
-          case "isiri"     => kindCol === "named"
-          case "isblank"   => kindCol === "blank"
-          case "isliteral" => kindCol.isin("raw", "lang", "typed")
+          case "bound"     => term.c.isNotNull
+          case "isiri"     => term.isKind(QueryUnit.Iri, use)
+          case "isblank"   => term.isKind(QueryUnit.Blank, use)
+          case "isliteral" => term.isKind(QueryUnit.Lit, use)
           // isNumeric (§17.4.2.4): a literal whose lexical form parses
           // numerically. On a kind-aware store lang-tagged literals are
           // excluded (numeric literals are plain/typed per spec); a
           // plain string view has only the lexical test.
           case "isnumeric" =>
-            val numericVal = termValue.try_cast("double").isNotNull
-            if (kindAware) kindCol.isin("raw", "typed") && numericVal
+            val numericVal = term.value.try_cast("double").isNotNull
+            if (term.kindAware) term.kind(use).isin(RdfTerm.Raw, RdfTerm.Typed) && numericVal
             else numericVal
-          case "strstarts" => termValue.startsWith(arg)
-          case "strends"   => termValue.endsWith(arg)
-          case "contains"  => termValue.contains(arg)
+          case "strstarts" => term.value.startsWith(arg)
+          case "strends"   => term.value.endsWith(arg)
+          case "contains"  => term.value.contains(arg)
           case other => throw new IllegalArgumentException(
             s"unsupported filter function: $other")
         }
@@ -2091,25 +2125,16 @@ object Bgp {
         // term accessors (SPARQL §17.4.2), totalized per spec with
         // type errors as null (→ row filtered, like the numeric path)
         case QFn(fn, n) =>
-          val term = acc(n)
-          val st = acc.schema(n).dataType match {
-            case t: org.apache.spark.sql.types.StructType => Some(t)
-            case _ => None
-          }
-          def field(f: String): Column = {
-            require(st.exists(_.fieldNames.contains(f)),
-              s"filter accessor $fn() requires a term struct with a '$f' field")
-            term.getField(f)
-          }
-          def lexical: Column = if (st.isDefined) field("value") else term
+          val term = Term(acc, n)
+          def field(f: String): Column = term.field(f, s"filter accessor $fn()")
           fn match {
-            case "str"    => lexical
+            case "str"    => term.value
             // string accessors run on the lexical form; strlen keeps
             // the all-terms-are-strings invariant (the numeric-literal
             // dispatch re-casts both sides for `strlen($x) > 5`)
-            case "strlen" => length(lexical).cast("string")
-            case "ucase"  => upper(lexical)
-            case "lcase"  => lower(lexical)
+            case "strlen" => length(term.value).cast("string")
+            case "ucase"  => upper(term.value)
+            case "lcase"  => lower(term.value)
             case "lang" =>
               when(field("kind") === "lang", coalesce(field("lang"), lit("")))
                 .when(field("kind").isin("raw", "typed"), lit(""))
@@ -2342,29 +2367,23 @@ object Bgp {
 
   /** ASK evaluation: LIMIT 1 then existence — the engine stops at the
     * first solution instead of materializing the result set. */
-  def ask(
-      triples: DataFrame,
-      q: Sparql,
-      matchValue: (DataFrame, String) => Column = (df, pos) => df(pos)): Boolean =
-    !compile(triples, q, matchValue, distinct = false).limit(1).isEmpty
+  def ask(triples: DataFrame, q: Sparql): Boolean =
+    !compile(triples, q, distinct = false).limit(1).isEmpty
 
   /** CONSTRUCT evaluation: instantiate each template triple per
-    * solution (variables → solution bindings, constants → literals),
-    * union, set-distinct — the output is itself a valid (s, p, o)
-    * triple view, so constructed graphs feed straight back into
-    * [[compile]]. */
-  def construct(
-      triples: DataFrame,
-      tmpl: Seq[Seq[String]],
-      q: Sparql,
-      matchValue: (DataFrame, String) => Column = (df, pos) => df(pos)): DataFrame = {
+    * solution (variables → solution bindings, constants → terms in the
+    * input's shape, [[Term.constant]]), union, set-distinct — the output
+    * is itself a triple view of the input's shape, so constructed graphs
+    * feed straight back into [[compile]], and over `Dataset[Triple]`
+    * term structs it reads back `.as[Triple]`. */
+  def construct(triples: DataFrame, tmpl: Seq[Seq[String]], q: Sparql): DataFrame = {
     require(tmpl.nonEmpty, "empty construct template")
-    val sol = compile(triples, q, matchValue, distinct = false)
+    val sol = compile(triples, q, distinct = false)
     val parts = tmpl.map { pat =>
-      val cols = pat.zip(Seq("s", "p", "o")).map { case (tok, pos) =>
+      val cols = pat.zip(positions).map { case (tok, pos) =>
         (QueryUnit.parse(tok) match {
-          case QVar(n)    => sol(n)
-          case QVal(v, _) => lit(v)
+          case QVar(n)  => sol(n)
+          case v: QVal  => Term(triples, pos).constant(v)
           case other => throw new IllegalArgumentException(
             s"template position must be a variable or value, got: $other")
         }).as(pos)
@@ -2375,27 +2394,21 @@ object Bgp {
   }
 
   /** DESCRIBE evaluation: one scan with an OR filter (both bound
-    * positions push to the same scan — no union of two passes). */
-  def describe(
-      triples: DataFrame,
-      term: String,
-      matchValue: (DataFrame, String) => Column = (df, pos) => df(pos)): DataFrame =
+    * positions push to the same scan — no union of two passes); terms
+    * match by lexical value. */
+  def describe(triples: DataFrame, term: String): DataFrame =
     triples.filter(
-      matchValue(triples, "s") === lit(term) ||
-      matchValue(triples, "o") === lit(term))
+      Term(triples, "s").value === lit(term) ||
+      Term(triples, "o").value === lit(term))
 
   /** SPARQL UNION: evaluate each alternative and take the set union.
     * Alternatives may bind different variable subsets — missing
     * columns null-fill (standard SPARQL multiset-union semantics,
     * then set-distinct like [[compile]]). */
-  def compileUnion(
-      triples: DataFrame,
-      qs: Seq[Sparql],
-      matchValue: (DataFrame, String) => Column = (df, pos) => df(pos),
-      distinct: Boolean = true): DataFrame = {
+  def compileUnion(triples: DataFrame, qs: Seq[Sparql]): DataFrame = {
     require(qs.nonEmpty, "empty union")
-    val compiled = qs.map(q => compile(triples, q, matchValue, distinct = false))
-    val unioned = compiled.reduce(_.unionByName(_, allowMissingColumns = true))
-    if (distinct) unioned.distinct() else unioned
+    qs.map(q => compile(triples, q, distinct = false))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .distinct()
   }
 }

@@ -1,5 +1,8 @@
 package graft.rdf
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, struct}
+
 /** RDF term — the rebuild of the reference's 5-variant `RdfNode` enum
   * (reference: src/lib.rs:21-28). A single case class (not a sealed
   * trait) so Spark's product encoder applies directly and a
@@ -17,7 +20,7 @@ final case class RdfTerm(
     lang: Option[String],
     datatype: Option[String]) {
 
-  def isLiteral: Boolean = kind == "raw" || kind == "lang" || kind == "typed"
+  def isLiteral: Boolean = RdfTerm.LiteralKinds.contains(kind)
 
   /** N-Triples-ish rendering (used for diagnostics and sort keys). */
   def render: String = kind match {
@@ -36,6 +39,19 @@ object RdfTerm {
   val Raw   = "raw"
   val Lang  = "lang"
   val Typed = "typed"
+
+  /** The kinds a literal pattern (`"x"`) and `isLiteral` accept. */
+  val LiteralKinds: Seq[String] = Seq(Raw, Lang, Typed)
+
+  /** A term as a column with exactly this class's encoder schema
+    * (kind, value, lang, datatype), so `.as[Triple]` over a projection
+    * of such columns is an analysis-time view. Null lang and datatype
+    * default to a null string. */
+  def column(kind: String, value: Column, lang: Column = nullString,
+      datatype: Column = nullString): Column =
+    struct(lit(kind).as("kind"), value.as("value"), lang.as("lang"), datatype.as("datatype"))
+
+  private def nullString: Column = lit(null).cast("string")
 
   def named(iri: String): RdfTerm          = RdfTerm(Named, iri, None, None)
   def blank(id: String): RdfTerm           = RdfTerm(Blank, id, None, None)

@@ -5,7 +5,7 @@ import scala.collection.immutable.VectorMap
 import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
@@ -132,21 +132,8 @@ final class TripleStore private (
     * Typed pattern values (`<x>` / `"x"` / `_:x`, round-3 verdict #9)
     * additionally constrain the term KIND, so the IRI `alice` and the
     * literal `"alice"` are distinguishable; bare values keep the
-    * documented match-any-kind-by-value divergence. */
-  def query(q: Sparql): DataFrame =
-    Bgp.compile(triples.toDF(), q,
-      matchValue = (df, pos) => df(pos).getField("value"),
-      matchKind = Some((df, pos, kind) => {
-        val k = df(pos).getField("kind")
-        kind match {
-          case graft.query.QueryUnit.Iri   => k === RdfTerm.Named
-          case graft.query.QueryUnit.Blank => k === RdfTerm.Blank
-          // "lit" spans all three literal kinds (lexical-value match;
-          // lang/datatype refinement is not in the pattern syntax)
-          case graft.query.QueryUnit.Lit =>
-            k.isin(RdfTerm.Raw, RdfTerm.Lang, RdfTerm.Typed)
-        }
-      }))
+    * documented match-any-kind-by-value divergence ([[Bgp.Term]]). */
+  def query(q: Sparql): DataFrame = Bgp.compile(triples.toDF(), q)
 
   /** SPARQL 1.1 Update (reference mutations behind standard syntax —
     * insert_triple graph.rs:414-509, remove_triple graph.rs:510-629,
@@ -159,7 +146,7 @@ final class TripleStore private (
     *    UNHINTED anti-join — the delete set derives from the data and
     *    scales with it, so unlike the driver-list path it must not be
     *    forced to broadcast; AQE picks broadcast only while it fits.
-    *  - insert { template } where: CONSTRUCT-style instantiation
+    *  - insert { template } where: [[Bgp.construct]] over the triples,
     *    unioned in with set semantics.
     *
     * Bare tokens in update blocks are IRIs (update blocks are DATA,
@@ -195,9 +182,8 @@ final class TripleStore private (
         // Matching uses the PATTERN-MATCH rule (bare value = any
         // kind), not a Named-coerced exact triple.
         val t = triples.toDF()
-        val conds = parsed.map(pat =>
-          patternCond(t, "s", pat._1) && patternCond(t, "p", pat._2) &&
-            patternCond(t, "o", pat._3))
+        val conds = parsed.map(pat => Seq(("s", pat._1), ("p", pat._2), ("o", pat._3))
+          .collect { case (pos, v: QVal) => Bgp.Term(t, pos).matches(v) }.reduce(_ && _))
         val allMatch = conds.forall(c => !t.filter(c).isEmpty)
         if (!allMatch) this
         else derive(t.filter(!conds.reduce(_ || _)).as[Triple])
@@ -212,7 +198,7 @@ final class TripleStore private (
         val kept = parsed.foldLeft(triples.toDF()) { (t, pat) =>
           val cond = Seq(("s", pat._1), ("p", pat._2), ("o", pat._3)).map {
             case (pos, QVar(n))    => t(pos) <=> sol(n)
-            case (pos, v: QVal)    => patternCond(t, pos, v)
+            case (pos, v: QVal)    => Bgp.Term(t, pos).matches(v)
             case (_, other) => throw new IllegalArgumentException(
               s"pattern position must be a variable or value, got: $other")
           }.reduce(_ && _)
@@ -225,48 +211,8 @@ final class TripleStore private (
         (QueryUnit.parse(p(0)), QueryUnit.parse(p(1)), QueryUnit.parse(p(2))))
       val vars = parsed.flatMap(t => Seq(t._1, t._2, t._3))
         .collect { case QVar(n) => n }.distinct
-      val tmplParsed = tmpl.map(p =>
-        (QueryUnit.parse(p(0)), QueryUnit.parse(p(1)), QueryUnit.parse(p(2))))
-      val ins = instantiate(tmplParsed, query(Sparql(vars, parsed)))
-      derive(triples.toDF().unionByName(ins).distinct().as[Triple])
-  }
-
-  /** Template instantiation over a solution set: variables take the
-    * solution's term structs, values become typed term literals — one
-    * (s, p, o) row set per template pattern, set-unioned. */
-  private def instantiate(
-      tmpl: Seq[(QueryUnit, QueryUnit, QueryUnit)], sol: DataFrame): DataFrame = {
-    val parts = tmpl.map { case (su, pu, ou) =>
-      def c(u: QueryUnit, as: String): Column = u match {
-        case QVar(n)    => sol(n).as(as)
-        case v: QVal    => typedlit(TripleStore.termOf(v)).as(as)
-        case other => throw new IllegalArgumentException(
-          s"template position must be a variable or value, got: $other")
-      }
-      sol.select(c(su, "s"), c(pu, "p"), c(ou, "o"))
-    }
-    parts.reduce(_ unionByName _).distinct()
-  }
-
-  /** The store's pattern-match rule as a Column predicate: a bare
-    * value matches any term kind by lexical value; a kind tag
-    * restricts like [[query]]'s matchKind. Used by delete-where so
-    * deletions hit exactly what the pattern matched. */
-  private def patternCond(t: DataFrame, pos: String, u: QueryUnit): Column = u match {
-    case QVal(v, kind) =>
-      val valueEq = t(pos).getField("value") === v
-      kind match {
-        case None => valueEq
-        case Some(graft.query.QueryUnit.Iri) =>
-          valueEq && t(pos).getField("kind") === RdfTerm.Named
-        case Some(graft.query.QueryUnit.Blank) =>
-          valueEq && t(pos).getField("kind") === RdfTerm.Blank
-        case Some(_) =>
-          valueEq && t(pos).getField("kind")
-            .isin(RdfTerm.Raw, RdfTerm.Lang, RdfTerm.Typed)
-      }
-    case other => throw new IllegalArgumentException(
-      s"patternCond takes a concrete value, got: $other")
+      val t = triples.toDF()
+      derive(t.unionByName(Bgp.construct(t, tmpl, Sparql(vars, parsed))).distinct().as[Triple])
   }
 
   /** Parity API (reference: Graph::get, graph.rs:333-413): collect the
@@ -379,18 +325,11 @@ object TripleStore {
   private[store] type Delta = VectorMap[Triple, Unit]
   private[store] val NoDelta: Delta = VectorMap.empty
 
-  /** Update-block token → term: bare tokens are IRIs (update blocks
-    * are DATA, not patterns — same coercion as the reference's loader);
-    * `"x"` literal, `_:x` blank. Shared with [[QuadStore]]. */
-  private[store] def termOf(v: QVal): RdfTerm = v.kind match {
-    case Some(graft.query.QueryUnit.Lit)   => RdfTerm.raw(v.value)
-    case Some(graft.query.QueryUnit.Blank) => RdfTerm.blank(v.value)
-    case _                                 => RdfTerm.named(v.value)
-  }
-
+  /** Update-data-block tokens → a triple ([[QueryUnit.term]]). Shared
+    * with [[QuadStore]]. */
   private[store] def dataTriple(p: Seq[String]): Triple = {
     def t(tok: String): RdfTerm = QueryUnit.parse(tok) match {
-      case v: QVal => termOf(v)
+      case v: QVal => QueryUnit.term(v)
       case other => throw new IllegalArgumentException(
         s"update data block takes concrete terms, got: $other")
     }

@@ -163,9 +163,7 @@ class ScaleSpec extends SparkSpec {
     // dead-branch pruning above
     val q = query.Sparql.parse("select $x $p where { $x $p \"NATION_2\" }")
     val view = operators.RdfOps.typedTripleView(spark, sf0001)
-    val df = query.Bgp.compile(view, q,
-      matchValue = (d, pos) => d(pos).getField("value"),
-      matchKind = Some((d, pos, _) => d(pos).getField("kind") === "raw"))
+    val df = query.Bgp.compile(view, q)
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("Union"), optimized)
     assert(optimized.contains("nation_label"), optimized) // surviving branch

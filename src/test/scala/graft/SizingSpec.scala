@@ -119,4 +119,10 @@ class SizingSpec extends SparkSpec {
       "createTempFile" -> """\bcreateTempFile\b""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("term kinds are read only by graft.query's term rule") {
+    val hits = queryPathHits("getField(\"kind\")" -> """getField\("kind"\)""".r)
+      .filterNot(_.contains("/query/"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -359,23 +359,57 @@ class SparqlParseSpec extends SparkSpec {
 
   test("typed closure endpoints honor term kinds (round-5 advice)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit, struct}
     val chain = Seq(("a", "next", "b"), ("b", "next", "c")).toDF("s", "p", "o")
     // a typed endpoint on a kind-UNAWARE store fails fast, mirroring
     // plainPatternDf — it must not silently fall back to value-only
     val q = Sparql.parse("select $y where { <a> next+ $y }")
     assertThrows[IllegalArgumentException](Bgp.compile(chain, q).collect())
-    // kind-aware: all terms are IRIs, so the iri-typed endpoint matches…
-    val kinds = chain
-      .withColumn("sk", lit("iri")).withColumn("pk", lit("iri"))
-      .withColumn("ok", lit("iri"))
-    val mk = Some((df: org.apache.spark.sql.DataFrame, pos: String, kind: String) =>
-      df(pos + "k") === lit(kind))
-    assert(Bgp.compile(kinds, q, matchKind = mk).orderBy("y").collect().toSeq ==
+    // kind-aware (kind, value) structs: all terms are IRIs, so the
+    // iri-typed endpoint matches…
+    val kinds = chain.select(Seq("s", "p", "o").map(c =>
+      struct(lit("named").as("kind"), col(c).as("value")).as(c)): _*)
+    assert(Bgp.compile(kinds, q).orderBy("y").collect().toSeq ==
       Seq(Row("b"), Row("c")))
     // …while a literal-typed endpoint of the same lexical value does not
     val ql = Sparql.parse("select $y where { \"a\" next+ $y }")
-    assert(Bgp.compile(kinds, ql, matchKind = mk).count() == 0)
+    assert(Bgp.compile(kinds, ql).count() == 0)
+  }
+
+  test("ask, union, describe and construct read the term shape from the schema") {
+    import spark.implicits._
+    import graft.rdf.{RdfTerm, Triple}
+    // (kind, value) structs where every nation name is both an IRI
+    // (in_nation) and a plain literal (nation_label)
+    val view = graft.operators.RdfOps.typedTripleView(spark, sf0001)
+    assert(Bgp.ask(view, Sparql.parseAsk("ask where { $x in_nation <NATION_2> }")))
+    assert(!Bgp.ask(view, Sparql.parseAsk("ask where { $x nation_label <NATION_2> }")))
+    val byKind = Bgp.compileUnion(view, Sparql.parseUnion(
+      """select $x $p where {
+        |  { $x in_nation <NATION_2> . $x $p <NATION_2> }
+        |  union
+        |  { $x nation_label "NATION_2" . $x $p "NATION_2" }
+        |}""".stripMargin))
+      .select($"x.value".as("x"), $"p.value".as("p")).collect().toSeq
+    val customers = view.filter($"o.value" === "NATION_2" && $"p.value" === "in_nation")
+      .select($"s.value").as[String].collect().toSet
+    assert(customers.nonEmpty)
+    assert(byKind.groupBy(_.getString(1)).map { case (p, rs) => p -> rs.map(_.getString(0)).toSet } ==
+      Map("in_nation" -> customers, "nation_label" -> customers))
+    // describe matches by lexical value: both kinds' edges
+    val described = Bgp.describe(view, "NATION_2")
+    assert(described.select($"o.kind").as[String].collect().toSet == Set("named", "raw"))
+    assert(described.count() == 2L * customers.size)
+    // a template constant takes the input's term shape: over the
+    // store's term structs the result reads back as triples
+    val store = graft.store.TripleStore.fromTriples(spark, Seq(
+      Triple(RdfTerm.named("alice"), RdfTerm.named("knows"), RdfTerm.named("bob")),
+      Triple(RdfTerm.named("bob"), RdfTerm.named("knows"), RdfTerm.raw("carol"))))
+    val (tmpl, cq) = Sparql.parseConstruct("construct { $b knows_of $a } where { $a knows $b }")
+    val built = Bgp.construct(store.triples.toDF(), tmpl, cq).as[Triple].collect().toSet
+    assert(built == Set(
+      Triple(RdfTerm.named("bob"), RdfTerm.named("knows_of"), RdfTerm.named("alice")),
+      Triple(RdfTerm.raw("carol"), RdfTerm.named("knows_of"), RdfTerm.named("bob"))))
   }
 
   test("values clause restricts a variable to the listed terms") {
@@ -773,8 +807,7 @@ class SparqlParseSpec extends SparkSpec {
         term("named", "iriobj").as("o")))
     def subjects(filter: String) =
       Bgp.compile(view,
-          Sparql.parse(s"select $$x $$o where { $$x p1 $$o . filter ( $filter ) }"),
-          matchValue = (df, pos) => df(pos).getField("value"))
+          Sparql.parse(s"select $$x $$o where { $$x p1 $$o . filter ( $filter ) }"))
         .select(col("x.value")).collect().map(_.getString(0)).sorted.toSeq
     assert(subjects("lang ( $o ) == en") == Seq("s1"))
     // plain AND typed literals have lang "" (spec totalization); IRIs

@@ -450,4 +450,17 @@ class TripleStoreSpec extends SparkSpec {
     assert(cached.get(q) == Seq(RdfTerm.named("s9")))
     cached.triples.unpersist()
   }
+
+  test("named-term views are analysis-time projections in the Triple encoder's schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, SerializeFromObject}
+    val ds = graft.operators.RdfOps.namedTriples(Seq(("a", "p", "b")).toDF("s", "p", "o"))
+    // names, order and types; nullability is the encoder's to relax
+    assert(ds.schema.catalogString == Encoders.product[Triple].schema.catalogString)
+    val plan = ds.queryExecution.optimizedPlan
+    assert(plan.collect { case n: DeserializeToObject => n; case n: SerializeFromObject => n }
+      .isEmpty, plan)
+    assert(ds.collect().toSeq == Seq(t("a", "p", "b")))
+  }
 }
