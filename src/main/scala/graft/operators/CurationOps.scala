@@ -1783,10 +1783,7 @@ object CurationOps {
     // materialize the tiny result so the probe cache releases here
     // (it previously stayed pinned for the session — ADVICE r15); the
     // on-disk index deliberately survives for the append lifecycle
-    import scala.jdk.CollectionConverters._
-    val rows = out.collect().toSeq
-    probes.unpersist()
-    s.createDataFrame(rows.asJava, out.schema)
+    graft.Tables.materializeAndRelease(out, probes)
   }
 
   def docRagIndex(s: SparkSession, d: String): DataFrame = {

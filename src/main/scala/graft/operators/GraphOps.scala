@@ -6,8 +6,10 @@ import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Graph analytics on the triple view via GraphX (BASELINE.json:
-  * "GraphX for analytics queries"). Vertex ids come from
+/** Graph analytics on the triple view. Degrees is a group-by and label
+  * propagation a DataFrame loop; connected components, PageRank,
+  * triangles and landmark shortest paths run on GraphX (BASELINE.json:
+  * "GraphX for analytics queries"). GraphX vertex ids come from
   * [[graft.store.Dict.encode]] — dense, deterministic (sorted term
   * order), so results are reproducible and the minimum vertex id of a
   * component is the lexicographically smallest term, which gives
@@ -44,14 +46,13 @@ object GraphOps {
     (dict, XGraph(vRdd, eRdd))
   }
 
-  /** Vertex degrees — GraphX result joined back to terms; oracle is a
-    * plain SQL degree count over the triple view. */
+  /** Vertex degrees: one group-by over both term positions of the
+    * triple view, the same count its oracle runs. */
   def graphxDegrees(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (dict, g) = buildGraph(s, d)
-    val deg = s.createDataFrame(g.degrees.map(x => (x._1, x._2.toLong)))
-      .toDF("id", "degree")
-    dict.join(deg, "id").select($"term", $"degree").orderBy($"term")
+    val t = RdfOps.tripleView(s, d)
+    t.select($"s".as("term")).union(t.select($"o".as("term")))
+      .groupBy($"term").agg(count(lit(1)).as("degree")).orderBy($"term")
   }
   val graphxDegreesSql: String =
     s"""${RdfOps.tripleViewSql}

@@ -144,13 +144,10 @@ object MlOps {
     // the index directory can be deleted before returning; otherwise
     // the caller would hold a lazy plan over files we remove here, and
     // repeated runs would leak one index tree per call.
-    import scala.jdk.CollectionConverters._
-    val rows = out.collect().toSeq
-    e.unpersist(); probes.unpersist()
+    val res = graft.Tables.materializeAndRelease(out, e, probes)
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    s.createDataFrame(rows.asJava, out.schema)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    res
   }
 
   /** Product-quantization ANN (Jégou et al. 2011): unit-normalized
@@ -612,11 +609,10 @@ object MlOps {
       .orderBy($"list_id")
     // catalog-sized result: materialize so the index tree can be
     // removed before returning (same no-leak contract as simAnnIvfIndex)
-    import scala.jdk.CollectionConverters._
-    val rows = out.collect().toSeq
+    val res = graft.Tables.materializeAndRelease(out)
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    s.createDataFrame(rows.asJava, out.schema)
+    res
   }
 
   /** Build leg of [[simAnnIvfBalance]]: the corpus assigned with the
@@ -857,10 +853,7 @@ object MlOps {
         expr("(1000000L * n_hit_before) div 3").as("recall_before_ppm"),
         expr("(1000000L * n_hit_after) div 3").as("recall_after_ppm"))
       .orderBy($"qid")
-    import scala.jdk.CollectionConverters._
-    val rows = out.collect().toSeq // queries-sized; release the cache
-    e.unpersist()
-    s.createDataFrame(rows.asJava, out.schema)
+    graft.Tables.materializeAndRelease(out, e) // queries-sized; release the cache
   }
   /** Oracle: the shared balance replay ([[ivfBalanceCtesBody]] —
     * identical fit, hot rule, sub-fits, post-split assignment), an

@@ -1681,46 +1681,52 @@ object Bgp {
       * nMin = 0 adds the zero-length part: every graph term — from both
       * positions of ALL triples, not just base edges (SPARQL 1.1 §9.3,
       * PropertyPathEval ZeroOrMorePath) — reaches itself; for a bound
-      * endpoint only the seed does, iff it is a graph term. */
+      * endpoint only the seed does, iff it is a graph term.
+      *
+      * A path runs on the term columns themselves, by the one rule every
+      * other pattern uses: its edges are the raw (s, o) columns of the
+      * triples whose predicate [[Term.matches]] `base`, it composes,
+      * deduplicates and seeds on those columns, and a bound endpoint is
+      * found by [[Term.matches]]. So a path variable has the same type
+      * as any other variable, and a typed endpoint is a typed pattern:
+      * it fails fast on a kind-less view and checks the kind on a
+      * kind-aware one, while a bare value matches every kind. */
     def pathDf(base: String, nMin: Int, nMax: Option[Int],
         su: QueryUnit, ou: QueryUnit): DataFrame = {
       require(nMax.forall(m => m >= nMin && m <= 16 && (m >= 1 || nMin == 0)),
         s"path quantifier must satisfy 0 <= n <= m <= 16, got {$nMin,${nMax.get}}")
       val edges = data
-        .filter(Term(data, "p").value === lit(base))
-        .select(Term(data, "s").value.as("_a"), Term(data, "o").value.as("_b"))
+        .filter(Term(data, "p").matches(QVal(base)))
+        .select(data("s").as("_a"), data("o").as("_b"))
         .distinct().localCheckpoint(false)
       def swap(df: DataFrame) = df.select(col("_b").as("_a"), col("_a").as("_b"))
       def compose(l: DataFrame, r: DataFrame) = l.toDF("_a", "_m")
         .join(r.toDF("_m", "_b"), "_m").select(col("_a"), col("_b"))
       val (seed, forward) = (su, ou) match {
-        case (QVal(v, _), _) => (Some(v), true)
-        case (_, QVal(v, _)) => (Some(v), false)
-        case _               => (None, true)
+        case (u: QVal, _) => (Some(u), true)
+        case (_, u: QVal) => (Some(u), false)
+        case _            => (None, true)
       }
+      def seeded(df: DataFrame, end: String) =
+        seed.fold(df)(u => df.filter(Term(df, end).matches(u)))
       // pairs joined by max(nMin, 1)..nMax hops over e, from the seed only
-      def hops(e: DataFrame): DataFrame = {
-        def from(r: DataFrame) = seed.fold(r)(v => r.filter(col("_a") === lit(v)))
-        nMax match {
-          case Some(m) =>
-            val ks = Iterator.iterate(from(e))(f => compose(f, e).distinct().localCheckpoint(false))
-              .take(m).drop(math.max(nMin, 1) - 1).toSeq
-            if (ks.size == 1) ks.head else ks.reduce(_ union _).distinct()
-          case None if seed.isEmpty =>
-            Fixpoint.iterate(e, Int.MaxValue, Long.MaxValue)(
-              (all, delta) => compose(all, delta).except(all))
-          case None =>
-            val hop = Fixpoint.iterate(e, 6, e.count() * Bgp.HopBudgetFactor)(
-              (all, _) => compose(all, all).except(all))
-            Fixpoint.iterate(from(hop), Int.MaxValue, Long.MaxValue)(
-              (all, delta) => compose(delta, hop).except(all))
-        }
+      def hops(e: DataFrame): DataFrame = nMax match {
+        case Some(m) =>
+          val ks = Iterator.iterate(seeded(e, "_a"))(f => compose(f, e).distinct().localCheckpoint(false))
+            .take(m).drop(math.max(nMin, 1) - 1).toSeq
+          if (ks.size == 1) ks.head else ks.reduce(_ union _).distinct()
+        case None if seed.isEmpty =>
+          Fixpoint.iterate(e, Int.MaxValue, Long.MaxValue)(
+            (all, delta) => compose(all, delta).except(all))
+        case None =>
+          val hop = Fixpoint.iterate(e, 6, e.count() * Bgp.HopBudgetFactor)(
+            (all, _) => compose(all, all).except(all))
+          Fixpoint.iterate(seeded(hop, "_a"), Int.MaxValue, Long.MaxValue)(
+            (all, delta) => compose(delta, hop).except(all))
       }
       def selfPairs = {
-        val terms = data.select(Term(data, "s").value.as("_n"))
-          .union(data.select(Term(data, "o").value.as("_n")))
-        seed.fold(terms)(v => terms.filter(col("_n") === lit(v)))
-          .select(col("_n").as("_a"), col("_n").as("_b"))
+        val terms = data.select(data("s").as("_n")).union(data.select(data("o").as("_n")))
+        seeded(terms, "_n").select(col("_n").as("_a"), col("_n").as("_b"))
       }
       // every hops result is duplicate-free; only the zero-length union needs a distinct
       val walked = Option.when(!nMax.contains(0))(
@@ -1730,29 +1736,13 @@ object Bgp {
         su, ou)
     }
 
-    /** [[pathDf]]'s tail over its (_a, _b) pair set:
-      * typed-endpoint enforcement plus the final variable projection.
-      * Typed endpoints mirror plainPatternDf's contract: a kind tag on
-      * a kind-unaware store fails fast, and on a kind-aware store the
-      * endpoint must be a term of that kind (semi-join against the
-      * kind-matching term set — the path itself runs over lexical
-      * values, so the kind constraint binds at the path's ends). A
-      * bare value still matches any kind, same as plain patterns. */
-    def finishPairs(df0: DataFrame, su: QueryUnit, ou: QueryUnit): DataFrame = {
-      def endpointFilter(dfx: DataFrame, endCol: String, u: QVal): DataFrame = {
-        val eq = dfx.filter(col(endCol) === lit(u.value))
-        if (u.kind.isEmpty) eq
-        else {
-          def kindTerms(pos: String): DataFrame = {
-            val t = Term(data, pos)
-            data.filter(t.matches(u)).select(t.value.as(endCol))
-          }
-          eq.join(kindTerms("s").union(kindTerms("o")).distinct(), Seq(endCol), "left_semi")
-        }
+    /** [[pathDf]]'s tail over its (_a, _b) pair set: each bound endpoint
+      * filtered by [[Term.matches]], then the variable projection. */
+    def finishPairs(pairs: DataFrame, su: QueryUnit, ou: QueryUnit): DataFrame = {
+      val df = Seq("_a" -> su, "_b" -> ou).foldLeft(pairs) {
+        case (d, (end, u: QVal)) => d.filter(Term(d, end).matches(u))
+        case (d, _)              => d
       }
-      var df = df0
-      su match { case u: QVal => df = endpointFilter(df, "_a", u); case _ => () }
-      ou match { case u: QVal => df = endpointFilter(df, "_b", u); case _ => () }
       (su, ou) match {
         case (QVar(a), QVar(b)) if a == b =>
           df.filter(col("_a") === col("_b")).select(col("_a").as(a))

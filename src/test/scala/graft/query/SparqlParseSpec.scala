@@ -366,10 +366,13 @@ class SparqlParseSpec extends SparkSpec {
     val q = Sparql.parse("select $y where { <a> next+ $y }")
     assertThrows[IllegalArgumentException](Bgp.compile(chain, q).collect())
     // kind-aware (kind, value) structs: all terms are IRIs, so the
-    // iri-typed endpoint matches…
+    // iri-typed endpoint matches, and the path variable is the view's
+    // term struct like any other variable…
     val kinds = chain.select(Seq("s", "p", "o").map(c =>
       struct(lit("named").as("kind"), col(c).as("value")).as(c)): _*)
-    assert(Bgp.compile(kinds, q).orderBy("y").collect().toSeq ==
+    val ys = Bgp.compile(kinds, q)
+    assert(ys.schema("y").dataType == kinds.schema("o").dataType)
+    assert(ys.select(col("y.value")).orderBy("value").collect().toSeq ==
       Seq(Row("b"), Row("c")))
     // …while a literal-typed endpoint of the same lexical value does not
     val ql = Sparql.parse("select $y where { \"a\" next+ $y }")

@@ -243,6 +243,29 @@ class TripleStoreSpec extends SparkSpec {
       st.update("delete where { $v b/c $w }"))
   }
 
+  test("a path variable is a term: it joins plain patterns and TripleStore.get returns it") {
+    val st = TripleStore.fromTriples(spark, Seq(
+      t("a", "next", "b"), t("b", "next", "c"),
+      Triple(RdfTerm.named("b"), RdfTerm.named("name"), RdfTerm.raw("Bee")),
+      Triple(RdfTerm.named("c"), RdfTerm.named("name"), RdfTerm.raw("Cee"))))
+    val q = Sparql.parse("select $y $n where { a next+ $y . $y name $n }")
+    assert(st.query(q).selectExpr("y.value", "n.value").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet == Set(("b", "Bee"), ("c", "Cee")))
+    assert(st.get(q).sortBy(_.value) == Seq(RdfTerm.named("b"), RdfTerm.named("c")))
+  }
+
+  test("paths join whole terms: a literal does not continue from the IRI it spells") {
+    val st = TripleStore.fromTriples(spark, Seq(
+      Triple(RdfTerm.named("a"), RdfTerm.named("next"), RdfTerm.raw("b")),
+      t("b", "next", "c")))
+    def q(path: String) = Sparql.parse(s"select $$y where { a $path $$y }")
+    def ys(path: String) = st.get(q(path)).toSet
+    assert(st.query(q("next+")).count() == 1) // not also the c behind the IRI b
+    assert(ys("next+") == Set(RdfTerm.raw("b")))
+    assert(ys("next/next").isEmpty)
+    assert(ys("next{2}") == ys("next/next"))
+  }
+
   test("typed/lang literals survive store round-trip") {
     val lits = Seq(
       Triple(RdfTerm.named("s1"), RdfTerm.named("p"), RdfTerm.langLit("hi", "en")),
