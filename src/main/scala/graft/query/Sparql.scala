@@ -15,7 +15,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * artifacts, not features):
   *  - n shared variables join correctly (reference assumes exactly one);
   *  - results are set-distinct rows over ALL selected variables
-  *    (reference: bag with a first-index-only dedup bug);
+  *    (reference: bag with a first-index-only dedup bug). The global
+  *    `distinct` that makes them so is redundant when the input is a
+  *    set of triples and every constant names one term: plain patterns
+  *    whose constants are all `<x>` / `_:x` and whose variables are
+  *    all projected, with only FILTER, ORDER BY, LIMIT and OFFSET
+  *    besides, already yield distinct rows ([[Bgp.distinctOverSet]]),
+  *    and `TripleStore.query` skips it for them;
   *  - BARE pattern values match any term by value (reference coerces
   *    literals to Named IRIs, making literals unmatchable,
   *    graph.rs:338-344); typed syntax (`<x>` / `"x"` / `_:x`) restricts
@@ -1613,6 +1619,30 @@ object Bgp {
 
   object Term {
     def apply(df: DataFrame, name: String): Term = Term(df(name), df.schema(name).dataType)
+  }
+
+  /** True when `q`'s solutions over a SET of triples are distinct
+    * without a `distinct`, so a caller whose input is a set (a
+    * [[graft.store.TripleStore]]) passes `distinct = false` to
+    * [[compile]]. It holds when `q` is plain triple patterns plus
+    * FILTER, ORDER BY, LIMIT and OFFSET, and nothing else; every
+    * constant is an exact term (`<x>` or `_:x`, one term each, since
+    * IRIs and blank nodes carry no lang or datatype); and every pattern
+    * variable is projected. Then each pattern maps distinct triples to
+    * distinct rows, a join of sets that keeps every column is a set,
+    * and filters and slices only drop rows. A bare `x` or a `"x"`
+    * matches several terms with one value, so two triples can project
+    * to one row, and the `distinct` stays. */
+  def distinctOverSet(q: Sparql): Boolean = {
+    val plain = Sparql(q.vars, q.conds, constraints = q.constraints,
+      disjunctions = q.disjunctions, orderKeys = q.orderKeys, limitN = q.limitN,
+      offsetN = q.offsetN)
+    val units = q.conds.flatMap(c => Seq(c._1, c._2, c._3))
+    q == plain && units.forall {
+      case QVar(n)    => q.vars.contains(n)
+      case QVal(_, k) => k.contains(QueryUnit.Iri) || k.contains(QueryUnit.Blank)
+      case _          => false
+    }
   }
 
   def compile(triples: DataFrame, q: Sparql, distinct: Boolean = true): DataFrame = {

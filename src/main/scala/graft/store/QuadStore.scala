@@ -130,10 +130,11 @@ final class QuadStore private (
 
   private def empty: TripleStore = TripleStore.fromTriples(spark, Nil)
 
-  /** Graph `g` set-unioned with `ts`: the one plan layer ADD and LOAD
-    * stack, on that graph only. */
+  /** Graph `g` set-unioned with `ts` ([[TripleStore.fromDataset]]'s
+    * `distinct`): the one plan layer ADD and LOAD stack, on that graph
+    * only. */
   private def merged(g: Option[String], ts: Dataset[Triple]): TripleStore =
-    TripleStore.fromDataset(graph(g).triples.union(ts).distinct())
+    TripleStore.fromDataset(graph(g).triples.union(ts))
 
   /** The map key of an ADD/COPY/MOVE operand (the parser admits only
     * `graph <name>` and `default` there). */

@@ -111,6 +111,25 @@ class ScaleSpec extends SparkSpec {
     assert(jobs.size <= 2, jobs)
   }
 
+  test("an exact-term lookup on a restored store is one job with no shuffle") {
+    // the store is a set and `<…>` names one term, so the lookup's
+    // solutions are distinct without a global distinct
+    // (Bgp.distinctOverSet): no HashAggregate, no Exchange, one job
+    def t(s: String, p: String, o: String) =
+      Triple(RdfTerm.named(s), RdfTerm.named(p), RdfTerm.named(o))
+    val dir = tempDir("exact_lookup")
+    TripleStore.fromTriples(spark,
+      (1 to 200).map(i => t(s"s$i", s"p${i % 7}", s"o${i % 13}"))).persist(dir)
+    val df = TripleStore.fromBackup(spark, dir)
+      .query(query.Sparql.parse("select $o where { <s8> <p1> $o }"))
+    val (rows, jobs) = jobsDuring(df.collect())
+    assert(rows.map(_.getStruct(0).getAs[String]("value")).toSeq == Seq("o8"))
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("HashAggregate"), p)
+    assert(jobs.size == 1, jobs)
+  }
+
   test("OPTIONAL compiles to a left join below the projection") {
     val q = query.Sparql.parse(
       "select $x $n $seg where { $x in_nation $n . optional { $x in_segment $seg } }")

@@ -474,6 +474,113 @@ class TripleStoreSpec extends SparkSpec {
     cached.triples.unpersist()
   }
 
+  test("a store is a set: a triple stated twice is stored, iterated and persisted once") {
+    import spark.implicits._
+    val x = t("http://g.test/a", "http://g.test/knows", "http://g.test/b")
+    assert(TripleStore.fromTriples(spark, Seq(x, x)).count() == 1)
+    assert(TripleStore.fromDataset(Seq(x, x).toDS()).count() == 1)
+    // two RDF/XML files that state the same triple, one of them twice
+    val rdf = tempDir("ts_dup_rdf")
+    val stmt = """<rdf:Description rdf:about="http://g.test/a">""" +
+      """<ex:knows rdf:resource="http://g.test/b"/></rdf:Description>"""
+    def doc(n: Int): String =
+      """<?xml version="1.0"?>
+        |<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://g.test/">
+        |""".stripMargin + (stmt + "\n") * n + "</rdf:RDF>\n"
+    Seq("one.rdf" -> 1, "two.rdf" -> 2).foreach { case (f, n) =>
+      java.nio.file.Files.writeString(java.nio.file.Path.of(rdf, f), doc(n))
+    }
+    val ingested = TripleStore.fromRdf(spark, rdf)
+    assert(ingested.triples.collect().toSeq == Seq(x))
+    assert(ingested.iter.toSeq == Seq(x))
+    val dir = tempDir("ts_dup_backup")
+    ingested.persist(dir)
+    val restored = TripleStore.fromBackup(spark, dir)
+    assert(restored.count() == 1)
+    assert(restored.iter.toSeq == Seq(x))
+  }
+
+  test("a store over a column-built view runs the whole update chain") {
+    // the view types some term fields non-nullable; the delta's rows
+    // carry the Triple encoder's nullable ones
+    val view = graft.operators.RdfOps.namedTriples(graft.operators.RdfOps.tripleView(spark, sf0001))
+    val st = TripleStore.fromDataset(view)
+      .update("insert data { GABE likes RIPPLE . NATION_2 in_region ASIA }")
+      .update("insert { $r contains $n } where { $n in_region $r }")
+      .update("delete data { NATION_2 in_region ASIA }")
+      .update("delete where { $c in_segment BUILDING . $c in_nation NATION_2 }")
+    val inserted = view.collect().toSet + t("GABE", "likes", "RIPPLE") + t("NATION_2", "in_region", "ASIA")
+    val derived = (inserted ++ inserted.filter(_.p.value == "in_region")
+      .map(x => Triple(x.o, RdfTerm.named("contains"), x.s))) - t("NATION_2", "in_region", "ASIA")
+    val victims = derived.filter(_.o.value == "BUILDING").map(_.s) &
+      derived.filter(_.o.value == "NATION_2").map(_.s)
+    val model = derived -- victims.flatMap(c => Seq(Triple(c, RdfTerm.named("in_segment"),
+      RdfTerm.named("BUILDING")), Triple(c, RdfTerm.named("in_nation"), RdfTerm.named("NATION_2"))))
+    assert(victims.nonEmpty)
+    assert(st.triples.collect().toSet == model)
+  }
+
+  test("a backup whose id rows state a triple twice restores as a set") {
+    val dir = tempDir("ts_dup_ids")
+    TripleStore.fromTriples(spark, graph).persist(dir)
+    // a second copy of every id row, as a writer that kept duplicates left it
+    spark.read.parquet(s"$dir/triples").localCheckpoint(eager = true)
+      .write.mode("append").partitionBy("p_id").parquet(s"$dir/triples")
+    assert(spark.read.parquet(s"$dir/triples").count() == 2 * graph.size)
+    val back = TripleStore.fromBackup(spark, dir)
+    assert(back.count() == graph.size)
+    assert(back.triples.collect().toSet == graph.toSet)
+  }
+
+  test("query skips the distinct only where the store's set makes it redundant") {
+    import spark.implicits._
+    import graft.query.Bgp
+    // same-value terms of every kind, so a bare `x` and a `"x"` match
+    // several terms; both stores are built from a list that states
+    // every triple twice
+    val values = Seq("x", "y")
+    val nodes = values.flatMap(v => Seq(RdfTerm.named(v), RdfTerm.blank(v)))
+    val objects = nodes ++ values.flatMap(v => Seq(RdfTerm.raw(v), RdfTerm.langLit(v, "en"),
+      RdfTerm.typedLit(v, "http://g.test/dt")))
+    val preds = Seq(RdfTerm.named("p"), RdfTerm.named("q"))
+    val rnd = new scala.util.Random(12)
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    val ts = Seq.fill(40)(Triple(pick(nodes), pick(preds), pick(objects)))
+    val stores = Seq(TripleStore.fromTriples(spark, ts ++ ts),
+      TripleStore.fromDataset((ts ++ ts).toDS()))
+    val vars = Seq("$a", "$b", "$c")
+    val subjects = vars ++ values.flatMap(v => Seq(s"<$v>", s"_:$v", v))
+    val predicates = vars ++ Seq("<p>", "<q>", "p", "q")
+    val objectToks = subjects ++ values.map(v => "\"" + v + "\"")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toString).sorted
+    val fired = (1 to 40).map { i =>
+      val drawn = Seq.fill(1 + rnd.nextInt(3))(Seq(pick(subjects), pick(predicates), pick(objectToks)))
+      val pats =
+        if (drawn.flatten.exists(vars.contains)) drawn else drawn :+ Seq("$a", "<p>", "$b")
+      val selected = pats.flatten.filter(vars.contains).distinct
+      val order = if (rnd.nextBoolean()) s" order by ${selected.head}" else ""
+      val text = s"select ${selected.mkString(" ")} where { " +
+        pats.map(_.mkString(" ")).mkString(" . ") + s" }$order"
+      val q = Sparql.parse(text)
+      stores.foreach { st =>
+        assert(rows(st.query(q)) == rows(Bgp.compile(st.triples.toDF(), q, distinct = true)),
+          s"query $i: $text")
+      }
+      Bgp.distinctOverSet(q)
+    }
+    // both sides of the rule ran
+    assert(fired.count(identity) >= 5 && fired.count(!_) >= 5, fired)
+  }
+
+  test("bare and literal-typed constants keep the distinct: one row per solution") {
+    val st = TripleStore.fromTriples(spark, Seq(t("a", "p", "x"),
+      Triple(RdfTerm.named("a"), RdfTerm.named("p"), RdfTerm.raw("x"))))
+    assert(st.query(Sparql.parse("select $s where { $s <p> x }")).count() == 1)
+    assert(st.query(Sparql.parse("select $s where { $s <p> \"x\" }")).count() == 1)
+    assert(st.query(Sparql.parse("select $s where { $s <p> <x> }")).count() == 1)
+  }
+
   test("named-term views are analysis-time projections in the Triple encoder's schema") {
     import spark.implicits._
     import org.apache.spark.sql.Encoders

@@ -5,7 +5,7 @@ Usage: python3 tools/ab.py PARENT CHANGE [CONTROL_QUERY ...]
 
 PARENT and CHANGE are each one output file or a comma-separated list of
 them, one per run of a paired series. The kind of run is read from the
-file's last non-empty line.
+file: a perfbench record (below) or else its last non-empty line.
 
 graft.Bench (SPARK_GRAFT_BENCH_OUT: one JSON line whose "queries" maps
 each passing query to its min seconds over reps): a query's seconds are
@@ -25,6 +25,15 @@ change won (better in the direction BENCHMARK.json gives, lower when it
 names none), and whether a claimed gain would hold: `9/10` when the
 change won at least 90% of the pairs, `gap` when its median beats the
 parent's by more than the parent's IQR.
+
+perfbench records (.bench_build/records/*.json, or that directory, which
+stands for every record in it): each record's "unit_sub_ms" holds the
+median time per pass of each store phase of rdf_ingest. For each phase
+(ingest, persist, restore, lookup, mutation, insert, remove, repersist)
+it prints the median per side over the records, change - parent,
+change/parent and the parent's IQR, so a store change names the phase
+it moved. Records need not pair up; records without any store phase
+(other workloads) are skipped.
 
 Exits 1 when an input file is unreadable, the sides mix kinds or differ
 in run count (perfbench), or a control query is missing from either side.
@@ -46,11 +55,39 @@ def last_json(path):
         sys.exit(f"ab: cannot read run output {path}: {e}")
 
 
+# rdf_ingest's store phases, in the order a pass runs them
+PHASES = ("ingest_ms", "persist_ms", "restore_ms", "lookup_ms", "mutation_ms",
+          "insert_ms", "remove_ms", "repersist_ms")
+
+
+def record(path):
+    """A perfbench record (one JSON document holding "unit_sub_ms"), else
+    None."""
+    try:
+        with open(path) as f:
+            rec = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return rec if isinstance(rec, dict) and isinstance(rec.get("unit_sub_ms"), dict) else None
+
+
 def load(spec):
-    """(kind, runs): kind is "queries" (graft.Bench) or "metrics"
-    (perfbench); each run maps a name to its number."""
+    """(kind, runs): kind is "queries" (graft.Bench), "metrics"
+    (perfbench stdout) or "phases" (perfbench records); each run maps a
+    name to its number."""
     kinds, runs = set(), []
+    paths = []
     for path in spec.split(","):
+        paths += (sorted(os.path.join(path, f) for f in os.listdir(path) if f.endswith(".json"))
+                  if os.path.isdir(path) else [path])
+    for path in paths:
+        rec = record(path)
+        if rec is not None:
+            kinds.add("phases")
+            phases = {k: v for k, v in rec["unit_sub_ms"].items() if k in PHASES}
+            if phases:
+                runs.append(phases)
+            continue
         rec = last_json(path)
         if isinstance(rec.get("queries"), dict):
             kinds.add("queries")
@@ -62,7 +99,9 @@ def load(spec):
         else:
             sys.exit(f"ab: {path}: last line has neither \"queries\" nor \"metrics\"")
     if len(kinds) != 1:
-        sys.exit(f"ab: {spec} mixes graft.Bench and perfbench outputs")
+        sys.exit(f"ab: {spec} mixes graft.Bench outputs, perfbench outputs and records")
+    if not runs:
+        sys.exit(f"ab: {spec} holds no rdf_ingest store phases")
     return kinds.pop(), runs
 
 
@@ -129,6 +168,20 @@ def perfbench_report(parent, change):
               f"{won:>2}/{n:<2} {' '.join(rules) or '-'}")
 
 
+def phase_report(parent, change):
+    print(f"parent {len(parent)} records, change {len(change)} records")
+    print(f"{'phase':<13}  {'parent_ms':>10}  {'change_ms':>10}  {'delta_ms':>9}   ratio  "
+          f"{'parent_iqr':>10}")
+    for ph in PHASES:
+        ps, cs = [r for r in parent if ph in r], [r for r in change if ph in r]
+        if not ps or not cs:
+            continue
+        p, c = median(ps, ph), median(cs, ph)
+        ratio = f"{c / p:6.3f}" if p else "     -"
+        print(f"{ph:<13}  {p:10.1f}  {c:10.1f}  {c - p:+9.1f}  {ratio}  "
+              f"{iqr(ps, ph) or 0.0:10.1f}")
+
+
 def main(argv):
     if len(argv) < 2:
         sys.exit(__doc__)
@@ -139,6 +192,8 @@ def main(argv):
         bench_report(parent, change, argv[2:])
     elif argv[2:]:
         sys.exit("ab: control queries apply to graft.Bench outputs only")
+    elif pkind == "phases":
+        phase_report(parent, change)
     else:
         perfbench_report(parent, change)
 
