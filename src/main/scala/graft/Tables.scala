@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table access for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -9,10 +11,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * projections applied by callers push down into the parquet scan via
   * Catalyst, so reading "the whole table" here is free — only the needed
   * columns/row-groups are materialized.
+  *
+  * Inferring a parquet schema is a Spark job (it reads the footers), one
+  * per `spark.read.parquet` call. So each session remembers each corpus
+  * table's inferred `StructType`, and every read after the first passes
+  * it to `spark.read.schema`: no job. The memo is keyed by
+  *  - the session, weakly, so a stopped session is not kept alive;
+  *  - the path, holding the name, length and modification time of what
+  *    `listStatus` returns for it (the file, or a directory's entries),
+  *    plus the session's parquet confs that are set (any of them may
+  *    change what inference returns; unset ones read their defaults). When
+  *    the files are rewritten the stamp differs and the schema is
+  *    inferred again.
+  * It holds the schema only. The file listing is still built on every
+  * read, so a read sees the current files. A cached DataFrame would also
+  * hand two reads of one table the same attribute ids, and a self-join
+  * such as `orders a JOIN orders b` would then trip Spark's
+  * ambiguous-self-join rules; every call returns a fresh DataFrame.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Whether conf `k` may change the schema parquet inference returns. */
+  private def inferenceConf(k: String): Boolean =
+    k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+      k == "spark.sql.caseSensitive"
+
+  private type Memo = ConcurrentHashMap[String, (String, StructType)]
+  /** session -> path -> (stamp, inferred schema) */
+  private val schemas =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Memo]())
+
+  /** `path`'s inferred schema, from the memo while its stamp holds. */
+  private def schemaOf(s: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+    val confs = s.conf.getAll.filter(kv => inferenceConf(kv._1)).toSeq
+    val stamp = files.sorted.mkString("|") + "#" + confs.sorted.mkString(",")
+    val memo = schemas.computeIfAbsent(s, _ => new Memo())
+    Option(memo.get(path)).collect { case (`stamp`, schema) => schema }.getOrElse {
+      val schema = s.read.parquet(path).schema
+      memo.put(path, stamp -> schema)
+      schema
+    }
+  }
 
   /** The eager-materialization idiom for ops whose RESULT is tiny by
     * construction but whose plan pins caches (the simAnnIvfIndex
@@ -94,7 +140,7 @@ object Tables {
     * parent filtered to the leaf name. */
   def streamTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = schemaOf(s, path)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val isDir = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(hPath).isDirectory

@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Pins the LOADED schema contract every operator depends on — the
   * driver regenerates /root/testdata between rounds and has already
@@ -82,5 +84,78 @@ class TablesSpec extends SparkSpec {
       "source" -> Str, "n_chars" -> Integral)
     pin("embeddings", Tables.embeddings(spark, d),
       "vec_id" -> Integral, "embedding" -> FloatVec, "label" -> Integral)
+  }
+
+  test("a table's schema is inferred once: a later read or stream of it starts no job") {
+    Tables.table(spark, sf0001, "part")
+    val (_, jobs) = jobsDuring {
+      Tables.table(spark, sf0001, "part").schema
+      Tables.streamTable(spark, sf0001, "part").schema
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+  }
+
+  test("a rewritten table is read with its new schema, as a file and as a directory") {
+    def asFile(d: String, df: DataFrame, tag: String): Unit = {
+      df.coalesce(1).write.parquet(s"$d/$tag")
+      val part = new java.io.File(s"$d/$tag").listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, Paths.get(s"$d/t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    def asDir(d: String, df: DataFrame, tag: String): Unit =
+      df.write.mode("overwrite").parquet(s"$d/t.parquet")
+    for (write <- Seq(asFile _, asDir _)) {
+      val d = tempDir("graft_tables")
+      write(d, spark.range(3).toDF("a"), "before")
+      assert(Tables.table(spark, d, "t").columns.toSeq == Seq("a"))
+      write(d, spark.range(3).selectExpr("id AS b", "CAST(id AS STRING) AS c"), "after")
+      val t = Tables.table(spark, d, "t")
+      assert(t.columns.toSeq == Seq("b", "c"))
+      assert(t.orderBy("b").collect().map(_.getString(1)).toSeq == Seq("0", "1", "2"))
+    }
+  }
+
+  test("a conf that changes what inference returns re-infers the schema") {
+    // the corpus writes o_orderdate as timestamp[us] with no zone
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    def orderdate = Tables.orders(spark, sf0001).schema("o_orderdate").dataType
+    try {
+      spark.conf.set(key, "true")
+      assert(orderdate == TimestampNTZType)
+      spark.conf.set(key, "false")
+      assert(orderdate == TimestampType)
+    } finally spark.conf.unset(key)
+  }
+
+  test("two reads of a table are distinct frames: a Dataset self-join counts as SQL does") {
+    val a = Tables.orders(spark, sf0001)
+    val b = Tables.orders(spark, sf0001)
+    val joined = a.join(b, a("o_custkey") === b("o_custkey")).count()
+    Tables.orders(spark, sf0001).createOrReplaceTempView("orders")
+    val sql = spark.sql(
+      "SELECT count(*) FROM orders a JOIN orders b ON a.o_custkey = b.o_custkey").head().getLong(0)
+    assert(joined == sql)
+    assert(joined > Tables.orders(spark, sf0001).count())
+  }
+
+  test("no source but Tables reads a <dir>/<name>.parquet corpus path") {
+    val main = Paths.get("src/main/scala")
+    val walk = Files.walk(main)
+    val files = try walk.iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Tables.scala")
+      .toList finally walk.close()
+    assert(files.size > 10, s"source tree not found from ${Paths.get("").toAbsolutePath}")
+    val corpusLiteral = """s?"[^"]*\.parquet"""".r
+    val bound = """\bval\s+(\w+)\s*=\s*s?"[^"]*\.parquet"""".r
+    val hits = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toSeq
+      names = lines.flatMap(l => bound.findAllMatchIn(l).map(_.group(1)))
+      read = ("""\.(parquet|load)\(\s*(""" + (corpusLiteral.regex +: names).mkString("|") +
+        """)\s*\)""").r
+      (line, i) <- lines.zipWithIndex
+      if !line.contains("write") && read.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, "read corpus tables through Tables.table or Tables.streamTable:\n" +
+      hits.mkString("\n"))
   }
 }
