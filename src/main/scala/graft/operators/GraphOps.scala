@@ -1,19 +1,19 @@
 package graft.operators
 
-import graft.Sizing
+import graft.{Fixpoint, Sizing}
 import graft.store.Dict
 import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Graph analytics on the triple view. Degrees is a group-by and label
-  * propagation a DataFrame loop; connected components, PageRank,
-  * triangles and landmark shortest paths run on GraphX (BASELINE.json:
-  * "GraphX for analytics queries"). GraphX vertex ids come from
-  * [[graft.store.Dict.encode]] — dense, deterministic (sorted term
-  * order), so results are reproducible and the minimum vertex id of a
-  * component is the lexicographically smallest term, which gives
-  * connected components a cross-engine-checkable labeling.
+/** Graph analytics on the triple view and the embedding near-dup graph.
+  * Only connected components and PageRank run on GraphX, over
+  * [[buildGraph]] (BASELINE.json: "GraphX for analytics queries"), whose
+  * [[graft.store.Dict.encode]] vertex ids are dense and sorted, so a
+  * component's min vertex id is its lexicographically smallest term, a
+  * cross-engine-checkable label. The rest run as dataflow: degrees and
+  * triangles as joins and group-bys, landmark shortest paths as a BFS
+  * on [[graft.Fixpoint.iterate]], label propagation as a fixed loop.
   */
 object GraphOps {
 
@@ -145,22 +145,20 @@ object GraphOps {
     * graph (a pair inside a triangle is corroborated by a third
     * neighbor; an isolated pair is not). The RDF triple view is
     * tripartite (customer→nation→region) and has NO triangles, so the
-    * similarity graph is the one with signal. Edges arrive canonical
-    * (i < j, distinct) from the dedup op. Unlike PageRank
-    * (float-iterative, rows-only), triangle counting is exact
-    * combinatorics — the DuckDB oracle is the 3-way edge self-join,
-    * hash-checked. */
-  def graphxTriangles(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val pairs = DedupOps.dedupEmbeddingCosine(s, d)
-    val eRdd = pairs.as[(Long, Long)].rdd
-      .map { case (a, b) => Edge(a, b, ()) }
-    val g = XGraph.fromEdges(eRdd, ())
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-    val tri = g.triangleCount().vertices.filter(_._2 > 0)
-    s.createDataFrame(tri.map(x => (x._1, x._2.toLong)))
-      .toDF("vec_id", "n_tri")
-      .orderBy($"vec_id")
+    * similarity graph is the one with signal. [[triangleCounts]] runs
+    * the DuckDB oracle's exact 3-way edge self-join, hash-checked. */
+  def graphxTriangles(s: SparkSession, d: String): DataFrame =
+    triangleCounts(DedupOps.dedupEmbeddingCosine(s, d)).orderBy(col("vec_id"))
+
+  /** (vec_id, n_tri) for every vertex in at least one triangle of a
+    * canonical edge set (two id columns, first < second, distinct).
+    * Each triangle x < y < z is found once, as (x, y) ⋈ (y, z) ⋈ (x, z),
+    * and counted at each of its 3 vertices. */
+  private[graft] def triangleCounts(pairs: DataFrame): DataFrame = {
+    val e = pairs.toDF("x", "y")
+    e.join(e.toDF("y", "z"), "y").join(e.toDF("x", "z"), Seq("x", "z"))
+      .select(explode(array(col("x"), col("y"), col("z"))).as("vec_id"))
+      .groupBy("vec_id").agg(count(lit(1)).as("n_tri"))
   }
   val graphxTrianglesSql: String =
     """WITH und AS (
@@ -178,31 +176,31 @@ object GraphOps {
       |SELECT vec_id, count(*) AS n_tri FROM v
       |GROUP BY vec_id ORDER BY vec_id""".stripMargin
 
-  /** Landmark shortest paths (GraphX ShortestPaths): directed hop
-    * distance from every vertex to the 5 region landmarks along
-    * customer→nation→region edges. Pregel under the hood — each
-    * iteration is one message pass along the coalesced edge RDD, the
-    * distance map carries only landmark entries (5), and the landmark
-    * id set is catalog-scale driver metadata. Exact integer hops, so
-    * the DuckDB oracle is a recursive-CTE BFS, hash-checked. */
+  /** Landmark shortest paths: directed hop distance from every vertex
+    * to each region landmark (the `in_region` objects) along the view's
+    * edges, by [[landmarkHops]]. Exact integer hops, so the DuckDB oracle
+    * is a recursive-CTE BFS, hash-checked. */
   def graphxSssp(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val (dict, g) = buildGraph(s, d)
-    // the landmark set: region names = in_region objects (5 rows —
-    // catalog-scale, like the probe-centroid collect in MlOps)
-    val regions = RdfOps.tripleView(s, d).filter($"p" === "in_region")
-      .select($"o").distinct()
-    val lms = dict.join(regions, dict("term") === regions("o"))
-      .select($"id").as[Long].collect().toSeq
-    val sp = org.apache.spark.graphx.lib.ShortestPaths.run(g, lms)
-    val rows = sp.vertices.flatMap { case (vid, m) =>
-      m.iterator.map { case (lm, dist) => (vid, lm, dist.toLong) }
+    val t = RdfOps.tripleView(s, d)
+    val lms = t.filter(col("p") === "in_region").select(col("o")).distinct()
+    landmarkHops(t, lms).orderBy(col("term"), col("landmark"))
+  }
+
+  /** (term, landmark, dist) for every vertex that reaches one of the
+    * `landmarks` (one term column) along the directed (s, o) `edges`: a
+    * BFS on [[graft.Fixpoint.iterate]] from (lm, lm, 0) whose rounds step
+    * back over the edges with `o = term` and drop the (term, landmark)
+    * pairs an earlier round reached, so a pair's first round is its
+    * minimum distance. The edges are a lazy checkpoint, built once. */
+  private[graft] def landmarkHops(edges: DataFrame, landmarks: DataFrame): DataFrame = {
+    val e = edges.select(col("s"), col("o").as("term")).localCheckpoint(false)
+    val seed = landmarks.toDF("lm")
+      .select(col("lm").as("term"), col("lm").as("landmark"), lit(0L).as("dist"))
+    Fixpoint.iterate(seed, Int.MaxValue, Long.MaxValue) { (all, frontier) =>
+      frontier.join(e, "term")
+        .select(col("s").as("term"), col("landmark"), (col("dist") + 1).as("dist")).distinct()
+        .join(all, Seq("term", "landmark"), "left_anti")
     }
-    val df = s.createDataFrame(rows).toDF("id", "lm_id", "dist")
-    df.join(dict, df("id") === dict("id")).select($"term", $"lm_id", $"dist")
-      .join(dict.toDF("lm_term", "lm_id2"), $"lm_id" === $"lm_id2")
-      .select($"term", $"lm_term".as("landmark"), $"dist")
-      .orderBy($"term", $"landmark")
   }
   val graphxSsspSql: String = {
     val recursiveView = RdfOps.tripleViewSql.replaceFirst("WITH t AS", "WITH RECURSIVE t AS")

@@ -62,12 +62,6 @@ object RdfXmlOps {
        |ORDER BY s, p, o""".stripMargin
   }
 
-  /** N-Triples round-trip over the REAL triple view: distributed write
-    * (one NT line per triple) then distributed read (`spark.read.text`
-    * splits the files; parsing is per-line). This is the scale
-    * ingest/export format — RDF/XML can only parallelize per FILE,
-    * N-Triples splits a single 100 TB file across the cluster. Oracle:
-    * the triple view itself (the round-trip must be lossless). */
   /** N-Quads round-trip: the NAMED-GRAPH quad view → one line per
     * quad (line-splittable, the scale path for named-graph data) →
     * re-parse → identical (g, s, p, o) values. Oracle = the quad-view
@@ -117,6 +111,12 @@ object RdfXmlOps {
       .orderBy($"s", $"p", $"o")
   }
 
+  /** N-Triples round-trip over the REAL triple view: distributed write
+    * (one NT line per triple) then distributed read (`spark.read.text`
+    * splits the files; parsing is per-line). This is the scale
+    * ingest/export format — RDF/XML can only parallelize per FILE,
+    * N-Triples splits a single 100 TB file across the cluster. Oracle:
+    * the triple view itself (the round-trip must be lossless). */
   def ntRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val view = RdfOps.tripleView(s, d)

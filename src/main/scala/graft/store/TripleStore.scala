@@ -175,8 +175,7 @@ final class TripleStore private (
         "named-graph updates (§3.2 / graph data blocks / load) require a " +
           "quad store — see graft.store.QuadStore.update")
     case UpdateOp.DeleteWhere(pats) =>
-      val parsed = pats.map(p =>
-        (QueryUnit.parse(p(0)), QueryUnit.parse(p(1)), QueryUnit.parse(p(2))))
+      val (parsed, vars) = TripleStore.wherePatterns(pats)
       // property-path predicates would evaluate with path semantics in
       // the WHERE but match as literal tokens in the delete — fail
       // fast rather than silently deleting nothing. Sparql.pathSyntax
@@ -188,8 +187,6 @@ final class TripleStore private (
             s"property paths are unsupported in delete where: $p")
         case _ => ()
       }
-      val vars = parsed.flatMap(t => Seq(t._1, t._2, t._3))
-        .collect { case QVar(n) => n }.distinct
       if (vars.isEmpty) {
         // no variables: the WHERE is still a CONJUNCTION — if any
         // pattern has no match there is no solution and NOTHING is
@@ -222,10 +219,7 @@ final class TripleStore private (
         derive(kept.as[Triple])
       }
     case UpdateOp.InsertWhere(tmpl, pats) =>
-      val parsed = pats.map(p =>
-        (QueryUnit.parse(p(0)), QueryUnit.parse(p(1)), QueryUnit.parse(p(2))))
-      val vars = parsed.flatMap(t => Seq(t._1, t._2, t._3))
-        .collect { case QVar(n) => n }.distinct
+      val (parsed, vars) = TripleStore.wherePatterns(pats)
       val t = triples.toDF()
       derive(t.unionByName(Bgp.construct(t, tmpl, Sparql(vars, parsed))).distinct().as[Triple])
   }
@@ -350,6 +344,14 @@ object TripleStore {
     Triple(t(p(0)), t(p(1)), t(p(2)))
   }
 
+  /** An update's WHERE patterns as (s, p, o) units, and their variables
+    * in first-use order. */
+  private def wherePatterns(pats: Seq[Seq[String]])
+      : (Seq[(QueryUnit, QueryUnit, QueryUnit)], Seq[String]) = {
+    val parsed = pats.map(p =>
+      (QueryUnit.parse(p(0)), QueryUnit.parse(p(1)), QueryUnit.parse(p(2))))
+    (parsed, parsed.flatMap(t => Seq(t._1, t._2, t._3)).collect { case QVar(n) => n }.distinct)
+  }
 
   /** A store of the distinct triples of a driver-side list. */
   def fromTriples(spark: SparkSession, ts: Seq[Triple]): TripleStore = {
