@@ -79,6 +79,8 @@ object GraftFunctions {
       "bloom_might_contain",
       exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "triple_in", exprs => TripleIn(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash_agg",
       exprs => SimHashAgg(exprs.head).toAggregateExpression(), "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -128,5 +130,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     e.injectFunction((FunctionIdentifier("bucket_counts"),
       new ExpressionInfo(classOf[BucketCounts].getName, "bucket_counts"),
       (exprs: Seq[Expression]) => BucketCounts(exprs(0), exprs(1))))
+    e.injectFunction((FunctionIdentifier("triple_in"),
+      new ExpressionInfo(classOf[TripleIn].getName, "triple_in"),
+      (exprs: Seq[Expression]) => TripleIn(exprs(0), exprs(1), exprs(2), exprs(3))))
   }
 }

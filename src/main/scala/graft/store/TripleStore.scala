@@ -2,12 +2,14 @@ package graft.store
 
 import scala.collection.immutable.VectorMap
 
+import graft.functions.TripleIn
 import graft.rdf.{RdfTerm, RdfXmlParser, RdfXmlWriter, Triple}
 import graft.query.{Bgp, QueryUnit, QVal, QVar, Sparql, UpdateOp}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The rebuild of the reference's `Graph` (reference:
   * src/datastore/graph.rs:29-38) as an immutable wrapper around a
@@ -21,10 +23,14 @@ import org.apache.spark.sql.functions._
   *    p_id replaces slice selection;
   *  - in-place insert/remove with tombstone id recycling
   *    (graph.rs:414-629) → a fixed base Dataset plus a driver-side
-  *    delta (`inserted` / `removed` sets), composed into ONE broadcast
-  *    anti-join + union however many mutations ran — the read store +
-  *    small write store split of C-Store (VLDB 2005); all dictionary
-  *    GC bookkeeping disappears because dictionaries are derived;
+  *    delta (`inserted` / `removed` sets), composed into ONE in-scan
+  *    set predicate on the base plus one union however many mutations
+  *    ran — the read store + small write store split of C-Store
+  *    (VLDB 2005); all dictionary GC bookkeeping disappears because
+  *    dictionaries are derived. The delta rides in the plan as a
+  *    literal, so a lookup under a delta of thousands of triples pays
+  *    for carrying it (CHANGES.md has the figures): such a store should
+  *    persist and restore, which folds the delta into the snapshot;
   *  - the 8 access paths (graph.rs:842-1009) → one Catalyst filter.
   *
   * At 100 TB: triples persist partitioned by predicate (the classic
@@ -48,7 +54,7 @@ import org.apache.spark.sql.functions._
   * ([[TripleStore.fromTriples]] on the driver, [[TripleStore.fromDataset]]
   * and [[TripleStore.fromRdf]] with a `distinct`, [[TripleStore.fromBackup]]
   * on the id rows before decoding), and every derivation keeps it: the
-  * delta anti-joins the base against the set it appends, removes and
+  * delta filters from the base the set it appends, removes and
   * delete-where filter a set, and insert-where is a `union.distinct`.
   * [[query]] relies on it to skip the `distinct` that
   * [[Bgp.distinctOverSet]] proves redundant.
@@ -62,18 +68,20 @@ final class TripleStore private (
   import spark.implicits._
 
   /** The store's one Dataset: the base minus every triple the delta
-    * touches (broadcast null-safe left-anti join — the delta is
-    * driver-sized, and `<=>` matches the null lang / datatype of IRIs),
-    * plus the inserted triples. Built once per store, so its plan depth
-    * is constant however many mutations ran. Pinned in ScaleSpec. */
+    * touches, plus the inserted triples. The delta is driver-sized, so it
+    * rides in the plan as one literal: the snapshot scan filters with
+    * `!triple_in(s, p, o, <touched>)` ([[graft.functions.TripleIn]],
+    * `<=>` on every term field, so the null lang / datatype of IRIs
+    * match), and the inserted rows join as one local relation in a
+    * union. No join, exchange or extra job: a lookup on a mutated store
+    * costs what a lookup on its base costs. Built once per store, so its
+    * plan depth is constant however many mutations ran. Pinned in
+    * ScaleSpec. */
   val triples: Dataset[Triple] =
     if (inserted.isEmpty && removed.isEmpty) base else {
-      val b = base.toDF()
-      val touched = (inserted.keys ++ removed.keys).toSeq.toDS().toDF()
-      val kept = b.join(broadcast(touched),
-        b("s") <=> touched("s") && b("p") <=> touched("p") && b("o") <=> touched("o"),
-        "left_anti")
-      (if (inserted.isEmpty) kept else kept.unionByName(inserted.keys.toSeq.toDS().toDF())).as[Triple]
+      val touched = (inserted.keys ++ removed.keys).toSeq
+      val kept = base.filter(!TripleIn.column("s", "p", "o", touched))
+      if (inserted.isEmpty) kept else kept.unionByName(inserted.keys.toSeq.toDS())
     }
 
   def count(): Long = triples.count()
@@ -105,11 +113,10 @@ final class TripleStore private (
 
   /** Set-union with a driver-side list WITHOUT a global distinct: the
     * triples join the delta's `inserted` set (and leave `removed`), and
-    * the composed Dataset drops them from the base with the broadcast
-    * anti-join before appending them once. A `union.distinct()` would
-    * shuffle EVERY stored triple to insert a handful — this shape
-    * touches the store with one broadcast probe, which is what survives
-    * 100 TB. */
+    * the composed Dataset filters them from the base before appending
+    * them once. A `union.distinct()` would shuffle EVERY stored triple
+    * to insert a handful — this shape touches each stored triple with
+    * one hash probe in its scan, which is what survives 100 TB. */
   def insertTriples(ts: Seq[Triple]): TripleStore =
     withDelta(inserted ++ ts.map(_ -> ()), removed -- ts)
 
@@ -119,7 +126,7 @@ final class TripleStore private (
   def removeTriple(t: Triple): TripleStore = removeTriples(Seq(t))
 
   /** The mirror of [[insertTriples]]: the triples join `removed` and
-    * leave `inserted`. The broadcast anti-join, not `.except()`: except
+    * leave `inserted`. The in-scan filter, not `.except()`: except
     * plans a full shuffle + distinct of EVERY stored triple to delete a
     * handful of rows (round-2 verdict #6). */
   def removeTriples(ts: Seq[Triple]): TripleStore =
@@ -155,7 +162,7 @@ final class TripleStore private (
     * plus the derived forms the reference never shipped):
     *
     *  - insert data / delete data: driver-side concrete triples →
-    *    [[insertTriples]] / [[removeTriples]] (broadcast anti-join).
+    *    [[insertTriples]] / [[removeTriples]] (the in-scan delta).
     *  - delete where: evaluate the pattern BGP, instantiate every
     *    pattern per solution, remove the instantiations with an
     *    UNHINTED anti-join — the delete set derives from the data and
@@ -392,6 +399,14 @@ object TripleStore {
     new TripleStore(spark, ds.distinct().localCheckpoint(eager = true))
   }
 
+  /** The schemas [[TripleStore.persist]] writes: a dictionary's term
+    * fields and dense id, and the id triples with `p_id` as their
+    * partition column. [[fromBackup]] reads with them, so a restore
+    * starts no footer-inference job. */
+  private val DictSchema =
+    Encoders.product[RdfTerm].schema.add("id", LongType)
+  private val IdSchema = StructType(Seq("s_id", "o_id", "p_id").map(StructField(_, LongType)))
+
   /** Marker file written by [[TripleStore.persist]] — the analogue of
     * the reference's `.ripplebackup` (graph.rs:171). */
   val BackupMarker = ".graftbackup"
@@ -429,9 +444,9 @@ object TripleStore {
     if (!fs.isFile(new Path(root, BackupMarker)))
       System.err.println(s"graft: restoring marker-less backup layout at " +
         s"$path (no $BackupMarker; re-persist to add it)")
-    val terms = spark.read.parquet(s"$path/terms")
-    val preds = spark.read.parquet(s"$path/predicates")
-    val ids = spark.read.parquet(s"$path/triples")
+    val terms = spark.read.schema(DictSchema).parquet(s"$path/terms")
+    val preds = spark.read.schema(DictSchema).parquet(s"$path/predicates")
+    val ids = spark.read.schema(IdSchema).parquet(s"$path/triples")
     def dim(df: DataFrame, as: String, idAs: String): DataFrame =
       df.select(struct($"kind", $"value", $"lang", $"datatype").as(as), $"id".as(idAs))
     val ds = ids.distinct()

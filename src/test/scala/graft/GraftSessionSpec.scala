@@ -31,7 +31,7 @@ class GraftSessionSpec extends SparkSpec {
     // the cluster path (spark.sql.extensions) must expose the same
     // function surface as the per-session register() call — a kernel
     // present in one but not the other breaks cluster SQL silently
-    val names = Seq("simhash", "cosine_sim", "sq_dist", "bucket_counts")
+    val names = Seq("simhash", "cosine_sim", "sq_dist", "bucket_counts", "triple_in")
     val collected = scala.collection.mutable.Buffer[String]()
     val e = new org.apache.spark.sql.SparkSessionExtensions {
       override def injectFunction(

@@ -92,21 +92,39 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** `body`'s result and the result-stage name (its call site, such as
-    * `count at Fixpoint.scala:33`) of every job it started, read once
-    * the listener bus has delivered every event of the run. */
+  /** `body`'s result and the name of every job it started, read once
+    * the listener bus has delivered every event of the run. A job that
+    * runs for a Dataset action is named by that action's call site (such
+    * as `count at Fixpoint.scala:33`), read from its SQL execution, so
+    * the stage jobs adaptive execution starts from its own threads carry
+    * it too; any other job by its result stage's call site, and a job
+    * over zero partitions, which has no stage, by the call site Spark
+    * gives it as its description. */
   def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.SparkListenerEvent
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
+    val tag = "jobs-during"
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "jobs-during"))
-          started.add(e.stageInfos.maxBy(_.stageId).name)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sites.put(x.executionId.toString, x.description)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.tags").exists(_.split(",").contains(tag)))
+          started.add(prop(SQLExecution.EXECUTION_ID_KEY).flatMap(id => Option(sites.get(id)))
+            .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+            .getOrElse(prop("spark.job.description").getOrElse(s"job ${e.jobId}")))
+      }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("jobs-during", "jobs-during")
-      val r = try body finally sc.clearJobGroup()
+      sc.addJobTag(tag)
+      val r = try body finally sc.removeJobTag(tag)
       Bench.drainListeners(sc)
       (r, started.asScala.toSeq)
     } finally sc.removeSparkListener(listener)

@@ -201,6 +201,19 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("triple_in is SQL-callable, compares whole terms and requires a literal delta") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    import graft.rdf.{RdfTerm, Triple}
+    val iri = Triple(RdfTerm.named("a"), RdfTerm.named("p"), RdfTerm.named("b"))
+    val lit = iri.copy(o = RdfTerm.raw("b"))
+    val df = Seq(iri, lit, iri.copy(o = RdfTerm.langLit("b", "en"))).toDF()
+    val in = call_function("triple_in", $"s", $"p", $"o", typedlit(Seq(lit)))
+    assert(df.select(in).collect().map(_.getBoolean(0)).toSeq == Seq(false, true, false))
+    val notLiteral = array(struct($"s", $"p", $"o"))
+    intercept[Exception](df.select(call_function("triple_in", $"s", $"p", $"o", notLiteral)).collect())
+  }
+
   test("sq_dist and bucket_counts generate code bit-identical to interpreted eval") {
     GraftFunctions.register(spark)
     import spark.implicits._

@@ -101,6 +101,15 @@ class TripleStoreSpec extends SparkSpec {
     assert(back.triples.collect().toSet == store.triples.collect().toSet)
   }
 
+  test("fromBackup reads the layout with persist's schemas: no footer-inference job") {
+    val dir = tempDir("ts_schema")
+    TripleStore.fromTriples(spark, graph).persist(dir)
+    val (back, jobs) = jobsDuring(TripleStore.fromBackup(spark, dir))
+    // every job belongs to the one decode into the checkpoint
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("localCheckpoint at TripleStore.scala")), jobs)
+    assert(back.triples.collect().toSet == graph.toSet)
+  }
+
   test("iter + toRdfXml export round-trip") {
     val xml = new String(store.toRdfXml, "UTF-8")
     val back = graft.rdf.RdfXmlParser.parseString(xml)
@@ -472,6 +481,78 @@ class TripleStoreSpec extends SparkSpec {
       case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m }.nonEmpty)
     assert(cached.get(q) == Seq(RdfTerm.named("s9")))
     cached.triples.unpersist()
+  }
+
+  test("a delta of every term kind, over 2,000 triples, keeps set semantics in both eval paths") {
+    // one lexical value under every kind: the delta must tell the IRI
+    // `v` from the blank node, the plain, lang-tagged and typed literals
+    // `v`, and null lang / datatype from a present one
+    val kinds = Seq(RdfTerm.named("v"), RdfTerm.blank("v"), RdfTerm.raw("v"),
+      RdfTerm.langLit("v", "en"), RdfTerm.langLit("v", "fr"),
+      RdfTerm.typedLit("v", "xsd:string"), RdfTerm.typedLit("v", "xsd:int"))
+    val subjects = (0 until 40).map(i => RdfTerm.named(s"s$i")) ++ Seq(RdfTerm.blank("s0"))
+    val pool = for {
+      s <- subjects; p <- Seq(RdfTerm.named("p"), RdfTerm.named("q")); o <- kinds
+    } yield Triple(s, p, o)
+    val rnd = new scala.util.Random(15)
+    val initial = rnd.shuffle(pool).take(pool.size / 2).toSet
+    val dir = tempDir("ts_kinds")
+    TripleStore.fromTriples(spark, initial.toSeq).persist(dir)
+    val q = Sparql.parse("select $p $o where { <s3> $p $o }")
+    def check(st: TripleStore, model: Set[Triple], what: String): Unit = {
+      val rows = st.triples.collect()
+      assert(rows.length == model.size, s"$what: duplicate or missing rows")
+      assert(rows.toSet == model, what)
+      assert(st.query(q).count() == model.count(_.s == RdfTerm.named("s3")), what)
+    }
+    val generated = Seq("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "FALLBACK")
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    Seq(generated, interpreted).foreach { confs =>
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        var st = TripleStore.fromBackup(spark, dir)
+        var model = initial
+        val present = initial.head
+        val absent = pool.find(!initial(_)).get
+        val steps = Seq[(String, TripleStore => TripleStore, Set[Triple] => Set[Triple])](
+          ("insert existing", _.insertTriple(present), identity),
+          ("remove absent", _.removeTriple(absent), identity),
+          ("insert then remove", _.insertTriple(absent).removeTriple(absent), identity),
+          ("remove then insert", _.removeTriple(present).insertTriple(present), identity),
+          ("remove", _.removeTriple(present), _ - present),
+          ("insert", _.insertTriple(absent), _ + absent))
+        steps.foreach { case (what, op, mop) =>
+          st = op(st); model = mop(model); check(st, model, s"$confs $what")
+        }
+        // batches of fresh triples and pool triples until the delta
+        // holds more than 2,000 triples
+        (1 to 6).foreach { b =>
+          val fresh = (0 until 400).map(i => Triple(RdfTerm.named(s"n$b-$i"),
+            RdfTerm.named("p"), kinds(i % kinds.size)))
+          val drawn = Seq.fill(60)(pool(rnd.nextInt(pool.size)))
+          st = st.insertTriples(fresh ++ drawn.take(30)).removeTriples(drawn.drop(30))
+          model = model ++ fresh ++ drawn.take(30) -- drawn.drop(30)
+          check(st, model, s"$confs batch $b")
+        }
+        assert((model -- initial).size + (initial -- model).size > 2000)
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("a store on a session without graft's functions registered mutates and queries") {
+    val plain = spark.newSession()
+    assert(!plain.catalog.functionExists("triple_in"))
+    val dir = tempDir("ts_plain")
+    TripleStore.fromTriples(plain, graph).persist(dir)
+    val st = TripleStore.fromBackup(plain, dir)
+      .insertTriple(t("zoe", "is", "cool")).removeTriple(t("gabe", "is", "cool"))
+    assert(st.triples.collect().toSet == graph.toSet + t("zoe", "is", "cool") - t("gabe", "is", "cool"))
+    val q = Sparql.parse("select $who where { $who is cool }")
+    assert(st.get(q).map(_.value).sorted == Seq("james", "zoe"))
   }
 
   test("a store is a set: a triple stated twice is stored, iterated and persisted once") {
