@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -62,76 +61,4 @@ case class SimHash(child: Expression)
     })
 
   override protected def withNewChildInternal(c: Expression): SimHash = copy(child = c)
-}
-
-/** Session registration for graft's native functions (SQL-callable). */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash", exprs => SimHash(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist", exprs => SqDist(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bucket_counts", exprs => BucketCounts(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "triple_in", exprs => TripleIn(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg",
-      exprs => SimHashAgg(exprs.head).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_md5", exprs => SimHashMd5(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_md5_agg",
-      exprs => SimHashMd5Agg(exprs.head).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_md5", exprs => MinHashMd5(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_pairs", exprs => SortedPairs(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs =>
-        if (exprs.length > 1)
-          WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Int])
-        else WordShingles(exprs.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "scala_udf")
-  }
-}
-
-/** SparkSessionExtensions entry point: lets a deployment inject graft's
-  * native functions at session build time —
-  *
-  *   builder.withExtensions(new GraftExtensions)
-  *   // or spark.sql.extensions=graft.functions.GraftExtensions
-  *
-  * so `simhash` / `cosine_sim` are available in plain SQL on every
-  * session of a cluster without any per-session registration call.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "simhash"),
-      (exprs: Seq[Expression]) => SimHash(exprs.head)))
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("sq_dist"),
-      new ExpressionInfo(classOf[SqDist].getName, "sq_dist"),
-      (exprs: Seq[Expression]) => SqDist(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("bucket_counts"),
-      new ExpressionInfo(classOf[BucketCounts].getName, "bucket_counts"),
-      (exprs: Seq[Expression]) => BucketCounts(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("triple_in"),
-      new ExpressionInfo(classOf[TripleIn].getName, "triple_in"),
-      (exprs: Seq[Expression]) => TripleIn(exprs(0), exprs(1), exprs(2), exprs(3))))
-  }
 }

@@ -35,15 +35,17 @@ import org.apache.spark.unsafe.types.UTF8String
 case class TripleIn(s: Expression, p: Expression, o: Expression, delta: Expression)
     extends Expression with Predicate {
 
-  require(delta.foldable, "triple_in: delta must be a literal")
-
   override def children: Seq[Expression] = Seq(s, p, o, delta)
   override def nullable: Boolean = false
   override def prettyName: String = "triple_in"
 
+  // checked at analysis, not on construction: naming an unaliased
+  // `SELECT triple_in(...)` column copies the node with its string
+  // literals swapped for non-foldable pretty attributes
   override def checkInputDataTypes(): TypeCheckResult = {
     val term = Seq(s, p, o).find(e => !TripleIn.isTerm(e.dataType))
-    term match {
+    if (!delta.foldable) TypeCheckResult.TypeCheckFailure("triple_in: delta must be a literal")
+    else term match {
       case Some(e) => TypeCheckResult.TypeCheckFailure(
         s"triple_in: s, p and o must be (kind, value, lang, datatype) string structs, " +
           s"got ${e.dataType.sql}")

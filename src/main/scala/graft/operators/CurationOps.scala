@@ -434,7 +434,6 @@ object CurationOps {
   def docPipelineE2e(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val docs = documents(s, d)
     // 1. quality gate
     val gated = docs.join(qualityGate(docs).select($"doc_id"), "doc_id")
@@ -450,9 +449,9 @@ object CurationOps {
       .drop("canonical")
     // 4. decontaminate (benchmark shingle index over the FULL corpus)
     val benchG = docs.filter($"doc_id" % 50 === 0)
-      .select(explode(expr("word_shingles(split(text, ' '), 5)")).as("g")).distinct()
+      .select(explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g")).distinct()
     val dirty = nearKept
-      .select($"doc_id", explode(expr("word_shingles(split(text, ' '), 5)")).as("g"))
+      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
       .join(broadcast(benchG), "g")
       .select($"doc_id").distinct()
     val clean = nearKept.filter($"doc_id" % 50 =!= 0)
@@ -523,10 +522,9 @@ object CurationOps {
     * Survivors = corpus docs minus benchmark minus contaminated. */
   def dedupDecontaminate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = documents(s, d)
     val shingled = docs.select($"doc_id",
-      explode(expr("word_shingles(split(text, ' '), 5)")).as("g"))
+      explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
     val benchG = shingled.filter($"doc_id" % 50 === 0).select($"g").distinct()
     // Explicit broadcast() is the documented EXCEPTION to the ScaleSpec
     // rule that data-derived sets never carry hints: an eval-benchmark
@@ -806,10 +804,9 @@ object CurationOps {
        |WHERE source = 'src3' AND $qualityGateWhereSql
        |ORDER BY doc_id""".stripMargin
 
-  /** Default row target per compacted file for [[docCompactSink]] —
-    * the `spark.graft.compactMaxRows` conf overrides (the spec
-    * exercises small targets to pin the ceil(rows/target) file
-    * count). Production sets this from target_bytes / avg_row_bytes,
+  /** Row target per compacted file for [[docCompactSink]] (the spec
+    * passes small targets to pin the ceil(rows/target) file count).
+    * Production sets this from target_bytes / avg_row_bytes,
     * which is how every table-maintenance compactor (Iceberg/Delta
     * OPTIMIZE) derives its row target. */
   val CompactMaxRowsPerFile = 1000000L
@@ -840,7 +837,10 @@ object CurationOps {
     * sequentialism, not a scale wall — a production compactor runs
     * partition-granular jobs concurrently, which this shape preserves
     * (each source's rewrite is independent). */
-  def docCompactSink(s: SparkSession, d: String): DataFrame = {
+  def docCompactSink(s: SparkSession, d: String): DataFrame =
+    docCompactSink(s, d, CompactMaxRowsPerFile)
+
+  private[graft] def docCompactSink(s: SparkSession, d: String, maxRows: Long): DataFrame = {
     import s.implicits._
     val fragDir = scratch(s, "docs_frag", d)
     val compactDir = scratch(s, "docs_compact", d)
@@ -859,8 +859,6 @@ object CurationOps {
     gated.repartition(s.sparkContext.defaultParallelism)
       .write.mode("overwrite")
       .partitionBy("source").parquet(fragDir)
-    val maxRows = s.conf
-      .get("spark.graft.compactMaxRows", CompactMaxRowsPerFile.toString).toLong
     s.read.parquet(fragDir)
       .repartition($"source")
       .write.mode("overwrite")
@@ -1510,7 +1508,7 @@ object CurationOps {
       // counts are exact integers, so it is value-identical to the
       // oracle's per-bucket list-comprehension replay
       .select($"doc_id", $"chunk_id",
-        expr(s"bucket_counts(bs, $RagDim)").as("v"))
+        GraftFunctions.column("bucket_counts", $"bs", lit(RagDim)).as("v"))
   }
 
   /** [[ragChunkVecs]] unit-L2-normalized (the [[IvfKmeans.withUnitV]]
@@ -1573,7 +1571,6 @@ object CurationOps {
       assignedTransform: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val cvu = ragChunkUnitVecs(s, d)
       .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
       .cache()
@@ -1587,7 +1584,7 @@ object CurationOps {
     // (docRagFiltered's lang predicate); it must preserve
     // (doc_id, chunk_id, v, list_id).
     val assigned = assignedTransform(
-      cvu.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v")))
+      cvu.withColumn("list_id", IvfKmeans.assignCol(cents, $"v")))
     // retrieve: RagProbeLists-probe per query, exact cosine within
     // probed lists
     val probes = IvfKmeans.withDists(ragQueryVecs(s, d), cdf)
@@ -1598,7 +1595,7 @@ object CurationOps {
     val scored = probes.join(assigned, "list_id")
       .filter($"doc_id" =!= $"qid") // never retrieve the query's own doc
       .select($"qid", $"doc_id", $"chunk_id", $"v",
-        expr("cosine_sim(qv, v)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qv", $"v").as("cos"))
     (cvu, scored)
   }
 
@@ -1723,14 +1720,13 @@ object CurationOps {
   private def ragBuildIndexAt(s: SparkSession, d: String, dir: String,
       attach: DataFrame => DataFrame = identity): (String, DataFrame) = {
     import s.implicits._
-    GraftFunctions.register(s)
     val cvu = ragChunkUnitVecs(s, d)
       .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
       .cache()
     val cents = IvfKmeans.centroidsFor(s, d, "ragchunk",
       cvu.select($"vec_id", $"v"), fpTable = "documents")
     val cdf = IvfKmeans.centroidFrame(s, cents)
-    attach(cvu.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v")))
+    attach(cvu.withColumn("list_id", IvfKmeans.assignCol(cents, $"v")))
       .drop("vec_id")
       // key the write by list BEFORE partitionBy (guide §6 output file
       // sizing): without this, every embed task would write a file
@@ -1755,7 +1751,6 @@ object CurationOps {
       indexFilter: DataFrame => DataFrame = identity): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val probes = IvfKmeans.withDists(qvecs, cdf)
       .withColumn("rn", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"dist", $"list_id")))
@@ -1773,7 +1768,7 @@ object CurationOps {
     val scored = probes.join(index, "list_id")
       .filter($"doc_id" =!= $"qid")
       .select($"qid", $"doc_id", $"chunk_id",
-        expr("cosine_sim(qv, v)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qv", $"v").as("cos"))
     val w = Window.partitionBy($"qid")
       .orderBy($"cos".desc, $"doc_id", $"chunk_id")
     val out = scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -1891,7 +1886,6 @@ object CurationOps {
   private[graft] def ragAppendBase(
       s: SparkSession, d: String): (String, Array[Array[Double]]) = {
     import s.implicits._
-    GraftFunctions.register(s)
     // NULL-source docs are BASE corpus (they are not part of the
     // arriving batch). A bare NOT IN drops NULL on both engines, so
     // base ∪ batch would silently miss them while the oracle's
@@ -1905,7 +1899,7 @@ object CurationOps {
     val cents = IvfKmeans.centroidsFor(s, d, "ragbase",
       cvuBase.select($"vec_id", $"v"), fpTable = "documents")
     val dir = ragIndexDir(s, d) + "_app"
-    cvuBase.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+    cvuBase.withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"doc_id", $"chunk_id", $"v", $"list_id")
       .repartition($"list_id") // ~K files, not embed-tasks × K (guide §6)
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
@@ -1926,7 +1920,7 @@ object CurationOps {
     val cvuNew = unitNorm(s, ragChunkVecsOf(s, newDocs))
       .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
     val assigned = cvuNew
-      .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+      .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"doc_id", $"chunk_id", $"v", $"list_id")
       .cache()
     assigned.repartition($"list_id") // one appended file per touched list
@@ -1963,7 +1957,7 @@ object CurationOps {
         Sizing.tableParts(s, d, "documents")) { (batch, _) =>
       unitNorm(s, ragChunkVecsOf(s, batch))
         .withColumn("vec_id", $"doc_id" * RagKeyMul + $"chunk_id")
-        .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+        .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
         .select($"doc_id", $"chunk_id", $"v", $"list_id")
         .repartition($"list_id") // one appended file per touched list
         .write.mode("append").partitionBy("list_id").parquet(dir)
@@ -2110,7 +2104,6 @@ object CurationOps {
     * the only corpus-sized work is one scan. */
   def docRagRefit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val baseDocs = documents(s, d)
       .filter($"source".isNull ||
         !$"source".isInCollection(DedupOps.IncrementalBatchSources))
@@ -2123,8 +2116,8 @@ object CurationOps {
     val v2 = IvfKmeans.centroidsFor(s, d, "ragchunk",
       all.select($"vec_id", $"v"), fpTable = "documents")
     all.select(
-        IvfKmeans.assignCol(s, v1, $"v").cast("long").as("from_list"),
-        IvfKmeans.assignCol(s, v2, $"v").cast("long").as("to_list"))
+        IvfKmeans.assignCol(v1, $"v").cast("long").as("from_list"),
+        IvfKmeans.assignCol(v2, $"v").cast("long").as("to_list"))
       .groupBy($"from_list", $"to_list")
       .agg(count(lit(1)).as("n_chunks"))
       .orderBy($"from_list", $"to_list")
@@ -2485,7 +2478,6 @@ object CurationOps {
       chunksOpt: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val rag = retrieved
       .select($"qid", $"doc_id", $"chunk_id").withColumn("hit", lit(1L))
     // chunksOpt lets a caller that already holds the (cached) unit
@@ -2505,7 +2497,7 @@ object CurationOps {
     val truth = truthChunks(chunks).crossJoin(q)
       .filter($"doc_id" =!= $"qid") // same own-doc exclusion as the pipeline
       .select($"qid", $"doc_id", $"chunk_id",
-        expr("cosine_sim(qv, v)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qv", $"v").as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter($"rank" <= RagTopK)
       .select($"qid", $"doc_id", $"chunk_id")
@@ -2768,19 +2760,18 @@ object CurationOps {
       // comparison chain row_number() ordered by — on ≤ RagMmrPool
       // elements. NULL pick (pool exhausted) appends nothing, the
       // empty-cand behaviour of the join formulation.
-      df = df.withColumn("pick", expr(
-        """aggregate(
-          |  transform(
-          |    filter(cands, c -> NOT exists(sel,
-          |      t -> t.doc_id = c.doc_id AND t.chunk_id = c.chunk_id)),
-          |    c -> named_struct(
-          |      'mmr', c.cos - array_max(transform(sel, t -> cosine_sim(c.v, t.v))),
-          |      'doc_id', c.doc_id, 'chunk_id', c.chunk_id, 'v', c.v)),
-          |  CAST(NULL AS STRUCT<mmr: DOUBLE, doc_id: BIGINT, chunk_id: BIGINT, v: ARRAY<DOUBLE>>),
-          |  (b, c) -> CASE WHEN b IS NULL THEN c
-          |    WHEN c.mmr > b.mmr THEN c WHEN c.mmr < b.mmr THEN b
-          |    WHEN c.doc_id < b.doc_id THEN c WHEN c.doc_id > b.doc_id THEN b
-          |    WHEN c.chunk_id < b.chunk_id THEN c ELSE b END)""".stripMargin))
+      val open = filter($"cands", c => !exists($"sel",
+        t => t("doc_id") === c("doc_id") && t("chunk_id") === c("chunk_id")))
+      val mmr = transform(open, c => named_struct(
+        lit("mmr"), c("cos") - array_max(transform($"sel",
+          t => GraftFunctions.column("cosine_sim", c("v"), t("v")))),
+        lit("doc_id"), c("doc_id"), lit("chunk_id"), c("chunk_id"), lit("v"), c("v")))
+      df = df.withColumn("pick", aggregate(mmr,
+        lit(null).cast("STRUCT<mmr: DOUBLE, doc_id: BIGINT, chunk_id: BIGINT, v: ARRAY<DOUBLE>>"),
+        (b, c) => when(b.isNull, c)
+          .when(c("mmr") > b("mmr"), c).when(c("mmr") < b("mmr"), b)
+          .when(c("doc_id") < b("doc_id"), c).when(c("doc_id") > b("doc_id"), b)
+          .when(c("chunk_id") < b("chunk_id"), c).otherwise(b)))
         .withColumn("sel", expr(
           """CASE WHEN pick IS NULL THEN sel ELSE concat(sel, array(named_struct(
             |  'doc_id', pick.doc_id, 'chunk_id', pick.chunk_id, 'v', pick.v))) END""".stripMargin))

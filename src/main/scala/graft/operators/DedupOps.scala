@@ -82,8 +82,7 @@ object DedupOps {
 
   private def shinglesOf(s: SparkSession, toks: DataFrame): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
-    toks.select($"doc_id", explode(expr("word_shingles(ws)")).as("g"))
+    toks.select($"doc_id", explode(GraftFunctions.column("word_shingles", $"ws")).as("g"))
   }
 
   /** Document-frequency cap for the n-gram Jaccard candidate join. A
@@ -159,7 +158,7 @@ object DedupOps {
       // nested-transform HOF formulation it replaces ran interpreted
       // (Spark never codegens lambda functions) and was the hottest
       // kernel of the family at sf0.1
-      .select(explode(expr("sorted_pairs(ids)")).as("p"))
+      .select(explode(GraftFunctions.column("sorted_pairs", $"ids")).as("p"))
       .groupBy($"p.da".as("da"), $"p.db".as("db")).agg(count(lit(1)).as("c"))
     common
       .join(n.toDF("da", "na"), "da")
@@ -218,7 +217,7 @@ object DedupOps {
     * The hash family is pluggable: swap in xxhash64(g, i) for ~5×
     * hashing throughput when cross-engine verification is not needed. */
   private def withMinhash(docs: DataFrame): DataFrame = {
-    val withSigs = docs.withColumn("sigs", expr("minhash_md5(gs)"))
+    val withSigs = docs.withColumn("sigs", GraftFunctions.column("minhash_md5", col("gs")))
     val sigs = (0 until MinhashK).map(i => col("sigs").getItem(i).as(s"sig_$i"))
     withSigs.select(col("doc_id") +: col("gs") +: sigs: _*)
   }
@@ -280,9 +279,8 @@ object DedupOps {
   private def minhashCandBase(
       s: SparkSession, toksIn: DataFrame): (DataFrame, DataFrame) = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = toksIn
-      .select($"doc_id", expr("word_shingles(ws)").as("gs"))
+      .select($"doc_id", GraftFunctions.column("word_shingles", $"ws").as("gs"))
       .filter(size($"gs") > 0)
     val sig = trackCache(withMinhash(docs))
     // one pass: each row explodes to its 4 (band, bucket) pairs —
@@ -307,7 +305,7 @@ object DedupOps {
     val cand = kept.groupBy($"band", $"bucket")
       .agg(array_sort(collect_list($"doc_id")).as("ids"))
       // native pair kernel — see jaccardScoredOf
-      .select(explode(expr("sorted_pairs(ids)")).as("p"))
+      .select(explode(GraftFunctions.column("sorted_pairs", $"ids")).as("p"))
       .select($"p.da".as("da"), $"p.db".as("db")).distinct()
     (cand, sig)
   }
@@ -520,7 +518,6 @@ object DedupOps {
     * [[minhashCandBase]]. */
   private def simhashCandBase(s: SparkSession, toks: DataFrame): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sig = toks
       // NULL-text guard: Spark's simhash_md5 yields a NULL sig (doc
       // silently dropped by posexplode) while the DuckDB replica's CASE
@@ -529,7 +526,7 @@ object DedupOps {
       // returns NULL exactly when text is NULL, so the ws guard is the
       // same predicate)
       .filter($"ws".isNotNull)
-      .select($"doc_id", expr("simhash_md5(ws)").as("sig"))
+      .select($"doc_id", GraftFunctions.column("simhash_md5", $"ws").as("sig"))
       .transform(trackCache)
     // single pass over sig: posexplode the 4 chunk values per row
     val bands = sig.select($"doc_id", $"sig", posexplode($"sig"))
@@ -588,12 +585,11 @@ object DedupOps {
     * index order — bit-compatible with the DuckDB oracle). */
   def dedupEmbeddingCosine(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val e = embeddings(s, d).select($"vec_id", $"embedding")
     val a = e.toDF("i", "va")
     val b = e.toDF("j", "vb")
     a.crossJoin(b).filter($"i" < $"j")
-      .filter(expr("cosine_sim(va, vb)") > 0.4)
+      .filter(GraftFunctions.column("cosine_sim", $"va", $"vb") > 0.4)
       .select($"i", $"j")
       .orderBy($"i", $"j")
   }
@@ -624,16 +620,15 @@ object DedupOps {
     * unlike the MLlib variant (model internals, rows-only). */
   def dedupEmbeddingLsh(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val banded = embeddings(s, d)
       .select($"vec_id", $"embedding",
-        posexplode(expr("hyperplane_sig(embedding, 16, 4)")).as(Seq("band", "key")))
+        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4))).as(Seq("band", "key")))
     val a = banded.toDF("i", "va", "band", "key")
     val b = banded.toDF("j", "vb", "band", "key")
     // cosine runs once per colliding band — bounded ×8 duplication,
     // cheaper than a distinct over (id, vector) pairs before the filter
     a.join(b, Seq("band", "key")).filter($"i" < $"j")
-      .filter(expr("cosine_sim(va, vb)") > 0.4)
+      .filter(GraftFunctions.column("cosine_sim", $"va", $"vb") > 0.4)
       .select($"i", $"j").distinct()
       .orderBy($"i", $"j")
   }
@@ -800,7 +795,6 @@ object DedupOps {
     * sketch accelerates, it never decides. */
   def dedupIncrementalBloom(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = documents(s, d)
       .filter($"text".isNotNull)
       .select($"doc_id", $"source", md5($"text").as("key"))
@@ -812,7 +806,7 @@ object DedupOps {
       math.max(corpus.count(), 1L), 0.01)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
-    val mc = call_function("bloom_might_contain", $"key", lit(bos.toByteArray))
+    val mc = GraftFunctions.column("bloom_might_contain", $"key", lit(bos.toByteArray))
     val sure = incoming.filter(!mc)
     val maybe = incoming.filter(mc).join(corpus, Seq("key"), "left_anti")
     sure.select($"doc_id", $"key")
@@ -832,13 +826,12 @@ object DedupOps {
   private def bandsAndSets(
       s: SparkSession, docs: DataFrame): (DataFrame, DataFrame) = {
     import s.implicits._
-    GraftFunctions.register(s)
     // spread before the 16-lane MinHash kernel: the callers pass
     // filtered single-file scans (1 partition), which would run the
     // family's hottest per-doc kernel serially (identity once the input
     // fills the cluster, so no shuffle is added at scale)
     val g = Sizing.spread(docs)
-      .select($"doc_id", expr("word_shingles(split(text, ' '))").as("gs"))
+      .select($"doc_id", GraftFunctions.column("word_shingles", split($"text", " ")).as("gs"))
       .filter(size($"gs") > 0)
     val sig = withMinhash(g)
     val bands = sig.select($"doc_id", posexplode(array(

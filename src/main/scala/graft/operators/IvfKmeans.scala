@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,14 +27,20 @@ object IvfKmeans {
   val K = 16
   val Rounds = 4
 
-  /** Corpus dir → fitted centroids. An IVF coarse quantizer is an
-    * index artifact, built once per corpus; queries must not re-fit
-    * (round-8 verdict: "training belongs to index build only"). */
+  /** Fitted centroids by their on-disk artifact's path
+    * ([[centroidPath]]: corpus dir, tag and source-file fingerprint).
+    * An IVF coarse quantizer is an index artifact, built once per
+    * corpus; queries must not re-fit (round-8 verdict: "training
+    * belongs to index build only"), and a corpus rewritten in place is
+    * a new key. */
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
+  private def memo(s: SparkSession, d: String, tag: String, input: => DataFrame,
+      fpTable: String = "embeddings"): Array[Array[Double]] =
+    cache.computeIfAbsent(centroidPath(s, d, tag, fpTable), loadOrFit(s, _, input))
+
   def centroids(s: SparkSession, d: String): Array[Array[Double]] =
-    cache.computeIfAbsent(d, _ => loadOrFit(s, d, "ivf",
-      withV(s, d).select(col("vec_id"), col("v"))))
+    memo(s, d, "ivf", withV(s, d).select(col("vec_id"), col("v")))
 
   /** Fit (or load) the same deterministic quantizer on an ARBITRARY
     * keyed vector frame — (vec_id, v) — under its own cache tag: the
@@ -45,7 +52,7 @@ object IvfKmeans {
     * derive from). */
   def centroidsFor(s: SparkSession, d: String, tag: String,
       input: DataFrame, fpTable: String): Array[Array[Double]] =
-    cache.computeIfAbsent(s"$d#$tag", _ => loadOrFit(s, d, tag, input, fpTable))
+    memo(s, d, tag, input, fpTable)
 
   /** PQ codebook for subspace `m` of [[MlOps.simAnnPq]]: the same
     * deterministic fit, run on a `subDim`-wide slice of the unit-
@@ -53,9 +60,8 @@ object IvfKmeans {
     * coarse quantizer (fit once per corpus, disk-persisted, never
     * re-fit per query). */
   def pqCodebook(s: SparkSession, d: String, m: Int, subDim: Int): Array[Array[Double]] =
-    cache.computeIfAbsent(s"$d#pq${m}x$subDim", _ => loadOrFit(s, d, s"pq${m}x$subDim",
-      withUnitV(s, d).select(col("vec_id"),
-        expr(s"slice(v, ${m * subDim + 1}, $subDim)").as("v"))))
+    memo(s, d, s"pq${m}x$subDim", withUnitV(s, d).select(col("vec_id"),
+      expr(s"slice(v, ${m * subDim + 1}, $subDim)").as("v")))
 
   /** [[withV]] unit-L2-normalized (guarded against zero vectors), so
     * squared L2 is 2·(1−cos) and PQ's distance quantization ranks the
@@ -97,9 +103,7 @@ object IvfKmeans {
     * a k-row parquet beside the index and load them on any later cold
     * call (new JVM, same corpus). A missing/corrupt/wrong-cardinality
     * artifact falls back to a fresh fit. */
-  private def loadOrFit(s: SparkSession, d: String, tag: String,
-      input: DataFrame, fpTable: String = "embeddings"): Array[Array[Double]] = {
-    val path = centroidPath(s, d, tag, fpTable)
+  private def loadOrFit(s: SparkSession, path: String, input: DataFrame): Array[Array[Double]] = {
     val loaded: Option[Array[Array[Double]]] =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
@@ -148,8 +152,7 @@ object IvfKmeans {
     * interpreted aggregate(zip_with(…)) lambda dominated the corpus×k
     * assignment scan once the chunk index grew to sf0.1 size). */
   def withDists(e: DataFrame, cdf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
-    e.crossJoin(broadcast(cdf)).withColumn("dist", expr("sq_dist(v, c)"))
+    e.crossJoin(broadcast(cdf)).withColumn("dist", GraftFunctions.column("sq_dist", col("v"), col("c")))
   }
 
   /** (vec_id, list_id): nearest centroid, ties to the lowest list id.
@@ -173,10 +176,9 @@ object IvfKmeans {
     * vector against M codebooks becomes M such columns in ONE
     * projection in the scan's stage, where the frame-based formulation
     * cost M shuffled aggregations + M−1 joins to reassemble. */
-  def assignCol(s: SparkSession, cents: Array[Array[Double]], v: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
+  def assignCol(cents: Array[Array[Double]], v: Column): Column = {
     val mat = typedLit(cents.map(_.toSeq).toSeq)
-    val dists = transform(mat, c => call_function("sq_dist", v, c))
+    val dists = transform(mat, c => GraftFunctions.column("sq_dist", v, c))
     // array_position returns the FIRST index holding the min — ties go
     // to the lowest list id, the same contract as min_by's
     // (dist, list_id) struct ordering; the min IS an element, so the
@@ -238,7 +240,7 @@ object IvfKmeans {
     for (_ <- 1 to Rounds) {
       val means = e
         .select(col("gid"),
-          assignColGrouped(s, cents, col("gid"), col("v")).as("sub"),
+          assignColGrouped(cents, col("gid"), col("v")).as("sub"),
           posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("gid"), col("sub"), col("i"))
         .agg(round(avg(col("x")), 6).as("cx"))
@@ -262,10 +264,10 @@ object IvfKmeans {
     * rows are assigned with g's own centroids (a when-chain over the
     * handful of groups — group count is bounded by K in every
     * caller). */
-  def assignColGrouped(s: SparkSession,
+  def assignColGrouped(
       cents: Map[Int, Array[Array[Double]]], gid: Column, v: Column): Column =
     coalesce(cents.keys.toSeq.sorted.map(g =>
-      when(gid === g, assignCol(s, cents(g), v))): _*)
+      when(gid === g, assignCol(cents(g), v))): _*)
 
   def fitOn(s: SparkSession, input: DataFrame, k: Int): Array[Array[Double]] = {
     import s.implicits._
@@ -282,7 +284,7 @@ object IvfKmeans {
       // assignment is the map-side assignCol projection, so each Lloyd
       // round is ONE shuffle (the mean aggregate), not three stages
       val means = e
-        .select(assignCol(s, cents, $"v").as("list_id"),
+        .select(assignCol(cents, $"v").as("list_id"),
           posexplode($"v").as(Seq("i", "x")))
         .groupBy($"list_id", $"i").agg(round(avg($"x"), 6).as("cx"))
         .collect()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.GraftFunctions
 import org.apache.spark.ml.feature.MinHashLSH
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,7 +60,6 @@ object MlOps {
     * 2/16ths of the data. */
   def simAnnIvf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val cdf = IvfKmeans.centroidFrame(s, cents)
     // cached: scanned by the assignment and the probe side — without
@@ -68,7 +68,7 @@ object MlOps {
     // assignment is a map-side projection (IvfKmeans.assignCol): no
     // shuffle, no join-back to recover the vector
     val assigned = e
-      .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+      .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")
     probeAndScore(e, cdf, assigned)
   }
@@ -87,7 +87,7 @@ object MlOps {
     val scored = probes.join(assigned, "list_id")
       .filter($"qid" =!= $"vec_id")
       .select($"qid", $"vec_id".as("nid"),
-        expr("cosine_sim(qe, embedding)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qe", $"embedding").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -106,7 +106,6 @@ object MlOps {
     * layout must not change the answer. */
   def simAnnIvfIndex(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val cdf = IvfKmeans.centroidFrame(s, cents)
     val e = IvfKmeans.withV(s, d).cache()
@@ -115,7 +114,7 @@ object MlOps {
     // cluster). All I/O below goes through the Hadoop FS API, so any
     // supported scheme works unchanged.
     val dir = scratch(s, "ivf", java.util.UUID.randomUUID.toString)
-    e.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+    e.withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
 
@@ -134,7 +133,7 @@ object MlOps {
     val scored = probes.join(index, "list_id")
       .filter($"qid" =!= $"vec_id")
       .select($"qid", $"vec_id".as("nid"),
-        expr("cosine_sim(qe, embedding)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qe", $"embedding").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     val out = scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -174,7 +173,6 @@ object MlOps {
 
   def simAnnPq(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val e = IvfKmeans.withUnitV(s, d).cache()
     def sub(m: Int) = expr(s"slice(v, ${m * PqSubDim + 1}, $PqSubDim)")
     val cbArrs = (0 until PqM).map(m => IvfKmeans.pqCodebook(s, d, m, PqSubDim))
@@ -184,7 +182,7 @@ object MlOps {
     // literals, so the argmin is a per-row expression; the previous
     // M shuffled assignments + M−1 vec_id joins disappear)
     val codes = e.select($"vec_id" +: (0 until PqM).map(m =>
-      IvfKmeans.assignCol(s, cbArrs(m), sub(m)).as(s"code$m")): _*)
+      IvfKmeans.assignCol(cbArrs(m), sub(m)).as(s"code$m")): _*)
     // ADC lookup tables: (query, code) -> exact partial squared
     // distance; 5 queries x 16 codes per subspace — broadcast-sized
     // by construction at any corpus size
@@ -211,7 +209,7 @@ object MlOps {
     val reranked = shortlist
       .join(e.select($"vec_id".as("qid"), $"embedding".as("qe")), "qid")
       .join(e.select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
-      .select($"qid", $"nid", expr("cosine_sim(qe, ne)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"qe", $"ne").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     reranked.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -351,7 +349,6 @@ object MlOps {
     * ties to the lower neighbor id. */
   def simAnnIvfPq(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val e = IvfKmeans.withUnitV(s, d).cache()
     def sub(m: Int) = expr(s"slice(v, ${m * PqSubDim + 1}, $PqSubDim)")
     // coarse quantizer: persisted deterministic fit on the unit vectors
@@ -364,9 +361,9 @@ object MlOps {
     val cbArrs = (0 until PqM).map(m => IvfKmeans.pqCodebook(s, d, m, PqSubDim))
     val cbs = cbArrs.map(IvfKmeans.centroidFrame(s, _))
     val codes = e.select(
-      ($"vec_id" +: IvfKmeans.assignCol(s, coarseArr, $"v").as("list_id") +:
+      ($"vec_id" +: IvfKmeans.assignCol(coarseArr, $"v").as("list_id") +:
         (0 until PqM).map(m =>
-          IvfKmeans.assignCol(s, cbArrs(m), sub(m)).as(s"code$m"))): _*)
+          IvfKmeans.assignCol(cbArrs(m), sub(m)).as(s"code$m"))): _*)
     // probe: IvfPqProbes nearest coarse lists per query — the only
     // rows that ever leave the index scan are from probed lists
     val probes = IvfKmeans.withDists(e.filter($"vec_id" < 5), coarseCdf)
@@ -398,7 +395,7 @@ object MlOps {
     val reranked = shortlist
       .join(e.select($"vec_id".as("qid"), $"embedding".as("qe")), "qid")
       .join(e.select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
-      .select($"qid", $"nid", expr("cosine_sim(qe, ne)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"qe", $"ne").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     reranked.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -621,11 +618,10 @@ object MlOps {
     * split pass and ScaleSpec's file-level pins can operate on it. */
   private[graft] def ivfBalanceBuild(s: SparkSession, d: String): String = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val dir = scratch(s, "ivfbal", java.util.UUID.randomUUID.toString)
     IvfKmeans.withV(s, d)
-      .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+      .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
     dir
@@ -641,7 +637,6 @@ object MlOps {
   private[graft] def ivfSplitHot(s: SparkSession, dir: String,
       precounted: Option[Seq[(Int, Long)]] = None): Seq[Int] = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // a caller that already collected the K-row catalog passes it in
     // rather than paying a second full-index scan
     val cnts = precounted.getOrElse {
@@ -664,7 +659,7 @@ object MlOps {
     val newId = coalesce(hot.map(l => when($"list_id" === l,
       when($"sub" === 0, lit(l)).otherwise(lit(IvfKmeans.K + l)))): _*)
     val split = subFrame
-      .withColumn("sub", IvfKmeans.assignColGrouped(s, sc, $"list_id", $"v"))
+      .withColumn("sub", IvfKmeans.assignColGrouped(sc, $"list_id", $"v"))
       .select($"vec_id", $"embedding", newId.cast("int").as("list_id"))
     // lineage cut before the rewrite deletes the files the plan reads
     val rows = split.localCheckpoint(true)
@@ -780,10 +775,9 @@ object MlOps {
     * everything corpus-sized is the two probed scans. */
   def simAnnBalanceProbe(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val e = IvfKmeans.withV(s, d).cache()
-    val before = e.withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+    val before = e.withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"v", $"list_id")
     val cnts = before.groupBy($"list_id").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
@@ -804,7 +798,7 @@ object MlOps {
         val cold = before.filter(!$"list_id".isin(hot.map(l => l): _*))
         val moved = hot.map { l =>
           before.filter($"list_id" === l)
-            .withColumn("sub", IvfKmeans.assignCol(s, subCents(l), $"v"))
+            .withColumn("sub", IvfKmeans.assignCol(subCents(l), $"v"))
             .withColumn("list_id",
               when($"sub" === 0, lit(l)).otherwise(lit(IvfKmeans.K + l)).cast("int"))
             .drop("sub")
@@ -825,7 +819,7 @@ object MlOps {
     val truth = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qe"))
       .crossJoin(e.select($"vec_id".as("nid"), $"embedding"))
       .filter($"qid" =!= $"nid")
-      .select($"qid", $"nid", expr("cosine_sim(qe, embedding)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"qe", $"embedding").as("cos"))
       .withColumn("rn", row_number().over(wq)).filter($"rn" <= 3)
       .select($"qid", $"nid")
     def phase(cdf: DataFrame, assigned: DataFrame, sfx: String): DataFrame = {
@@ -837,7 +831,7 @@ object MlOps {
       val cand = probes.join(assigned.select($"vec_id", $"embedding", $"list_id"), "list_id")
         .filter($"qid" =!= $"vec_id")
         .select($"qid", $"vec_id".as("nid"),
-          expr("cosine_sim(qe, embedding)").as("cos"))
+          GraftFunctions.column("cosine_sim", $"qe", $"embedding").as("cos"))
       val top3 = cand.withColumn("rn", row_number().over(wq)).filter($"rn" <= 3)
         .select($"qid", $"nid").withColumn("hit", lit(1L))
       val nc = cand.groupBy($"qid").agg(count(lit(1)).as(s"n_cand_$sfx"))
@@ -945,7 +939,6 @@ object MlOps {
     * shuffle before the queries×shortlist window. */
   def simAnnSq8(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val e = IvfKmeans.withV(s, d).cache()
     // per-dimension [min,max]: min/max are exact selections (no
     // accumulation), so the fit is deterministic by construction
@@ -971,7 +964,7 @@ object MlOps {
     val scored = codes.crossJoin(broadcast(qcodes))
       .filter($"qid" =!= $"vec_id")
       .select($"qid", $"vec_id".as("nid"),
-        expr("sq_dist(qc, c)").as("sd"))
+        GraftFunctions.column("sq_dist", $"qc", $"c").as("sd"))
     val wSd = Window.partitionBy($"qid").orderBy($"sd", $"nid")
     val shortlist = scored.withColumn("arn", row_number().over(wSd))
       .filter($"arn" <= SqRerank)
@@ -979,7 +972,7 @@ object MlOps {
     val reranked = shortlist
       .join(e.select($"vec_id".as("qid"), $"embedding".as("qe")), "qid")
       .join(e.select($"vec_id".as("nid"), $"embedding".as("ne")), "nid")
-      .select($"qid", $"nid", expr("cosine_sim(qe, ne)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"qe", $"ne").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     reranked.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -1052,7 +1045,7 @@ object MlOps {
     val w = Window.partitionBy($"list_id")
       .orderBy(md5($"vec_id".cast("string")), $"vec_id")
     e.select($"vec_id",
-        IvfKmeans.assignCol(s, cents, $"v").as("list_id"))
+        IvfKmeans.assignCol(cents, $"v").as("list_id"))
       .withColumn("pick", row_number().over(w).cast("long"))
       .filter($"pick" <= ClusterSamplePerList)
       .select($"list_id".cast("long").as("list_id"), $"pick", $"vec_id")
@@ -1215,12 +1208,11 @@ object MlOps {
       assignedTransform: DataFrame => DataFrame = identity,
       truthOpt: Option[DataFrame] = None): (DataFrame, Seq[DataFrame]) = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val cdf = IvfKmeans.centroidFrame(s, cents)
     val e = IvfKmeans.withV(s, d).cache()
     val assigned = assignedTransform(e
-      .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+      .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id"))
     val probes = IvfKmeans.withDists(e.filter($"vec_id" < 5), cdf)
       .withColumn("probe_rn", row_number().over(
@@ -1230,7 +1222,7 @@ object MlOps {
     val cand = probes.join(assigned, "list_id")
       .filter($"qid" =!= $"vec_id")
       .select($"qid", $"probe_rn", $"vec_id".as("nid"),
-        expr("cosine_sim(qe, embedding)").as("cos"))
+        GraftFunctions.column("cosine_sim", $"qe", $"embedding").as("cos"))
       .cache()
     val brute = truthOpt.getOrElse(SimilarityOps.simTopkBrute(s, d))
       .select($"qid", $"nid").cache()
@@ -1272,7 +1264,6 @@ object MlOps {
     * this is the raw-vector side. */
   def simAnnFiltered(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val cents = IvfKmeans.centroids(s, d)
     val cdf = IvfKmeans.centroidFrame(s, cents)
     val e = IvfKmeans.withV(s, d)
@@ -1283,7 +1274,7 @@ object MlOps {
     val assigned = IvfKmeans
       .withVOf(embeddings(s, d).select($"vec_id", $"embedding", $"label"))
       .filter($"label" === AnnFilterLabel)
-      .withColumn("list_id", IvfKmeans.assignCol(s, cents, $"v"))
+      .withColumn("list_id", IvfKmeans.assignCol(cents, $"v"))
       .select($"vec_id", $"embedding", $"list_id")
     probeAndScore(e, cdf, assigned)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,13 +33,12 @@ object SimilarityOps {
   private[operators] def simTopkBruteWhere(s: SparkSession, d: String,
       candFilter: DataFrame => DataFrame = identity): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"embedding".as("va"))
     val c = candFilter(e).select($"vec_id".as("nid"), $"embedding".as("vb"))
     val scored = q.crossJoin(c).filter($"qid" =!= $"nid")
-      .select($"qid", $"nid", expr("cosine_sim(va, vb)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"va", $"vb").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -62,10 +62,9 @@ object SimilarityOps {
     * equi-join. */
   def simHardNegatives(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val banded = embeddings(s, d)
       .select($"vec_id",
-        posexplode(expr("hyperplane_sig(embedding, 16, 4)")).as(Seq("band", "key")))
+        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4))).as(Seq("band", "key")))
     val dup = banded.filter($"vec_id" < 5).toDF("qid", "band", "key")
       .join(banded.toDF("nid", "band", "key"), Seq("band", "key"))
       .filter($"qid" =!= $"nid")
@@ -75,7 +74,7 @@ object SimilarityOps {
     val scored = e.filter($"vec_id" < 5).toDF("qid", "va")
       .crossJoin(e.toDF("nid", "vb")).filter($"qid" =!= $"nid")
       .join(dup, Seq("qid", "nid"), "left_anti")
-      .select($"qid", $"nid", expr("cosine_sim(va, vb)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"va", $"vb").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -156,7 +155,6 @@ object SimilarityOps {
         s"aggregate(zip_with(v, $arr, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)") > 0,
         lit(1L << i)).otherwise(lit(0L))
     }
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d).select($"vec_id",
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("bucket", sigCols.reduce(_ + _))
@@ -164,7 +162,7 @@ object SimilarityOps {
     val q = e.filter($"vec_id" < 5).toDF("qid", "va", "bucket")
     val c = e.toDF("nid", "vb", "bucket")
     val scored = q.join(c, "bucket").filter($"qid" =!= $"nid")
-      .select($"qid", $"nid", expr("cosine_sim(va, vb)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"va", $"vb").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)
@@ -248,7 +246,6 @@ object SimilarityOps {
         s"aggregate(zip_with(v, $arr, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)") > 0,
         lit(1L << i)).otherwise(lit(0L))
     }
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d).select($"vec_id",
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("bucket", sigCols.reduce(_ + _))
@@ -256,7 +253,7 @@ object SimilarityOps {
     val a = e.toDF("qid", "va", "bucket")
     val b = e.toDF("nid", "vb", "bucket")
     val scored = a.join(b, "bucket").filter($"qid" =!= $"nid")
-      .select($"qid", $"nid", expr("cosine_sim(va, vb)").as("cos"))
+      .select($"qid", $"nid", GraftFunctions.column("cosine_sim", $"va", $"vb").as("cos"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid")
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= 3)

@@ -404,13 +404,12 @@ object TextOps {
     * expression remains the unchecked throughput path. */
   def textSimhash(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     documents(s, d)
       // NULL text diverges between engines (Spark: NULL sig; the DuckDB
       // replica's CASE folds a NULL list_sum to bit 0) — excluded
       // identically on both sides so the contract is engine-independent
       .filter($"text".isNotNull)
-      .select($"doc_id", expr("simhash_md5(split(text, ' '))").as("sig"))
+      .select($"doc_id", GraftFunctions.column("simhash_md5", split($"text", " ")).as("sig"))
       .select($"doc_id", $"sig"(0).as("c0"), $"sig"(1).as("c1"),
         $"sig"(2).as("c2"), $"sig"(3).as("c3"))
       .orderBy($"doc_id")
@@ -438,14 +437,13 @@ object TextOps {
     * family makes it DuckDB-checkable. */
   def textSimhashBySource(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     documents(s, d)
       // same cross-engine NULL contract as [[textSimhash]]: NULL text
       // would hash differently, and a NULL source group would survive
       // Spark's groupBy but fall out of the replica's equi-join
       .filter($"text".isNotNull && $"source".isNotNull)
       .groupBy($"source")
-      .agg(expr("simhash_md5_agg(split(text, ' '))").as("sig"),
+      .agg(GraftFunctions.column("simhash_md5_agg", split($"text", " ")).as("sig"),
         count(lit(1)).as("n_docs"))
       .select($"source", $"sig"(0).as("c0"), $"sig"(1).as("c1"),
         $"sig"(2).as("c2"), $"sig"(3).as("c3"), $"n_docs")
@@ -482,9 +480,8 @@ object TextOps {
     * corpus-linear where a pair-based formulation is quadratic. */
   def textDupRatio(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sh = documents(s, d)
-      .select($"doc_id", explode(expr("word_shingles(split(text, ' '))")).as("g"))
+      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
     val gDocs = sh.groupBy($"g").agg(count(lit(1)).as("n_docs"))
     sh.join(gDocs, "g")
       .groupBy($"doc_id")
@@ -556,18 +553,6 @@ object TextOps {
     * discipline applied to tokenizer training. */
   val BpeMerges = 4
 
-  /** Effective merge depth: the library knob `spark.graft.bpeMerges`,
-    * default [[BpeMerges]]. The REGISTERED oracles replay the default
-    * depth (their CTE chains are unrolled at class-init), so the
-    * driver contract always runs at [[BpeMerges]]; the conf is the
-    * library-API dial — a caller training a deeper tokenizer sets it
-    * and gets the same fit loop, spec-tested at non-default depths. */
-  private[operators] def bpeDepth(s: SparkSession): Int = {
-    val n = s.conf.get("spark.graft.bpeMerges", BpeMerges.toString).toInt
-    require(n >= 1, s"spark.graft.bpeMerges must be >= 1, got $n")
-    n
-  }
-
   /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the full
     * iterative loop [[textBpePairs]] is the inner step of, run to
     * [[BpeMerges]] merges and emitting the learned merge table (rank,
@@ -603,10 +588,12 @@ object TextOps {
     * vocabulary frame (returned CACHED — callers unpersist). One
     * implementation under [[textBpeTrain]] (emits the merges) and
     * [[textBpeEncode]] (applies the vocabulary), so trainer and
-    * encoder can never disagree. */
-  private def bpeFit(s: SparkSession, d: String)
+    * encoder can never disagree. The registered queries and their
+    * oracles run [[BpeMerges]] rounds; the specs pass other depths. */
+  private[graft] def bpeFit(s: SparkSession, d: String, depth: Int = BpeMerges)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
     import s.implicits._
+    require(depth >= 1, s"BPE merge depth must be >= 1, got $depth")
     // backslashes must be doubled BEFORE quote-doubling: the merge
     // symbols are spliced into Spark SQL string literals, where '\'
     // is the escape character (ADVICE r15)
@@ -623,7 +610,6 @@ object TextOps {
       .withColumn("syms", expr("regexp_extract_all(word, '.', 0)"))
       .cache()
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    val depth = bpeDepth(s)
     var r = 0
     var exhausted = false
     // the cached parent of the CURRENT vocab, released only after the
@@ -836,18 +822,6 @@ object TextOps {
     * keeping the unrolled oracle replay tractable. */
   val UniRounds = 2
 
-  /** Effective EM depth: the library knob `spark.graft.uniRounds`,
-    * default [[UniRounds]] — the [[bpeDepth]] contract applied to the
-    * unigram trainer. The REGISTERED oracles replay the default depth
-    * (their CTE chains unroll at class-init), so the driver contract
-    * always runs at [[UniRounds]]; the conf is the library-API dial
-    * for deeper fits, spec-tested at non-default depths. */
-  private[operators] def uniDepth(s: SparkSession): Int = {
-    val n = s.conf.get("spark.graft.uniRounds", UniRounds.toString).toInt
-    require(n >= 1, s"spark.graft.uniRounds must be >= 1, got $n")
-    n
-  }
-
   /** Cost of the unknown-character fallback piece in milli-log2 units:
     * strictly above any reachable real piece cost (≤ 1000·log2(T) <
     * 63000 for any int64 total), so the fallback decides a segmentation
@@ -944,10 +918,12 @@ object TextOps {
     * cnt), its scores, and the cached dictionary (caller unpersists).
     * Per-round work is dictionary-sized: one map-side fold pass + one
     * vocab-sized usage aggregate; the model itself is a driver scalar
-    * artifact, never a join input. */
-  private def uniFit(s: SparkSession, d: String)
+    * artifact, never a join input. The registered queries and their
+    * oracles run [[UniRounds]] rounds; the specs pass other depths. */
+  private[graft] def uniFit(s: SparkSession, d: String, rounds: Int = UniRounds)
       : (Seq[(String, Long)], Map[String, Long], DataFrame) = {
     import s.implicits._
+    require(rounds >= 1, s"unigram EM depth must be >= 1, got $rounds")
     val dict = uniDict(s, d).cache()
     val seeds = dict.select($"cnt", explode(expr(
         s"""flatten(transform(sequence(1, length(word)), st ->
@@ -972,7 +948,7 @@ object TextOps {
       md.map { case (p, c) => p -> (log2mLong(t) - log2mLong(c)) }.toMap
     }
     var sc = scoresOf(model)
-    for (_ <- 1 to uniDepth(s)) {
+    for (_ <- 1 to rounds) {
       val usage = dict.withColumn("seg", uniViterbi(sc))
         .select($"cnt", explode(split($"seg".getField("path"), " ")).as("piece"))
         .groupBy($"piece").agg(sum($"cnt").as("u"))
@@ -1680,9 +1656,8 @@ object TextOps {
     * stream). */
   def textEvalOverlap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sh = documents(s, d)
-      .select($"doc_id", explode(expr("word_shingles(split(text, ' '), 5)")).as("g"))
+      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
     val train = sh.filter($"doc_id" % 50 =!= 0)
       .select($"g").distinct().withColumn("hit", lit(1L))
     sh.filter($"doc_id" % 50 === 0)
@@ -1720,9 +1695,8 @@ object TextOps {
     * anywhere, same family as [[textDupRatio]]. */
   def textNgramNovelty(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sh = documents(s, d)
-      .select($"doc_id", explode(expr("word_shingles(split(text, ' '))")).as("g"))
+      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
     val firstSeen = sh.groupBy($"g").agg(min($"doc_id").as("first_doc"))
     sh.join(firstSeen, "g")
       .groupBy($"doc_id")

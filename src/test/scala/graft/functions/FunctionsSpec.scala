@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class FunctionsSpec extends SparkSpec {
 
   test("cosine_sim matches hand-computed values on float and double arrays") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f), 1.0),
@@ -24,7 +23,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_shingles width parameter produces n-grams with dedup and short-input guard") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("a b c d e f", "a b c d", "x y").toDF("text")
       .select(expr("word_shingles(split(text,' '), 5)").as("g"))
@@ -36,7 +34,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("hyperplane_sig band keys match the composable per-plane construction") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .filter($"vec_id" < 5)
@@ -67,7 +64,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("hyperplane_sig rejects null embedding elements with a descriptive error") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(Tuple1(Seq[java.lang.Double](1.0, null, 3.0))).toDF("v")
     val ex = intercept[Exception] {
@@ -80,7 +76,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash_agg over rows equals scalar simhash of concatenated tokens") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(("g1", "the quick brown"), ("g1", "fox jumps high"),
       ("g2", "completely other words"))
@@ -96,7 +91,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("minhash_md5 equals the 16-pass transform/md5 SQL formulation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq("a b c", "b c d", "c d e")),
@@ -115,7 +109,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_shingles equals the transform/array_distinct SQL formulation") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       "the quick brown fox jumps",
@@ -133,7 +126,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash_md5 matches the documented hex-nibble bit contract") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // independent reimplementation of the Md5Bits contract from the
     // scaladoc formula (hex-string indexing, not byte twiddling)
@@ -158,7 +150,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash_md5_agg over rows equals scalar simhash_md5 of concatenated tokens") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // repartition(7) forces multiple partial buffers → exercises the
     // serialize/deserialize/merge path of the TypedImperativeAggregate
@@ -176,7 +167,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bloom_might_contain: no false negatives, codegen path, literal required") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     val keys = (0 until 100).map(i => s"key_$i")
@@ -202,7 +192,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("triple_in is SQL-callable, compares whole terms and requires a literal delta") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import graft.rdf.{RdfTerm, Triple}
     val iri = Triple(RdfTerm.named("a"), RdfTerm.named("p"), RdfTerm.named("b"))
@@ -215,7 +204,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("sq_dist and bucket_counts generate code bit-identical to interpreted eval") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -301,7 +289,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("dedup/LSH kernels generate code bit-identical to interpreted eval") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback

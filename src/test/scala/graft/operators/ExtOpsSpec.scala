@@ -163,6 +163,23 @@ class ExtOpsSpec extends SparkSpec {
     sm.unpersist()
   }
 
+  test("ivf quantizer memo follows a corpus rewritten in place") {
+    import spark.implicits._
+    tempIndexRoot("ivf_memo")
+    val dir = tempDir("ivf_corpus")
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    def rows(cs: Array[Array[Double]]) = cs.map(_.toSeq).toSeq
+    val before = rows(IvfKmeans.centroids(spark, dir))
+    emb.withColumn("embedding", transform($"embedding", x => x * lit(3.0f)))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val after = rows(IvfKmeans.centroids(spark, dir))
+    val fresh = rows(IvfKmeans.fitOn(spark,
+      IvfKmeans.withV(spark, dir).select($"vec_id", $"v"), IvfKmeans.K))
+    assert(after != before, "the memo returned the old corpus's centroids")
+    assert(after == fresh)
+  }
+
   test("anomaly flags: exactly floor(n/100) per type, all at or above the unflagged max") {
     import spark.implicits._
     val ev = graft.Tables.events(spark, sf0001).cache()

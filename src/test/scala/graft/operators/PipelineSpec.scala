@@ -1,14 +1,12 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
   import org.apache.spark.sql.Row
 
   test("simhash: deterministic, near-dup sensitive, disjoint-insensitive") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),

@@ -28,30 +28,26 @@ class Round16OpsSpec extends SparkSpec {
       2L -> ((2L, 2L)), 3L -> ((2L, 2L))))
   }
 
-  test("bpe depth is the spark.graft.bpeMerges conf (default BpeMerges)") {
+  test("bpe depth is bpeFit's parameter (default BpeMerges)") {
     import spark.implicits._
     val dir = tempDir("bpe_depth")
     // long uniform words so every depth finds a best pair to merge
     Seq((0L, "aaaaaaaa bbbbbbbb aaaaaaaa"), (1L, "aaaaaaaa cccc"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def merges(depth: Int) = {
+      val (m, vocab) = TextOps.bpeFit(spark, dir, depth)
+      vocab.unpersist()
+      m.map(r => (r._1, r._4))
+    }
     def ranks() = TextOps.textBpeTrain(spark, dir).collect().map(_.getLong(0)).toSeq
     assert(ranks() == (1L to TextOps.BpeMerges)) // default depth
-    spark.conf.set("spark.graft.bpeMerges", "2")
-    try assert(ranks() == Seq(1L, 2L))
-    finally spark.conf.unset("spark.graft.bpeMerges")
-    spark.conf.set("spark.graft.bpeMerges", "6")
-    try {
-      val r6 = ranks()
-      assert(r6 == (1L to 6L))
-      // deeper fit must extend, not alter, the shallower merge list
-      val m6 = TextOps.textBpeTrain(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(3)))
-      spark.conf.set("spark.graft.bpeMerges", "2")
-      val m2 = TextOps.textBpeTrain(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(3)))
-      assert(m6.take(2).toSeq == m2.toSeq)
-    } finally spark.conf.unset("spark.graft.bpeMerges")
+    assert(merges(2).map(_._1) == Seq(1L, 2L))
+    val m6 = merges(6)
+    assert(m6.map(_._1) == (1L to 6L))
+    // deeper fit must extend, not alter, the shallower merge list
+    assert(m6.take(2) == merges(2))
+    intercept[IllegalArgumentException](merges(0))
   }
 
   test("rag streaming serve: serve log equals the batch retrieval exactly") {
@@ -72,41 +68,37 @@ class Round16OpsSpec extends SparkSpec {
   test("compact sink: per-partition files drop to ceil(rows/target), content intact") {
     import scala.jdk.CollectionConverters._
     val root = tempIndexRoot("compact_pin")
-    spark.conf.set("spark.graft.compactMaxRows", "3")
-    try {
-      val out = CurationOps.docCompactSink(spark, sf0001)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def filesPerSource(dir: String): Map[String, Int] = {
-        val base = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.walk(base).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p)
-            && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => base.relativize(p).toString.split("/")(0))
-          .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
-      }
-      def dirOf(prefix: String) =
-        java.nio.file.Files.list(java.nio.file.Paths.get(root)).iterator().asScala
-          .find(_.getFileName.toString.startsWith(prefix)).get.toString
-      val compact = filesPerSource(dirOf("docs_compact_"))
-      assert(out.nonEmpty)
-      // the compacted layout hits the ceil(rows/target) bound exactly
-      out.foreach { case (src, n) =>
-        assert(compact(s"source=$src") == ((n + 2) / 3).toInt,
-          s"$src: ${compact(s"source=$src")} files for $n rows @ target 3")
-      }
-      // at the DEFAULT (production-sized) target every partition
-      // collapses to one file — strictly fewer than the fragmented
-      // append layout, which is the point of the op
-      spark.conf.unset("spark.graft.compactMaxRows")
-      val out1 = CurationOps.docCompactSink(spark, sf0001)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val frag1 = filesPerSource(dirOf("docs_frag_"))
-      val compact1 = filesPerSource(dirOf("docs_compact_"))
-      out1.keys.foreach { src =>
-        assert(compact1(s"source=$src") == 1, s"$src: expected 1 compacted file")
-      }
-      assert(frag1.values.sum > compact1.values.sum, "compaction freed no files")
-    } finally spark.conf.unset("spark.graft.compactMaxRows")
+    val out = CurationOps.docCompactSink(spark, sf0001, 3L)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def filesPerSource(dir: String): Map[String, Int] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)
+          && p.getFileName.toString.endsWith(".parquet"))
+        .map(p => base.relativize(p).toString.split("/")(0))
+        .toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+    def dirOf(prefix: String) =
+      java.nio.file.Files.list(java.nio.file.Paths.get(root)).iterator().asScala
+        .find(_.getFileName.toString.startsWith(prefix)).get.toString
+    val compact = filesPerSource(dirOf("docs_compact_"))
+    assert(out.nonEmpty)
+    // the compacted layout hits the ceil(rows/target) bound exactly
+    out.foreach { case (src, n) =>
+      assert(compact(s"source=$src") == ((n + 2) / 3).toInt,
+        s"$src: ${compact(s"source=$src")} files for $n rows @ target 3")
+    }
+    // at the DEFAULT (production-sized) target every partition
+    // collapses to one file — strictly fewer than the fragmented
+    // append layout, which is the point of the op
+    val out1 = CurationOps.docCompactSink(spark, sf0001)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val frag1 = filesPerSource(dirOf("docs_frag_"))
+    val compact1 = filesPerSource(dirOf("docs_compact_"))
+    out1.keys.foreach { src =>
+      assert(compact1(s"source=$src") == 1, s"$src: expected 1 compacted file")
+    }
+    assert(frag1.values.sum > compact1.values.sum, "compaction freed no files")
   }
 
   test("rag index append: appended index covers every chunk exactly once") {

@@ -128,7 +128,7 @@ class Round18OpsSpec extends SparkSpec {
     assert(tr2.toSeq == tr.toSeq, "unigram fit must be deterministic")
   }
 
-  test("unigram EM depth is the spark.graft.uniRounds conf (default UniRounds)") {
+  test("unigram EM depth is uniFit's parameter (default UniRounds)") {
     import spark.implicits._
     val dir = tempDir("uni_depth")
     Seq((0L, "abab abab baba"), (1L, "abab cccc abab"))
@@ -136,25 +136,25 @@ class Round18OpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def fit() = TextOps.textUnigramTrain(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(2), r.getLong(3)))
+    def fitAt(depth: Int) = {
+      val (model, sc, dict) = TextOps.uniFit(spark, dir, depth)
+      dict.unpersist()
+      model.map { case (p, c) => (p, c, sc(p)) }
+    }
     val deflt = fit()
     assert(deflt.nonEmpty)
-    for (depth <- Seq("1", "4")) {
-      spark.conf.set("spark.graft.uniRounds", depth)
-      try {
-        val d = fit()
-        // invariants hold at every depth: unique pieces, positive
-        // counts, all single chars covered
-        assert(d.map(_._1).distinct.length == d.length)
-        assert(d.forall(t => t._2 >= 1 && t._3 >= 0))
-        for (c <- Seq("a", "b", "c")) assert(d.exists(_._1 == c), s"lost char $c")
-      } finally spark.conf.unset("spark.graft.uniRounds")
+    for (depth <- Seq(1, 4)) {
+      val d = fitAt(depth)
+      // invariants hold at every depth: unique pieces, positive
+      // counts, all single chars covered
+      assert(d.map(_._1).distinct.length == d.length)
+      assert(d.forall(t => t._2 >= 1 && t._3 >= 0))
+      for (c <- Seq("a", "b", "c")) assert(d.exists(_._1 == c), s"lost char $c")
     }
-    // unset must restore the registered default exactly
+    // the registered query still fits the default depth exactly
+    assert(fitAt(TextOps.UniRounds).toSet == deflt.toSet)
     assert(fit().toSeq == deflt.toSeq)
-    spark.conf.set("spark.graft.uniRounds", "0")
-    try {
-      intercept[IllegalArgumentException](fit())
-    } finally spark.conf.unset("spark.graft.uniRounds")
+    intercept[IllegalArgumentException](fitAt(0))
   }
 
   test("streamed unigram encode equals the batch encoder exactly") {

@@ -92,26 +92,6 @@ class RdfXmlParserSpec extends SparkSpec {
     assert(n > 100000, s"expected >100k triples from the corpus, got $n")
   }
 
-  test("GraftExtensions injects native functions at session build time") {
-    import org.apache.spark.sql.SparkSession
-    val prev = spark // ensure shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) c, " +
-        "simhash(array('a','b')) s").head()
-      assert(r.getDouble(0) == 1.0)
-      assert(r.getLong(1) != 0L)
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
-  }
-
   test("xml:base resolves relative IRIs with inheritance") {
     val xml =
       """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"

@@ -10,7 +10,11 @@ Spark's log lines may stay in). Each query's section starts at its
 sessions is normalized away: expression ids (`#123`), `plan_id=123`,
 RDD ids and their call sites' line numbers (`MapPartitionsRDD[580] at
 localCheckpoint at Fixpoint.scala:31`), the uuids of part files a
-query wrote, and closure identities (`$Lambda$5719/0x…@6db0f5fb`).
+query wrote, closure identities (`$Lambda$5719/0x…@6db0f5fb`), and
+lambda variables, which are renamed `v1`, `v2`, … in order of first
+appearance within each plan (the Column API names them `x_<counter>`,
+SQL keeps the written name, so the same lambda built either way, or
+built after a different number of others, prints differently).
 Prints one line per query: `same`, `only in A`/`only in B`, or the
 first differing lines of the two plans. Exits 1 when any query differs.
 """
@@ -31,11 +35,23 @@ NORMALIZE = [
     # closures print their JVM class and identity hash
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
 ]
+# one lambda variable is its name and expression id together: two
+# lambdas may share a written name, never an id
+LAMBDA_VAR = re.compile(r"lambda (\w+)(#\d+)")
+
+
+def rename_lambdas(line, seen):
+    """`lambda <name>#<id>` -> `lambda v<k>#<id>`, k numbering the
+    variables of one plan in order of first appearance (`seen`)"""
+    def sub(m):
+        k = seen.setdefault(m.group(1) + m.group(2), len(seen) + 1)
+        return f"lambda v{k}{m.group(2)}"
+    return LAMBDA_VAR.sub(sub, line)
 
 
 def sections(path):
     """query name -> normalized plan lines, in file order"""
-    out, cur = {}, None
+    out, cur, seen = {}, None, {}
     with open(path, encoding="utf-8", errors="replace") as f:
         for raw in f:
             line = PREFIX.sub("", raw.rstrip("\n"))
@@ -43,9 +59,10 @@ def sections(path):
                 continue
             m = HEADER.match(line)
             if m:
-                cur = out.setdefault(m.group(1), [])
+                cur, seen = out.setdefault(m.group(1), []), {}
                 continue
             if cur is not None:
+                line = rename_lambdas(line, seen)
                 for rx, rep in NORMALIZE:
                     line = rx.sub(rep, line)
                 cur.append(line)
