@@ -66,6 +66,7 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftFunctions.natives.foreach { f =>
-    e.injectFunction((FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build))
+    e.injectFunction(
+      (FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build))
   }
 }

@@ -449,9 +449,11 @@ object CurationOps {
       .drop("canonical")
     // 4. decontaminate (benchmark shingle index over the FULL corpus)
     val benchG = docs.filter($"doc_id" % 50 === 0)
-      .select(explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g")).distinct()
+      .select(explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
+      .distinct()
     val dirty = nearKept
-      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
+      .select($"doc_id",
+        explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
       .join(broadcast(benchG), "g")
       .select($"doc_id").distinct()
     val clean = nearKept.filter($"doc_id" % 50 =!= 0)

@@ -622,7 +622,8 @@ object DedupOps {
     import s.implicits._
     val banded = embeddings(s, d)
       .select($"vec_id", $"embedding",
-        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4))).as(Seq("band", "key")))
+        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4)))
+          .as(Seq("band", "key")))
     val a = banded.toDF("i", "va", "band", "key")
     val b = banded.toDF("j", "vb", "band", "key")
     // cosine runs once per colliding band — bounded ×8 duplication,
@@ -831,7 +832,8 @@ object DedupOps {
     // family's hottest per-doc kernel serially (identity once the input
     // fills the cluster, so no shuffle is added at scale)
     val g = Sizing.spread(docs)
-      .select($"doc_id", GraftFunctions.column("word_shingles", split($"text", " ")).as("gs"))
+      .select($"doc_id",
+        GraftFunctions.column("word_shingles", split($"text", " ")).as("gs"))
       .filter(size($"gs") > 0)
     val sig = withMinhash(g)
     val bands = sig.select($"doc_id", posexplode(array(

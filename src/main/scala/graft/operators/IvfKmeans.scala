@@ -152,7 +152,8 @@ object IvfKmeans {
     * interpreted aggregate(zip_with(…)) lambda dominated the corpus×k
     * assignment scan once the chunk index grew to sf0.1 size). */
   def withDists(e: DataFrame, cdf: DataFrame): DataFrame = {
-    e.crossJoin(broadcast(cdf)).withColumn("dist", GraftFunctions.column("sq_dist", col("v"), col("c")))
+    e.crossJoin(broadcast(cdf))
+      .withColumn("dist", GraftFunctions.column("sq_dist", col("v"), col("c")))
   }
 
   /** (vec_id, list_id): nearest centroid, ties to the lowest list id.

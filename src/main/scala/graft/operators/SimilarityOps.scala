@@ -64,7 +64,8 @@ object SimilarityOps {
     import s.implicits._
     val banded = embeddings(s, d)
       .select($"vec_id",
-        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4))).as(Seq("band", "key")))
+        posexplode(GraftFunctions.column("hyperplane_sig", $"embedding", lit(16), lit(4)))
+          .as(Seq("band", "key")))
     val dup = banded.filter($"vec_id" < 5).toDF("qid", "band", "key")
       .join(banded.toDF("nid", "band", "key"), Seq("band", "key"))
       .filter($"qid" =!= $"nid")

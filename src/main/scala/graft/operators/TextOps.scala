@@ -481,7 +481,8 @@ object TextOps {
   def textDupRatio(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sh = documents(s, d)
-      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
+      .select($"doc_id",
+        explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
     val gDocs = sh.groupBy($"g").agg(count(lit(1)).as("n_docs"))
     sh.join(gDocs, "g")
       .groupBy($"doc_id")
@@ -1657,7 +1658,8 @@ object TextOps {
   def textEvalOverlap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sh = documents(s, d)
-      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
+      .select($"doc_id",
+        explode(GraftFunctions.column("word_shingles", split($"text", " "), lit(5))).as("g"))
     val train = sh.filter($"doc_id" % 50 =!= 0)
       .select($"g").distinct().withColumn("hit", lit(1L))
     sh.filter($"doc_id" % 50 === 0)
@@ -1696,7 +1698,8 @@ object TextOps {
   def textNgramNovelty(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sh = documents(s, d)
-      .select($"doc_id", explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
+      .select($"doc_id",
+        explode(GraftFunctions.column("word_shingles", split($"text", " "))).as("g"))
     val firstSeen = sh.groupBy($"g").agg(min($"doc_id").as("first_doc"))
     sh.join(firstSeen, "g")
       .groupBy($"doc_id")

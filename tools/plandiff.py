@@ -10,11 +10,12 @@ Spark's log lines may stay in). Each query's section starts at its
 sessions is normalized away: expression ids (`#123`), `plan_id=123`,
 RDD ids and their call sites' line numbers (`MapPartitionsRDD[580] at
 localCheckpoint at Fixpoint.scala:31`), the uuids of part files a
-query wrote, closure identities (`$Lambda$5719/0x…@6db0f5fb`), and
-lambda variables, which are renamed `v1`, `v2`, … in order of first
-appearance within each plan (the Column API names them `x_<counter>`,
-SQL keeps the written name, so the same lambda built either way, or
-built after a different number of others, prints differently).
+query wrote, the checkout's `spark-warehouse` path, closure
+identities (`$Lambda$5719/0x…@6db0f5fb`), and lambda variables. Those
+are renamed `v1`, `v2`, … in order of first appearance within each
+plan: the Column API names them `x_<counter>` while SQL keeps the
+written name, so the same lambda built either way, or after a
+different number of others, would print differently.
 Prints one line per query: `same`, `only in A`/`only in B`, or the
 first differing lines of the two plans. Exits 1 when any query differs.
 """
@@ -32,6 +33,8 @@ NORMALIZE = [
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     # files a query wrote in its own session carry a fresh uuid
     (re.compile(r"part-(\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), r"part-\1-UUID"),
+    # managed tables live under the checkout's own spark-warehouse
+    (re.compile(r"file:\S*/spark-warehouse/"), "file:WAREHOUSE/"),
     # closures print their JVM class and identity hash
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
 ]
