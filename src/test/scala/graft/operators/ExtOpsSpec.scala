@@ -176,8 +176,11 @@ class ExtOpsSpec extends SparkSpec {
     val after = rows(IvfKmeans.centroids(spark, dir))
     val fresh = rows(IvfKmeans.fitOn(spark,
       IvfKmeans.withV(spark, dir).select($"vec_id", $"v"), IvfKmeans.K))
-    assert(after != before, "the memo returned the old corpus's centroids")
-    assert(after == fresh)
+    // compared as booleans: a failure would otherwise print 16×64 doubles
+    val stale = after == before
+    assert(!stale, "the memo returned the old corpus's centroids")
+    val refit = after == fresh
+    assert(refit, "the centroids are not a fresh fit of the rewritten corpus")
   }
 
   test("anomaly flags: exactly floor(n/100) per type, all at or above the unflagged max") {
